@@ -6,12 +6,14 @@ three deliberate improvements over the reference:
  1. **Explicit caching.**  The reference recomputed the full
     CSV→join→scale lineage for every fit/evaluate across all k
     (SURVEY.md §3) — at 100 TB that is k× the whole pipeline cost.  Here the
-    scaled input is cached once and unpersisted at the end.
- 2. **Optional parallel k.**  Each fit is a driver-coordinated iterative
-    job; independent k values can share the cluster via concurrent
-    scheduler pools (threads on the driver).  Off by default — at real
-    scale a single fit saturates the cluster, so sequential is usually
-    right; parallelism pays when k is large and the data is modest.
+    scaled input is cached once (or the caller's cache is reused) and the
+    scan's own cache is unpersisted at the end.
+ 2. **Concurrent k fits.**  The reference fit k = 2..6 one after another.
+    Each MLlib iteration is a small driver-coordinated job whose cost is
+    mostly scheduling latency, so one fit at a time leaves most cores idle.
+    Here the k values are fitted, scored and saved concurrently from a
+    pool of driver threads, all reading the one cached input; each fit is
+    seeded, so centers and silhouettes equal the sequential scan's.
  3. **Results as a DataFrame** extending the reference's
     ``clustering_results.csv`` layout: the reference writes header
     ['k','score',*features] (one row per (k, center) —
@@ -25,9 +27,10 @@ three deliberate improvements over the reference:
 from __future__ import annotations
 
 import os
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 
+from pyspark import inheritable_thread_target
 from pyspark.ml.clustering import KMeans, KMeansModel
 from pyspark.ml.evaluation import ClusteringEvaluator
 from pyspark.sql import DataFrame, SparkSession
@@ -89,14 +92,27 @@ def kmeans_scan(
     seed: int = 1,
     features_col: str = FEATURES_COL,
     models_dir: str | None = None,
-    cache: bool = True,
-    parallelism: int = 1,
 ) -> KScanResult:
     """M7: scan k in [k_min, k_max], returning centers + silhouette per k.
 
-    Unlike the reference, the input is cached across fits and the tmp dir is
-    NOT wiped (the reference rm-rf'ed it — utils/kmeans_utils.py:95-98; we
-    treat model paths as immutable artifacts and use overwrite()).
+    Fit, silhouette and model save of every k run concurrently on
+    ``min(#k, defaultParallelism)`` driver threads.  Each thread inherits
+    the caller's Spark local properties, so the scan's jobs stay in the
+    caller's job group (tagging, ``cancelJobGroup``).
+
+    All fits read one cache of ``data``.  The scan persists ``data`` only
+    if it is not persisted already, and unpersists only what it persisted;
+    a caller's cache is left as it was.  No eager action fills the cache
+    before the fan-out: the block manager's per-block write lock makes
+    concurrent jobs wait for, not recompute, a partition being cached.
+
+    If a k fails, fits not yet started are cancelled, the running ones
+    finish, the cache is released, and the error of the smallest failing k
+    is re-raised.
+
+    Unlike the reference, the tmp dir is NOT wiped (the reference rm-rf'ed
+    it — utils/kmeans_utils.py:95-98; we treat model paths as immutable
+    artifacts and use overwrite()).
     """
     if k_min < 2 or k_max < k_min:
         # Fail HERE, not as best_k()'s bare max()-of-empty after the whole
@@ -105,11 +121,11 @@ def kmeans_scan(
             f"kmeans_scan: invalid k range [{k_min}, {k_max}] — need "
             "2 <= k_min <= k_max"
         )
-    if cache:
-        data = data.persist(StorageLevel.MEMORY_AND_DISK)
-    result = KScanResult()
+    owns_cache = data.storageLevel == StorageLevel.NONE
+    if owns_cache:
+        data.persist(StorageLevel.MEMORY_AND_DISK)
 
-    def one_k(k: int) -> tuple[int, list, float, str | None]:
+    def one_k(k: int) -> tuple[list, float, str | None]:
         model = fit_kmeans(data, k, seed=seed, features_col=features_col)
         score = silhouette_score(model, data, features_col=features_col)
         centers = [c.tolist() for c in model.clusterCenters()]
@@ -117,20 +133,29 @@ def kmeans_scan(
         if models_dir is not None:
             path = os.path.join(models_dir, f"model_w_k_{k}")
             model.write().overwrite().save(path)
-        return k, centers, score, path
+        return centers, score, path
 
     ks = list(range(k_min, k_max + 1))
+    spark = data.sparkSession
+    pool = ThreadPoolExecutor(
+        max_workers=min(len(ks), spark.sparkContext.defaultParallelism)
+    )
     try:
-        if parallelism > 1:
-            with ThreadPoolExecutor(max_workers=parallelism) as ex:
-                outs = list(ex.map(one_k, ks))
-        else:
-            outs = [one_k(k) for k in ks]
+        # One wrapper per k: each wrapper holds its own copy of the caller's
+        # local properties, so a job group one k's thread sets (a tracer's,
+        # say) does not leak into the others.
+        futures = {
+            k: pool.submit(inheritable_thread_target(spark)(one_k), k) for k in ks
+        }
+        wait(futures.values(), return_when=FIRST_EXCEPTION)
     finally:
-        if cache:
+        pool.shutdown(wait=True, cancel_futures=True)
+        if owns_cache:
             data.unpersist()
 
-    for k, centers, score, path in outs:
+    result = KScanResult()
+    for k, fut in futures.items():
+        centers, score, path = fut.result()
         result.centers[k] = centers
         result.silhouette[k] = score
         if path is not None:
