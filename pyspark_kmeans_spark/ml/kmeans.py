@@ -3,16 +3,18 @@
 Reference parity (SURVEY.md §2.9 M3-M7, utils/kmeans_utils.py:80-109) with
 three deliberate improvements over the reference:
 
- 1. **Explicit caching.**  The reference recomputed the full
+ 1. **One checkpoint of the input.**  The reference recomputed the full
     CSV→join→scale lineage for every fit/evaluate across all k
     (SURVEY.md §3) — at 100 TB that is k× the whole pipeline cost.  Here the
-    scaled input is cached once (or the caller's cache is reused) and the
-    scan's own cache is unpersisted at the end.
+    scaled input is computed once into a local checkpoint that every fit,
+    silhouette and model save reads, and released at the end.  The
+    checkpoint is an unpersisted frame with a truncated lineage, so MLlib
+    caches its own vectors for each fit and task closures stay small.
  2. **Concurrent k fits.**  The reference fit k = 2..6 one after another.
     Each MLlib iteration is a small driver-coordinated job whose cost is
     mostly scheduling latency, so one fit at a time leaves most cores idle.
     Here the k values are fitted, scored and saved concurrently from a
-    pool of driver threads, all reading the one cached input; each fit is
+    pool of driver threads, all reading the one checkpoint; each fit is
     seeded, so centers and silhouettes equal the sequential scan's.
  3. **Results as a DataFrame** extending the reference's
     ``clustering_results.csv`` layout: the reference writes header
@@ -100,15 +102,26 @@ def kmeans_scan(
     the caller's Spark local properties, so the scan's jobs stay in the
     caller's job group (tagging, ``cancelJobGroup``).
 
-    All fits read one cache of ``data``.  The scan persists ``data`` only
-    if it is not persisted already, and unpersists only what it persisted;
-    a caller's cache is left as it was.  No eager action fills the cache
-    before the fan-out: the block manager's per-block write lock makes
-    concurrent jobs wait for, not recompute, a partition being cached.
+    All fits, silhouettes and model saves read one local checkpoint of
+    ``data``, filled before the fan-out.  Its plan is a ``LogicalRDD``
+    with a truncated lineage and no persisted frame behind it, so
+    ``KMeans.fit`` caches its own ``VectorWithNorm`` RDD (it does so only
+    when ``dataset.storageLevel`` is ``NONE``) and every Lloyd step reads
+    those vectors instead of re-decoding a columnar cache, with small task
+    closures.  The trade-off is memory: besides the checkpoint, MLlib holds
+    one vector cache per running fit, up to ``min(#k, defaultParallelism)``.
+
+    The checkpoint is taken from a persisted frame: the scan persists
+    ``data`` only if it is not persisted already, and unpersists what it
+    persisted as soon as the checkpoint exists, also when that fails; a
+    caller's cache is left as it was.  Taken straight from an unpersisted
+    frame, adaptive execution may coalesce the checkpoint into fewer
+    partitions, and k-means|| initialisation, which samples per partition,
+    then picks other centers than a fit of the cached frame.
 
     If a k fails, fits not yet started are cancelled, the running ones
-    finish, the cache is released, and the error of the smallest failing k
-    is re-raised.
+    finish, the checkpoint is released, and the error of the smallest
+    failing k is re-raised.
 
     Unlike the reference, the tmp dir is NOT wiped (the reference rm-rf'ed
     it — utils/kmeans_utils.py:95-98; we treat model paths as immutable
@@ -122,12 +135,28 @@ def kmeans_scan(
             "2 <= k_min <= k_max"
         )
     owns_cache = data.storageLevel == StorageLevel.NONE
-    if owns_cache:
-        data.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        if owns_cache:
+            data.persist(StorageLevel.MEMORY_AND_DISK)
+        # Lazy, then filled by one count on its own RDD: if that job fails
+        # the RDD is still in hand to release (an eager checkpoint that
+        # fails leaves its persisted RDD registered and unreachable).
+        checkpoint = data.localCheckpoint(
+            eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK
+        )
+        checkpoint_rdd = checkpoint._jdf.queryExecution().analyzed().rdd()
+        try:
+            checkpoint_rdd.count()
+        except BaseException:
+            checkpoint_rdd.unpersist(True)
+            raise
+    finally:
+        if owns_cache:
+            data.unpersist()
 
     def one_k(k: int) -> tuple[list, float, str | None]:
-        model = fit_kmeans(data, k, seed=seed, features_col=features_col)
-        score = silhouette_score(model, data, features_col=features_col)
+        model = fit_kmeans(checkpoint, k, seed=seed, features_col=features_col)
+        score = silhouette_score(model, checkpoint, features_col=features_col)
         centers = [c.tolist() for c in model.clusterCenters()]
         path = None
         if models_dir is not None:
@@ -150,8 +179,7 @@ def kmeans_scan(
         wait(futures.values(), return_when=FIRST_EXCEPTION)
     finally:
         pool.shutdown(wait=True, cancel_futures=True)
-        if owns_cache:
-            data.unpersist()
+        checkpoint_rdd.unpersist(True)
 
     result = KScanResult()
     for k, fut in futures.items():

@@ -17,7 +17,7 @@ from __future__ import annotations
 import traceback
 from dataclasses import dataclass, field
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from pyspark_kmeans_spark import reporting
 from pyspark_kmeans_spark.ml.features import prepare_features
@@ -52,6 +52,29 @@ class PipelineConfig:
     feature_cols: list[str] = field(default_factory=lambda: list(COMPAT_FEATURES))
 
 
+def scaled_features(
+    spark: SparkSession, config: PipelineConfig
+) -> tuple[DataFrame, list[str]]:
+    """The five CSVs → joined feature table → scaled ``features`` column,
+    unpersisted, with the feature names the results are labelled by."""
+    d = config.data_dir
+    users = read_csv(spark, f"{d}/users.csv", USERS_SCHEMA)
+    buys = read_csv(spark, f"{d}/buy-clicks.csv", BUY_CLICKS_SCHEMA)
+    clicks = read_csv(spark, f"{d}/game-clicks.csv", GAME_CLICKS_SCHEMA)
+    sessions = read_csv(spark, f"{d}/user-session.csv", USER_SESSION_SCHEMA)
+    team = read_csv(spark, f"{d}/team.csv", TEAM_SCHEMA)
+
+    data, features = prepare_data(
+        users, buys, clicks, sessions, team, config.reference_date
+    )
+    if config.feature_cols:
+        features = config.feature_cols
+    scaled, _ = prepare_features(data, features, handle_invalid="skip")
+    if config.num_partitions > 0:
+        scaled = scaled.coalesce(config.num_partitions)  # X1 compat
+    return scaled, features
+
+
 def run(
     spark: SparkSession,
     config: PipelineConfig,
@@ -62,22 +85,7 @@ def run(
     """O1-O3.  Returns {'status', 'best_k', 'silhouette', 'report'} on
     success; sends a failure email and re-raises on error."""
     try:
-        d = config.data_dir
-        users = read_csv(spark, f"{d}/users.csv", USERS_SCHEMA)
-        buys = read_csv(spark, f"{d}/buy-clicks.csv", BUY_CLICKS_SCHEMA)
-        clicks = read_csv(spark, f"{d}/game-clicks.csv", GAME_CLICKS_SCHEMA)
-        sessions = read_csv(spark, f"{d}/user-session.csv", USER_SESSION_SCHEMA)
-        team = read_csv(spark, f"{d}/team.csv", TEAM_SCHEMA)
-
-        data, features = prepare_data(
-            users, buys, clicks, sessions, team, config.reference_date
-        )
-        if config.feature_cols:
-            features = config.feature_cols
-        scaled, _ = prepare_features(data, features, handle_invalid="skip")
-        if config.num_partitions > 0:
-            scaled = scaled.coalesce(config.num_partitions)  # X1 compat
-
+        scaled, features = scaled_features(spark, config)
         result = kmeans_scan(
             scaled,
             config.k_min,

@@ -1,3 +1,4 @@
+import csv
 import os
 import sys
 
@@ -20,3 +21,70 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF0001
+
+
+@pytest.fixture
+def no_cache_leak(spark):
+    """Fails the test if it leaves a persisted RDD or a cache-manager entry
+    behind that was not there when it started."""
+    sc = spark.sparkContext
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    rdds = set(sc._jsc.getPersistentRDDs().keySet())
+    entries = cache_manager.numCachedEntries()
+    yield
+    assert set(sc._jsc.getPersistentRDDs().keySet()) <= rdds
+    assert cache_manager.numCachedEntries() <= entries
+
+
+def _write_csv(path, header, rows):
+    with open(path, "w", newline="") as f:
+        w = csv.writer(f)
+        w.writerow(header)
+        w.writerows(rows)
+
+
+@pytest.fixture(scope="module")
+def data_dir(tmp_path_factory):
+    d = tmp_path_factory.mktemp("gamedata")
+    ts = "2016-01-01 00:00:00"
+    _write_csv(
+        d / "users.csv",
+        ["timestamp", "userId", "nick", "twitter", "dob", "country"],
+        [[ts, u, f"n{u}", f"@n{u}", f"19{70 + u % 20}-01-15", "US"] for u in range(40)],
+    )
+    _write_csv(
+        d / "buy-clicks.csv",
+        ["timestamp", "txId", "userSessionId", "team", "userId", "buyId", "price"],
+        [
+            [ts, i, 100 + u, 1, u, i % 6, float(1 + (u * 7 + i) % 20)]
+            for i, u in enumerate(u for u in range(40) for _ in range(3))
+        ],
+    )
+    _write_csv(
+        d / "game-clicks.csv",
+        ["timestamp", "clickId", "userId", "userSessionId", "isHit", "teamId", "teamLevel"],
+        [
+            [ts, i, u, 100 + u, (u + i) % 2, u % 5, 1]
+            for i, u in enumerate(u for u in range(40) for _ in range(5))
+        ],
+    )
+    _write_csv(
+        d / "user-session.csv",
+        [
+            "timestamp",
+            "userSessionId",
+            "userId",
+            "teamId",
+            "assignmentId",
+            "sessionType",
+            "platformType",
+            "teamLevel",
+        ],
+        [[ts, 100 + u, u, u % 5, 1, "start", "pc", 1] for u in range(35)],
+    )
+    _write_csv(
+        d / "team.csv",
+        ["teamId", "name", "teamCreationTime", "teamEndTime", "strength", "currentLevel"],
+        [[t, f"team{t}", ts, ts, float(10 * t + 5), 1] for t in range(5)],
+    )
+    return str(d)

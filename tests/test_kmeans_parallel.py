@@ -1,7 +1,8 @@
 """Concurrent k-scan: the scan fits its k values from a pool of driver
-threads on one shared cache.  Its results must equal a sequential per-k fit
-loop, its jobs must stay in the caller's job group, the cached input must be
-evaluated once, and a failing k must cancel the fits not yet started."""
+threads on one local checkpoint of its input.  Its results must equal a
+sequential per-k fit loop over a cache of the same frame, its jobs must stay
+in the caller's job group, the input must be evaluated once, a failing k must
+cancel the fits not yet started, and no cache may outlive the scan."""
 
 from __future__ import annotations
 
@@ -18,6 +19,7 @@ from pyspark_kmeans_spark.ml import kmeans
 from pyspark_kmeans_spark.ml.features import prepare_features
 from pyspark_kmeans_spark.ml.kmeans import fit_kmeans, kmeans_scan, silhouette_score
 from pyspark_kmeans_spark.ml.queries import FLAGSHIP_FEATURES, _flagship
+from pyspark_kmeans_spark.pipeline import PipelineConfig, scaled_features
 
 
 def _points(spark, n: int = 400):
@@ -70,7 +72,23 @@ def test_scan_jobs_stay_in_caller_group(spark, tmp_path):
     assert {j["jobId"] for j in new} <= in_group
 
 
-def test_input_evaluated_once(spark):
+def test_pipeline_frame_scan_equals_cached_loop(spark, data_dir):
+    """The unpersisted frame pipeline.run hands the scan: the scan's layout
+    of it must be the one a plain cache of that frame has."""
+    config = PipelineConfig(data_dir=data_dir, results_path="", models_dir="")
+    scaled, _ = scaled_features(spark, config)
+    scan = kmeans_scan(scaled, 2, 6, seed=1)
+    scaled.cache()
+    try:
+        for k in range(2, 7):
+            model = fit_kmeans(scaled, k, seed=1)
+            assert scan.centers[k] == [c.tolist() for c in model.clusterCenters()]
+            assert scan.silhouette[k] == silhouette_score(model, scaled)
+    finally:
+        scaled.unpersist()
+
+
+def test_input_evaluated_once(spark, no_cache_leak):
     acc = spark.sparkContext.accumulator(0)
 
     def bump(x):
@@ -86,15 +104,32 @@ def test_input_evaluated_once(spark):
     assert acc.value == 400
 
 
+def test_failed_checkpoint_releases_cache(spark, no_cache_leak):
+    def explode(x):
+        if x == 123:
+            raise ValueError("input row 123 is bad")
+        return float(x % 7)
+
+    data = spark.range(400).select(
+        array_to_vector(
+            F.array(F.udf(explode, "double")("id"), (F.col("id") % 11).cast("double"))
+        ).alias("features")
+    )
+    with pytest.raises(Exception, match="input row 123 is bad"):
+        kmeans_scan(data, 2, 6)
+    assert data.storageLevel == StorageLevel.NONE
+
+
 @pytest.mark.parametrize("caller_persisted", [False, True])
-def test_failed_k_cancels_pending_fits(spark, monkeypatch, caller_persisted):
+def test_failed_k_cancels_pending_fits(spark, monkeypatch, no_cache_leak, caller_persisted):
+    sc = spark.sparkContext
     data = _points(spark)
     if caller_persisted:
         data.persist(StorageLevel.MEMORY_AND_DISK)
-    workers = spark.sparkContext.defaultParallelism
+    workers = sc.defaultParallelism
     k_max = 2 + workers + 2  # two k values stay queued after k=4's thread frees
     release = threading.Event()
-    started, cached_at_end, shutdowns = [], [], []
+    started, checkpoint_cached_at_end, shutdowns = [], [], []
 
     class Pool(ThreadPoolExecutor):
         """Holds the running fits until the queued ones are cancelled."""
@@ -111,7 +146,9 @@ def test_failed_k_cancels_pending_fits(spark, monkeypatch, caller_persisted):
             raise RuntimeError("fit failed for k=4")
         assert release.wait(120)
         model = fit_kmeans(data, k, **kw)
-        cached_at_end.append(data.storageLevel != StorageLevel.NONE)
+        rdd_id = data._jdf.queryExecution().analyzed().rdd().id()
+        cached = {i.id(): i.numCachedPartitions() for i in sc._jsc.sc().getRDDStorageInfo()}
+        checkpoint_cached_at_end.append(cached.get(rdd_id, 0) > 0)
         return model
 
     monkeypatch.setattr(kmeans, "ThreadPoolExecutor", Pool)
@@ -121,7 +158,7 @@ def test_failed_k_cancels_pending_fits(spark, monkeypatch, caller_persisted):
             kmeans_scan(data, 2, k_max)
         assert shutdowns == [True]
         assert sorted(started) == list(range(2, 2 + workers + 1))
-        assert cached_at_end and all(cached_at_end)
+        assert checkpoint_cached_at_end and all(checkpoint_cached_at_end)
         assert (data.storageLevel != StorageLevel.NONE) == caller_persisted
     finally:
         data.unpersist()

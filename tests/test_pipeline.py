@@ -3,7 +3,6 @@ k-scan → results CSV → text report → (mock) email, plus the failure path."
 
 from __future__ import annotations
 
-import csv
 import datetime
 import os
 
@@ -19,60 +18,6 @@ class FakeTransport:
 
     def send_message(self, msg):
         self.sent.append(msg)
-
-
-def _write_csv(path, header, rows):
-    with open(path, "w", newline="") as f:
-        w = csv.writer(f)
-        w.writerow(header)
-        w.writerows(rows)
-
-
-@pytest.fixture(scope="module")
-def data_dir(tmp_path_factory):
-    d = tmp_path_factory.mktemp("gamedata")
-    ts = "2016-01-01 00:00:00"
-    _write_csv(
-        d / "users.csv",
-        ["timestamp", "userId", "nick", "twitter", "dob", "country"],
-        [[ts, u, f"n{u}", f"@n{u}", f"19{70 + u % 20}-01-15", "US"] for u in range(40)],
-    )
-    _write_csv(
-        d / "buy-clicks.csv",
-        ["timestamp", "txId", "userSessionId", "team", "userId", "buyId", "price"],
-        [
-            [ts, i, 100 + u, 1, u, i % 6, float(1 + (u * 7 + i) % 20)]
-            for i, u in enumerate(u for u in range(40) for _ in range(3))
-        ],
-    )
-    _write_csv(
-        d / "game-clicks.csv",
-        ["timestamp", "clickId", "userId", "userSessionId", "isHit", "teamId", "teamLevel"],
-        [
-            [ts, i, u, 100 + u, (u + i) % 2, u % 5, 1]
-            for i, u in enumerate(u for u in range(40) for _ in range(5))
-        ],
-    )
-    _write_csv(
-        d / "user-session.csv",
-        [
-            "timestamp",
-            "userSessionId",
-            "userId",
-            "teamId",
-            "assignmentId",
-            "sessionType",
-            "platformType",
-            "teamLevel",
-        ],
-        [[ts, 100 + u, u, u % 5, 1, "start", "pc", 1] for u in range(35)],
-    )
-    _write_csv(
-        d / "team.csv",
-        ["teamId", "name", "teamCreationTime", "teamEndTime", "strength", "currentLevel"],
-        [[t, f"team{t}", ts, ts, float(10 * t + 5), 1] for t in range(5)],
-    )
-    return str(d)
 
 
 def test_pipeline_happy_path(spark, data_dir, tmp_path):
