@@ -20,17 +20,52 @@ oracle — the cross-check for the iterative 64-dim `embedding_pca_variance`.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import os
+import shutil
+import tempfile
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pyspark_kmeans_spark.functions.exact import decimal_sum
+from pyspark_kmeans_spark.functions.warehouse_gc import drop_artifacts
 from pyspark_kmeans_spark.sources.tables import load_table
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
+
+
+@contextmanager
+def _scratch_corpus(
+    spark: SparkSession, check: str, sf_dir: str
+) -> Iterator[tuple[str, str]]:
+    """(root, scratch_sf) for a check that runs a lifecycle against
+    scratch data instead of the shared `sf_dir` artifacts: an empty tree
+    under the temp dir, keyed by the applicationId so concurrent sessions
+    stay apart, with `root/sf` as the scratch corpus dir.
+
+    The tree is wiped on entry (a stale tree — a stream checkpoint, a
+    committed artifact input — would make the lifecycle under test a
+    silent no-op) and, with every warehouse artifact built from the
+    scratch corpus, on EVERY exit path: a timeout or fold failure must
+    not leak a corpus copy per session into the temp dir, nor a memo
+    entry over deleted parquet into a same-session retry."""
+    sf_tag = os.path.basename(sf_dir.rstrip("/"))
+    root = os.path.join(
+        tempfile.gettempdir(),
+        f"{check}_{sf_tag}_{spark.sparkContext.applicationId}",
+    )
+    shutil.rmtree(root, ignore_errors=True)
+    scratch_sf = os.path.join(root, "sf")
+    try:
+        os.makedirs(scratch_sf)
+        yield root, scratch_sf
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+        drop_artifacts(spark, scratch_sf)
 
 
 def _over_cap_witness(docs: DataFrame) -> DataFrame:
@@ -988,17 +1023,14 @@ def q_streaming_ingest_check(spark: SparkSession, sf_dir: str) -> DataFrame:
       taken before/after/after-rerun), `n_recompact_victims` = 0 pins
       the re-run as pure no-op GC.
 
-    The stream runs against session-scoped scratch dirs (wiped per call:
-    a stale checkpoint would silently mark the input as already processed
-    and yield an empty run; the applicationId in the path keeps
-    concurrent sessions apart).  Bounded driver reads: one `first()` per
+    The stream runs against session-scoped scratch dirs
+    (`_scratch_corpus`, wiped per call: a stale checkpoint would silently
+    mark the input as already processed and yield an empty run).
+    Bounded driver reads: one `first()` per
     batch directory to recover the processing order.  Cost is the 3
     batch-sized LSH dedups the loop itself runs — batch-linear, the
     daily_ingest_check class of gate query."""
     import glob
-    import os
-    import shutil
-    import tempfile
 
     from pyspark_kmeans_spark.functions.persist import release_persisted
     from pyspark_kmeans_spark.operators.dedup import (
@@ -1009,13 +1041,7 @@ def q_streaming_ingest_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     release_persisted()
     docs = _t(spark, sf_dir, "documents")
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"streaming_ingest_check_{sf_tag}_{spark.sparkContext.applicationId}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    try:
+    with _scratch_corpus(spark, "streaming_ingest_check", sf_dir) as (root, _):
         input_dir = os.path.join(root, "in")
         os.makedirs(input_dir)
         for i in range(3):
@@ -1141,16 +1167,10 @@ def q_streaming_ingest_check(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(n_recompact).alias("n_recompact_victims"),
         )
         # Materialize the 1-row audit eagerly: the returned plan must
-        # not depend on the scratch files the finally below deletes.
+        # not depend on the scratch files _scratch_corpus deletes on exit.
         rows = result.collect()
         schema = result.schema
         return spark.createDataFrame(rows, schema)
-    finally:
-        # Reclaim the scratch tree (a full corpus copy per session:
-        # slices, state, kept, checkpoint) on EVERY path — a stream
-        # timeout or fold failure must not leak one tree per session
-        # into /tmp.
-        shutil.rmtree(root, ignore_errors=True)
 
 
 # Max/mean cell-occupancy ratio above which the persisted IVF codebook is
@@ -1260,9 +1280,8 @@ def q_codebook_update_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-7 addition with no driver row (VERDICT r7 missing #2: it
     mutates the shared warehouse artifact, so it cannot run against the
     sweep's codebook).  Runs the whole unit against a SCRATCH copy of the
-    embeddings table (the streaming_ingest_check pattern:
-    applicationId-keyed scratch sf_dir, finally-cleanup of both the
-    scratch tree and the scratch-keyed warehouse artifact):
+    embeddings table (`_scratch_corpus`, which deletes the scratch tree
+    and the scratch-keyed warehouse artifact on exit):
 
     - fit the day-0 codebook on the scratch corpus split,
     - fold the 20% batch via the REGISTERED `update_codebook_table`,
@@ -1285,35 +1304,17 @@ def q_codebook_update_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     job), one batch-linear routing pass per side, two O(n_cells) frames
     joined — nothing corpus-quadratic; the daily_ingest_check class of
     gate query."""
-    import os
-    import shutil
-    import tempfile
-
     from pyspark_kmeans_spark.functions.persist import release_persisted
     from pyspark_kmeans_spark.operators.similarity import (
         IVF_BATCH_MOD,
+        _codebook_path,
         ensure_codebook_stats,
         ivf_assign,
         update_codebook_table,
     )
-    from pyspark_kmeans_spark.sources.bucketed import _WAREHOUSE, bucketed_name
 
     release_persisted()
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"codebook_update_check_{sf_tag}_{spark.sparkContext.applicationId}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    scratch_sf = os.path.join(root, "sf")
-    art = os.path.join(
-        _WAREHOUSE,
-        bucketed_name(
-            f"ivf_codebook_m{IVF_BATCH_MOD}_s1", scratch_sf, n_buckets=16
-        ),
-    )
-    try:
-        os.makedirs(scratch_sf)
+    with _scratch_corpus(spark, "codebook_update_check", sf_dir) as (_, scratch_sf):
         # Tables come as single parquet FILES (the testdata layout) or
         # directories (what Spark itself writes; scratch corpora in
         # tests) — load_table reads both, so the copy must too.
@@ -1366,7 +1367,9 @@ def q_codebook_update_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         n_batch = batch.count()
         update_codebook_table(spark, scratch_sf, batch, n_cells=16, seed=1)
-        written = spark.read.parquet(art)
+        written = spark.read.parquet(
+            _codebook_path(scratch_sf, n_cells=16, seed=1, batch_mod=IVF_BATCH_MOD)
+        )
         audit = expected.join(written, on="cell", how="full_outer")
         result = audit.agg(
             F.lit(n_batch).cast("bigint").alias("n_batch"),
@@ -1403,12 +1406,9 @@ def q_codebook_update_check(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("bigint").alias("n_count_mismatch"),
         )
         # Materialize eagerly: the returned plan must not depend on the
-        # scratch files the finally below deletes.
+        # scratch files _scratch_corpus deletes on exit.
         rows = result.collect()
         return spark.createDataFrame(rows, result.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-        shutil.rmtree(art, ignore_errors=True)
 
 
 def q_incremental_semdedup_check(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1700,10 +1700,10 @@ def q_pairs_update_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`graph.append_pairs_table`, VERDICT r8 missing #4): artifact-after-
     fold must equal a full re-mine on the union corpus row-for-row.
 
-    Runs the whole lifecycle against a SCRATCH corpus (the
-    codebook_update_check pattern — applicationId-keyed scratch sf_dir,
-    finally-cleanup of the scratch tree and every scratch-keyed warehouse
-    artifact): write the 80% split as the scratch corpus, first-touch
+    Runs the whole lifecycle against a SCRATCH corpus
+    (`_scratch_corpus`, which deletes the scratch tree and every
+    scratch-keyed warehouse artifact on exit): write the 80% split as
+    the scratch corpus, first-touch
     builds its pair table + prefix state, fold the 20% batch via the
     REGISTERED `append_pairs_table`, then full-outer-join the folded
     artifact against an inline full re-mine of the UNION corpus
@@ -1720,29 +1720,15 @@ def q_pairs_update_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: the fold is the batch-linear path under test; the re-mine and
     the audit join are check-only costs (the codebook_update_check
     class: the gate pays for its own independent expectation)."""
-    import os
-    import shutil
-    import tempfile
-
     from pyspark_kmeans_spark.functions.persist import release_persisted
     from pyspark_kmeans_spark.operators.dedup import jaccard_pairs
     from pyspark_kmeans_spark.operators.graph import (
         GRAPH_PAIR_THRESHOLD,
-        _graph_state_paths,
         append_pairs_table,
     )
 
     release_persisted()
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"pairs_update_check_{sf_tag}_{spark.sparkContext.applicationId}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    scratch_sf = os.path.join(root, "sf")
-    arts = _graph_state_paths(scratch_sf, GRAPH_PAIR_THRESHOLD)
-    try:
-        os.makedirs(scratch_sf)
+    with _scratch_corpus(spark, "pairs_update_check", sf_dir) as (_, scratch_sf):
         docs = _t(spark, sf_dir, "documents")
         corpus = docs.filter(F.col("doc_id") % PAIRS_UPDATE_BATCH_MOD != 0)
         batch = docs.filter(F.col("doc_id") % PAIRS_UPDATE_BATCH_MOD == 0)
@@ -1768,25 +1754,9 @@ def q_pairs_update_check(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_extra"),
         )
         # Materialize eagerly: the returned plan must not depend on the
-        # scratch files the finally below deletes.
+        # scratch files _scratch_corpus deletes on exit.
         rows = result.collect()
         return spark.createDataFrame(rows, result.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-        # Invalidate the session memo for every scratch artifact BEFORE
-        # and not instead of deleting it (ADVICE r9 #1): if the run died
-        # between ensure_pairs_table's memo_put and append_pairs_table's
-        # invalidation, a same-session retry would otherwise get a cached
-        # DataFrame handle over deleted parquet, and the retry's
-        # append-mode write could recreate a pairs dir holding only batch
-        # edges — a confusing red check instead of a clean rebuild.
-        from pyspark_kmeans_spark.functions.warehouse_memo import (
-            memo_invalidate,
-        )
-
-        for a in arts:
-            memo_invalidate(spark, a)
-            shutil.rmtree(a, ignore_errors=True)
 
 
 PQ_INDEX_UPDATE_BATCH_MOD = 4  # vec_id % 4 == 0 → the 25% "new" batch;
@@ -1800,11 +1770,10 @@ def q_pq_index_update_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     artifact-after-fold must equal a full index rebuild over the union
     corpus row-for-row — (id, cell, codes) all three.
 
-    Runs the whole lifecycle against a SCRATCH corpus (the
-    pairs_update_check pattern — applicationId-keyed scratch sf_dir,
-    finally-cleanup of the scratch tree and every scratch-keyed
-    warehouse artifact, enumerated by the builders' own name derivation
-    `_pq_state_paths`): write the 75% split as the scratch embeddings
+    Runs the whole lifecycle against a SCRATCH corpus
+    (`_scratch_corpus`, which deletes the scratch tree and every
+    scratch-keyed warehouse artifact on exit, staging dirs included):
+    write the 75% split as the scratch embeddings
     table, first-touch builds its IVF codebook + RESIDUAL PQ codebooks +
     index (the registered round-12 encoding), fold the 25% batch via the
     REGISTERED `append_pq_index` (staged-commit part-file moves — a torn
@@ -1822,14 +1791,8 @@ def q_pq_index_update_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: the fold is the batch-linear path under test; the rebuild and
     the audit join are check-only costs (the codebook_update_check
     class: the gate pays for its own independent expectation)."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
     from pyspark_kmeans_spark.functions.persist import release_persisted
     from pyspark_kmeans_spark.operators.similarity import (
-        _pq_state_paths,
         append_pq_index,
         ensure_codebook_table,
         ensure_pq_index_table,
@@ -1838,16 +1801,7 @@ def q_pq_index_update_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     release_persisted()
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"pq_index_update_check_{sf_tag}_{spark.sparkContext.applicationId}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    scratch_sf = os.path.join(root, "sf")
-    arts = _pq_state_paths(scratch_sf, residual=True)
-    try:
-        os.makedirs(scratch_sf)
+    with _scratch_corpus(spark, "pq_index_update_check", sf_dir) as (_, scratch_sf):
         emb = load_table(spark, sf_dir, "embeddings")
         corpus = emb.filter(F.col("vec_id") % PQ_INDEX_UPDATE_BATCH_MOD != 0)
         batch = emb.filter(F.col("vec_id") % PQ_INDEX_UPDATE_BATCH_MOD == 0)
@@ -1894,24 +1848,9 @@ def q_pq_index_update_check(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_mismatch"),
         )
         # Materialize eagerly: the returned plan must not depend on the
-        # scratch files the finally below deletes.
+        # scratch files _scratch_corpus deletes on exit.
         rows = result.collect()
         return spark.createDataFrame(rows, result.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-        # Invalidate the session memo for every scratch artifact BEFORE
-        # deleting (the pairs_update_check lesson, ADVICE r9 #1): a
-        # same-session retry must rebuild, not read a cached handle over
-        # deleted parquet.
-        from pyspark_kmeans_spark.functions.warehouse_memo import (
-            memo_invalidate,
-        )
-
-        for a in arts:
-            memo_invalidate(spark, a)
-            shutil.rmtree(a, ignore_errors=True)
-            for stale in glob.glob(a + ".staging-*"):
-                shutil.rmtree(stale, ignore_errors=True)
 
 
 QUALITY_ACC_FLOOR = 0.9  # tests pin ≥0.95 at sf0.001; driver floor has margin

@@ -1741,34 +1741,32 @@ def ensure_signature_table(
     instead of silently reusing a mismatched table — a seed mismatch is
     the nastier case because the width check downstream still passes while
     buckets never collide and every duplicate batch doc is silently kept."""
-    import os
-
-    from pyspark_kmeans_spark.functions.warehouse_memo import memo_get, memo_put
-    from pyspark_kmeans_spark.sources.bucketed import _WAREHOUSE, bucketed_name
-
-    name = bucketed_name(
-        f"doc_sigs_m{INCREMENTAL_BATCH_MOD}_s{seed}", sf_dir, n_buckets=num_hashes
+    from pyspark_kmeans_spark.functions.warehouse_memo import (
+        artifact_path,
+        ensure_artifact,
     )
-    path = os.path.join(_WAREHOUSE, name)
-    # Session-scoped memo of the read handle: repeated calls were paying
-    # parquet schema discovery every time (83 ms/call at sf0.1 — VERDICT
-    # r6 item 5).  Deliberately NO content stamp here, unlike
-    # ensure_codebook_table's memo: the signature table has no sanctioned
-    # rewrite path (no refresh/update analogue — appends go to NEW batch
-    # dirs, parameter changes change the path), so the write-once
-    # contract makes an unstamped handle valid for the whole session.
-    # Anyone adding an in-place update path later must add the stamp.
-    cached = memo_get(spark, path)
-    if cached is not None:
-        return cached
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+
+    def write(path: str) -> None:
         corpus = load_table(spark, sf_dir, "documents").filter(
             F.col("doc_id") % INCREMENTAL_BATCH_MOD != 0
         )
         build_signature_table(
             corpus, num_hashes=num_hashes, seed=seed
         ).write.mode("overwrite").parquet(path)
-    return memo_put(spark, path, spark.read.parquet(path))
+
+    # Deliberately NO content stamp on the memoized handle, unlike
+    # ensure_codebook_table's memo: the signature table has no sanctioned
+    # rewrite path (no refresh/update analogue — appends go to NEW batch
+    # dirs, parameter changes change the path), so the write-once
+    # contract makes an unstamped handle valid for the whole session.
+    # Anyone adding an in-place update path later must add the stamp.
+    return ensure_artifact(
+        spark,
+        artifact_path(
+            f"doc_sigs_m{INCREMENTAL_BATCH_MOD}_s{seed}", sf_dir, num_hashes
+        ),
+        write,
+    )
 
 
 def q_dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -48,6 +48,11 @@ from pyspark_kmeans_spark.functions.persist import (
     registered_persist,
     release_persisted,
 )
+from pyspark_kmeans_spark.functions.warehouse_memo import (
+    artifact_path,
+    ensure_artifact,
+    fold_artifact,
+)
 from pyspark_kmeans_spark.operators.dedup import jaccard_pairs
 from pyspark_kmeans_spark.sources.tables import load_table
 
@@ -84,29 +89,27 @@ def ensure_pairs_table(
     artifact equals the inline frame row-for-row — pinned in
     tests/test_graph.py, and every graph oracle still replays the mining
     in SQL from the raw table."""
-    import os
-
-    from pyspark_kmeans_spark.functions.warehouse_memo import memo_get, memo_put
-
-    # Path from _graph_state_paths — ONE name derivation for the build,
-    # the append fold and the check's cleanup (a divergence would orphan
-    # or double-build artifacts silently).
+    # Path from _graph_state_paths — ONE name derivation for the build
+    # and the append fold (a divergence would orphan or double-build
+    # artifacts silently).
     path, _, _ = _graph_state_paths(sf_dir, threshold)
     # No content stamp on this memo: the pair table is never rewritten in
     # place (a threshold change changes the path) — its ONE sanctioned
-    # mutation is the append-only batch fold (`append_pairs_table`), which
-    # calls memo_invalidate + refreshByPath itself, so a stale handle
-    # cannot survive a same-session fold.  Cross-session concurrent
-    # append+read is out of scope (the signature-table contract).
-    cached = memo_get(spark, path)
-    if cached is not None:
-        return cached
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        docs = load_table(spark, sf_dir, "documents")
-        jaccard_pairs(docs, threshold=threshold).select(
-            "doc_a", "doc_b"
-        ).write.mode("overwrite").parquet(path)
-    return memo_put(spark, path, spark.read.parquet(path))
+    # mutation is the append-only batch fold (`append_pairs_table`), whose
+    # fold_artifact drops the memo and Spark's file listing itself, so a
+    # stale handle cannot survive a same-session fold.  Cross-session
+    # concurrent append+read is out of scope (the signature-table
+    # contract).
+    return ensure_artifact(
+        spark,
+        path,
+        lambda p: jaccard_pairs(
+            load_table(spark, sf_dir, "documents"), threshold=threshold
+        )
+        .select("doc_a", "doc_b")
+        .write.mode("overwrite")
+        .parquet(p),
+    )
 
 
 def _graph_state_paths(
@@ -114,24 +117,19 @@ def _graph_state_paths(
 ) -> tuple[str, str, str]:
     """(pairs, prefix-state, token-freq) artifact paths for one
     (sf_dir, threshold) — the graph family's warehouse name derivation,
-    single-sourced for the build (ensure_pairs_table), the fold
-    (append_pairs_table) and the check's cleanup.
+    single-sourced for the build (ensure_pairs_table) and the fold
+    (append_pairs_table).
 
     Lossless threshold encoding (round-8 review finding: int(t*100)
     truncates float error, so 0.56 and 0.57 collided on one cache path
     and the write-once contract would have served mismatched edges
     forever).  repr round-trips every float exactly; sanitize for the
     path."""
-    import os
     import re
-
-    from pyspark_kmeans_spark.sources.bucketed import _WAREHOUSE, bucketed_name
 
     t_tag = re.sub(r"[^0-9a-zA-Z]", "_", repr(threshold))
     return tuple(
-        os.path.join(
-            _WAREHOUSE, bucketed_name(f"neardup_{kind}_t{t_tag}", sf_dir, n_buckets=1)
-        )
+        artifact_path(f"neardup_{kind}_t{t_tag}", sf_dir)
         for kind in ("pairs", "state", "freq")
     )
 
@@ -192,16 +190,13 @@ def ensure_graph_state(
     frame (`_ordered_prefix` over the corpus); freq is the (token, df)
     table that fixes the shared total order for every later fold.  Built
     lazily on first fold; the analytics queries never read them."""
-    import os
-
-    from pyspark_kmeans_spark.functions.warehouse_memo import memo_get, memo_put
     from pyspark_kmeans_spark.operators.dedup import tokens_col
 
     _, state_path, freq_path = _graph_state_paths(sf_dir, threshold)
-    cached = memo_get(spark, state_path)
-    if cached is not None:
-        return cached
-    if not os.path.exists(os.path.join(state_path, "_SUCCESS")):
+
+    # The state's commit marker covers both: freq is written first, so a
+    # committed state always has its freq beside it.
+    def write(path: str) -> None:
         docs = load_table(spark, sf_dir, "documents")
         base = docs.select(
             "doc_id",
@@ -214,12 +209,14 @@ def ensure_graph_state(
         freq = spark.read.parquet(freq_path)
         _ordered_prefix(base, freq, threshold).write.mode(
             "overwrite"
-        ).parquet(state_path)
-    handles = (
-        spark.read.parquet(state_path),
-        spark.read.parquet(freq_path),
+        ).parquet(path)
+
+    return ensure_artifact(
+        spark,
+        state_path,
+        write,
+        lambda path: (spark.read.parquet(path), spark.read.parquet(freq_path)),
     )
-    return memo_put(spark, state_path, handles)
 
 
 def mine_incremental_edges(
@@ -357,7 +354,9 @@ def append_pairs_table(
     (BASELINE.md round 9).  shuffle_hash hints on every explode-derived
     side (the static-estimate hazard jaccard_pairs documents).
 
-    Commit order is state-then-edges: if the edge append fails, a retry
+    Each append is a staged commit (`fold_artifact`): a failed Spark
+    write leaves the live artifact untouched.  Commit order is
+    state-then-edges: if the edge append fails, a retry
     re-mines against a state that already contains the batch — the same
     pairs regenerate (self-pairs filter out on id inequality; the
     duplicate state copy of a batch doc can duplicate verify-join rows,
@@ -367,7 +366,6 @@ def append_pairs_table(
     STATE (inflating later folds' candidate work, never their output);
     an operator recovering from repeated failures should restore the
     state artifact from its last good copy."""
-    from pyspark_kmeans_spark.functions.warehouse_memo import memo_invalidate
     from pyspark_kmeans_spark.operators.dedup import tokens_col
 
     pairs_path, state_path, _ = _graph_state_paths(sf_dir, threshold)
@@ -384,13 +382,10 @@ def append_pairs_table(
     bpref = registered_persist(_ordered_prefix(base, freq, threshold))
     bpref.count()  # eager: feeds state append, both candidate sides, verify
     new_edges = mine_incremental_edges(state, bpref, threshold=threshold)
-    bpref.select("doc_id", "_block", "_n", "_ts", "_prefix").write.mode(
-        "append"
-    ).parquet(state_path)
-    new_edges.write.mode("append").parquet(pairs_path)
-    for p in (pairs_path, state_path):
-        spark.catalog.refreshByPath(p)
-        memo_invalidate(spark, p)
+    fold_artifact(
+        spark, state_path, bpref.select("doc_id", "_block", "_n", "_ts", "_prefix")
+    )
+    fold_artifact(spark, pairs_path, new_edges)
     return spark.read.parquet(pairs_path)
 
 

@@ -47,7 +47,6 @@ shuffle-free map-side arithmetic.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -57,8 +56,11 @@ from pyspark_kmeans_spark.functions.persist import (
     registered_persist,
     release_persisted,
 )
+from pyspark_kmeans_spark.functions.warehouse_memo import (
+    artifact_path,
+    ensure_artifact,
+)
 from pyspark_kmeans_spark.operators.similarity import _hyperplanes, ivf_assign
-from pyspark_kmeans_spark.sources.bucketed import _WAREHOUSE, bucketed_name
 from pyspark_kmeans_spark.sources.tables import load_table
 
 DAILY_BATCH_MOD = 5  # doc_id % 5 == 0 → the 20% "today" batch
@@ -80,33 +82,17 @@ def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ensure(spark: SparkSession, sf_dir: str, table: str, build) -> DataFrame:
-    """Write-once-per-sf_dir materialization (the sorted_layout/signature
-    table convention); `build()` returns the frame to persist.  The read
-    handle is memoized per session — repeated calls were paying parquet
-    schema discovery every time (VERDICT r6 item 5)."""
-    from pyspark_kmeans_spark.functions.warehouse_memo import memo_get, memo_put
-
-    name = bucketed_name(table, sf_dir, n_buckets=1)
-    path = os.path.join(_WAREHOUSE, name)
-    cached = memo_get(spark, path)
-    if cached is not None:
-        return cached
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        build().write.mode("overwrite").parquet(path)
-    return memo_put(spark, path, spark.read.parquet(path))
-
-
 def ensure_digest_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(digest) — distinct content digests of the corpus split, the
     exact-dedup side artifact an ingestion job appends to."""
-    return _ensure(
+    return ensure_artifact(
         spark,
-        sf_dir,
-        f"doc_digests_m{DAILY_BATCH_MOD}",
-        lambda: _corpus(spark, sf_dir)
+        artifact_path(f"doc_digests_m{DAILY_BATCH_MOD}", sf_dir),
+        lambda path: _corpus(spark, sf_dir)
         .select(F.md5("text").alias("digest"))
-        .distinct(),
+        .distinct()
+        .write.mode("overwrite")
+        .parquet(path),
     )
 
 
@@ -114,16 +100,17 @@ def ensure_lang_stats_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(lang, n_docs, n_tokens) — the corpus's per-lang aggregate state;
     counts are commutative monoids, so batch partials merge by union +
     re-aggregation (`q_incremental_agg`'s contract)."""
-    return _ensure(
+    return ensure_artifact(
         spark,
-        sf_dir,
-        f"lang_stats_m{DAILY_BATCH_MOD}",
-        lambda: _corpus(spark, sf_dir)
+        artifact_path(f"lang_stats_m{DAILY_BATCH_MOD}", sf_dir),
+        lambda path: _corpus(spark, sf_dir)
         .groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum(F.size(F.split("text", " "))).alias("n_tokens"),
-        ),
+        )
+        .write.mode("overwrite")
+        .parquet(path),
     )
 
 

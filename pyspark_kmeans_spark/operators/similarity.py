@@ -21,6 +21,7 @@ so ties are stable and the DuckDB oracle ranks identically.
 
 from __future__ import annotations
 
+import os
 import random
 from collections.abc import Callable
 
@@ -30,6 +31,13 @@ from pyspark.sql import functions as F
 from pyspark_kmeans_spark.functions.persist import (
     registered_persist,
     release_persisted,
+)
+from pyspark_kmeans_spark.functions.warehouse_memo import (
+    artifact_path,
+    ensure_artifact,
+    fold_artifact,
+    memo_get,
+    memo_invalidate,
 )
 from pyspark_kmeans_spark.sources.tables import load_table, spread_small_scan
 
@@ -525,21 +533,12 @@ def _ensure_codebook_rows(
     None for a pre-round-7 artifact without the `n` column.  Both public
     faces (ensure_codebook_table, ensure_codebook_stats) delegate here so
     neither reaches into the memo tuple by position."""
-    import os
-
-    from pyspark_kmeans_spark.functions.warehouse_memo import memo_get, memo_put
-    from pyspark_kmeans_spark.sources.bucketed import _WAREHOUSE, bucketed_name
-
-    name = bucketed_name(
-        f"ivf_codebook_m{batch_mod}_s{seed}", sf_dir, n_buckets=n_cells
-    )
-    path = os.path.join(_WAREHOUSE, name)
-    marker = os.path.join(path, "_SUCCESS")
+    path = _codebook_path(sf_dir, n_cells=n_cells, seed=seed, batch_mod=batch_mod)
 
     def _stamp() -> tuple | None:
         # Content stamp for cross-process staleness: sorted
         # (name, size, mtime_ns) over every entry in the artifact dir.
-        # A bare _SUCCESS mtime is not enough on filesystems with coarse
+        # A bare commit-marker mtime is not enough on filesystems with coarse
         # (1 s) granularity — a rewrite landing in the same second as the
         # memoized stamp would serve stale centroids forever (ADVICE r7
         # #4).  Spark overwrites generate fresh UUID part-file names, so
@@ -555,22 +554,17 @@ def _ensure_codebook_rows(
         except OSError:
             return None
 
+    # Cross-process refresh visibility: another application's
+    # refresh/update rewrites the artifact in place; memo_invalidate only
+    # reaches THIS process, so a memo hit re-validates against the
+    # directory content stamp.  A changed or missing listing drops the
+    # entry and falls through to a fresh read; a None stamp (dir absent
+    # at memo time) never matches.
     cached = memo_get(spark, path)
-    if cached is not None:
-        stamp, centroids_hit, counts_hit = cached
-        # Cross-process refresh visibility: another application's
-        # refresh/update rewrites the artifact in place; memo_invalidate
-        # only reaches THIS process, so a memo hit re-validates against
-        # the directory content stamp.  A changed or missing listing
-        # falls through to a fresh read; a None stamp (dir absent at
-        # memo time) never matches.
-        if stamp is not None and stamp == _stamp():
-            # fresh copies: callers must not be able to mutate the memo
-            return (
-                [list(c) for c in centroids_hit],
-                list(counts_hit) if counts_hit is not None else None,
-            )
-    if not os.path.exists(marker):
+    if cached is not None and (cached[0] is None or cached[0] != _stamp()):
+        memo_invalidate(spark, path)
+
+    def write(path: str) -> None:
         corpus = load_table(spark, sf_dir, "embeddings").filter(
             F.col(id_col) % batch_mod != 0
         )
@@ -586,32 +580,38 @@ def _ensure_codebook_rows(
         spark.createDataFrame(
             rows, "cell int, centroid array<double>, n long"
         ).coalesce(1).write.mode("overwrite").parquet(path)
-    # Stamp BEFORE the read: if another process rewrites the artifact
-    # between the read and a stamp-after, the memo would pair the NEW
-    # listing with the OLD centroids and the staleness check could never
-    # fire again.  Stamping first makes that race converge: the rewrite
-    # changes the listing vs the stored stamp, so the next call re-reads.
-    stamp_before = _stamp()
-    stored = sorted(
-        spark.read.parquet(path).collect(), key=lambda r: r["cell"]
-    )
-    # Per-cell training populations ride along (None for a pre-round-7
-    # artifact without the `n` column — ensure_codebook_stats raises on
-    # those; refresh once to upgrade).
-    counts = (
-        [int(r["n"]) for r in stored]
-        if "n" in stored[0].asDict()
-        else None
-    )
-    memo_put(
-        spark,
-        path,
-        (stamp_before, [list(r["centroid"]) for r in stored], counts),
-    )
+
+    def read(path: str) -> tuple:
+        # Stamp BEFORE the read: if another process rewrites the artifact
+        # between the read and a stamp-after, the memo would pair the NEW
+        # listing with the OLD centroids and the staleness check could
+        # never fire again.  Stamping first makes that race converge: the
+        # rewrite changes the listing vs the stored stamp, so the next
+        # call re-reads.
+        stamp_before = _stamp()
+        stored = sorted(
+            spark.read.parquet(path).collect(), key=lambda r: r["cell"]
+        )
+        # Per-cell training populations ride along (None for a
+        # pre-round-7 artifact without the `n` column —
+        # ensure_codebook_stats raises on those; refresh once to upgrade).
+        counts = (
+            [int(r["n"]) for r in stored]
+            if "n" in stored[0].asDict()
+            else None
+        )
+        return stamp_before, [list(r["centroid"]) for r in stored], counts
+
+    _, centroids, counts = ensure_artifact(spark, path, write, read)
+    # fresh copies: callers must not be able to mutate the memo
     return (
-        [list(r["centroid"]) for r in stored],
+        [list(c) for c in centroids],
         list(counts) if counts is not None else None,
     )
+
+
+def _codebook_path(sf_dir: str, *, n_cells: int, seed: int, batch_mod: int) -> str:
+    return artifact_path(f"ivf_codebook_m{batch_mod}_s{seed}", sf_dir, n_cells)
 
 
 def ensure_codebook_stats(
@@ -680,16 +680,9 @@ def refresh_codebook_table(
       logical plan and would silently feed it the PRE-drift data (caught
       by the end-to-end drift test: the 'refit' reproduced the day-0
       centroids byte-for-byte)."""
-    import os
     import shutil
 
-    from pyspark_kmeans_spark.functions.warehouse_memo import memo_invalidate
-    from pyspark_kmeans_spark.sources.bucketed import _WAREHOUSE, bucketed_name
-
-    name = bucketed_name(
-        f"ivf_codebook_m{batch_mod}_s{seed}", sf_dir, n_buckets=n_cells
-    )
-    path = os.path.join(_WAREHOUSE, name)
+    path = _codebook_path(sf_dir, n_cells=n_cells, seed=seed, batch_mod=batch_mod)
     shutil.rmtree(path, ignore_errors=True)
     memo_invalidate(spark, path)
     spark.catalog.refreshByPath(sf_dir)
@@ -734,33 +727,14 @@ def update_codebook_table(
     itself.  Raises on a pre-round-7 artifact without the `n` column
     (refresh first).  Overwrites the artifact and invalidates the session
     memo; returns the updated centroids (ordered by cell)."""
-    import os
-
-    from pyspark_kmeans_spark.functions.warehouse_memo import memo_invalidate
-    from pyspark_kmeans_spark.sources.bucketed import _WAREHOUSE, bucketed_name
-
-    name = bucketed_name(
-        f"ivf_codebook_m{batch_mod}_s{seed}", sf_dir, n_buckets=n_cells
+    # The current centroids and populations come from the ensure memo
+    # (stamp-checked, so a rewrite by another process is re-read): at
+    # most one O(n_cells) read per update, none on a memo hit.
+    centroids, counts = ensure_codebook_stats(
+        spark, sf_dir, n_cells=n_cells, seed=seed, batch_mod=batch_mod,
+        id_col=id_col,
     )
-    path = os.path.join(_WAREHOUSE, name)
-    # Build only if absent — ensure() would also COLLECT the centroids,
-    # and the single read below already yields them with the counts (one
-    # O(n_cells) job per update, not two).
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        ensure_codebook_table(
-            spark, sf_dir, n_cells=n_cells, seed=seed, batch_mod=batch_mod,
-            id_col=id_col,
-        )
-    stored = sorted(
-        spark.read.parquet(path).collect(), key=lambda r: r["cell"]
-    )
-    if "n" not in stored[0].asDict():
-        raise ValueError(
-            f"codebook at {path} predates per-cell populations; run "
-            "refresh_codebook_table once to upgrade the artifact"
-        )
-    centroids = [list(r["centroid"]) for r in stored]
-    counts = [int(r["n"]) for r in stored]
+    path = _codebook_path(sf_dir, n_cells=n_cells, seed=seed, batch_mod=batch_mod)
     dim = len(centroids[0])
 
     routed = ivf_assign(batch, centroids, id_col=id_col, emit_unit=True)
@@ -1120,15 +1094,7 @@ def ensure_pq_codebook(
     same write-once/memoized contract as ensure_codebook_table.  No
     in-place rewrite path exists, so the memo needs no content stamp
     (the ensure_pairs_table rule)."""
-    import os
-
-    from pyspark_kmeans_spark.functions.warehouse_memo import memo_get, memo_put
-    from pyspark_kmeans_spark.sources.bucketed import _WAREHOUSE, bucketed_name
-
-    name = bucketed_name(
-        f"pq_codebook_m{m}_k{k}_s{seed}_bm{batch_mod}", sf_dir, n_buckets=1
-    )
-    path = os.path.join(_WAREHOUSE, name)
+    path = artifact_path(f"pq_codebook_m{m}_k{k}_s{seed}_bm{batch_mod}", sf_dir)
 
     def build_u() -> DataFrame:
         return with_unit_vectors(
@@ -1168,20 +1134,14 @@ def ensure_residual_pq_codebook(
     join the artifact name (a codebook fit on residuals of a different
     routing is silently wrong while every shape still typechecks) — the
     ensure_signature_table naming contract."""
-    import os
-
-    from pyspark_kmeans_spark.sources.bucketed import _WAREHOUSE, bucketed_name
-
     centroids = ensure_codebook_table(
         spark, sf_dir, n_cells=n_cells, seed=ivf_seed, batch_mod=batch_mod,
         id_col=id_col,
     )
-    name = bucketed_name(
+    path = artifact_path(
         f"pq_resbook_c{n_cells}_is{ivf_seed}_m{m}_k{k}_s{seed}_bm{batch_mod}",
         sf_dir,
-        n_buckets=1,
     )
-    path = os.path.join(_WAREHOUSE, name)
 
     def build_u() -> DataFrame:
         unit = F.transform("vec", lambda x: x / F.col("norm"))
@@ -1205,20 +1165,14 @@ def _ensure_pq_books(
     build_u: Callable[[], DataFrame],
 ) -> list[list[list[float]]]:
     """Shared ensure body for per-subspace codebooks (raw-unit and
-    residual faces): memo → _SUCCESS-gated fit over `build_u()`'s `_u`
+    residual faces): `ensure_artifact` over a fit of `build_u()`'s `_u`
     projection → O(m·k) read-back.  The projection is persisted ONCE
     before the subspace loop (ADVICE r10 #2): each fit below only needs
     its dim/m slice, but without this the full corpus would be re-scanned
     once per subspace — m=16 full passes for a one-time artifact build
     whose cost scales with corpus size."""
-    import os
 
-    from pyspark_kmeans_spark.functions.warehouse_memo import memo_get, memo_put
-
-    cached = memo_get(spark, path)
-    if cached is not None:
-        return [[list(c) for c in sub] for sub in cached]
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    def write(path: str) -> None:
         corpus = registered_persist(build_u())
         first = corpus.select(F.size("_u").alias("_d")).first()
         dim = int(first["_d"]) if first else 0
@@ -1245,15 +1199,18 @@ def _ensure_pq_books(
         spark.createDataFrame(
             rows, "subspace int, code int, centroid array<double>"
         ).coalesce(1).write.mode("overwrite").parquet(path)
-    stored = spark.read.parquet(path).collect()
-    books: dict[int, dict[int, list[float]]] = {}
-    for r in stored:
-        books.setdefault(r["subspace"], {})[r["code"]] = list(r["centroid"])
-    out = [
-        [books[s][c] for c in sorted(books[s])] for s in sorted(books)
+
+    def read(path: str) -> list[list[list[float]]]:
+        books: dict[int, dict[int, list[float]]] = {}
+        for r in spark.read.parquet(path).collect():
+            books.setdefault(r["subspace"], {})[r["code"]] = list(r["centroid"])
+        return [[books[s][c] for c in sorted(books[s])] for s in sorted(books)]
+
+    # fresh copies: callers must not be able to mutate the memo
+    return [
+        [list(c) for c in sub]
+        for sub in ensure_artifact(spark, path, write, read)
     ]
-    memo_put(spark, path, out)
-    return [[list(c) for c in sub] for sub in out]
 
 
 def _pq_codes(unit, codebooks: list[list[list[float]]]) -> F.Column:
@@ -1386,22 +1343,16 @@ def _pq_index_path(
     batch_mod: int,
     residual: bool = False,
 ) -> str:
-    import os
-
-    from pyspark_kmeans_spark.sources.bucketed import _WAREHOUSE, bucketed_name
-
     # EVERY parameter that changes index content is in the name (the
     # ensure_signature_table contract): both codebooks' geometry, both
     # fit seeds, AND the encoding target (raw-unit vs residual — round
     # 12) — a mismatch routes/encodes against the wrong centroids while
     # every downstream shape still typechecks.
     enc = "res" if residual else "c"
-    name = bucketed_name(
+    return artifact_path(
         f"pq_index_{enc}{n_cells}_is{ivf_seed}_m{m}_k{k}_s{seed}_bm{batch_mod}",
         sf_dir,
-        n_buckets=1,
     )
-    return os.path.join(_WAREHOUSE, name)
 
 
 def ensure_pq_index_table(
@@ -1433,10 +1384,6 @@ def ensure_pq_index_table(
     every artifact fold); it invalidates the session memo + Spark's file
     index under the path, so this handle is stamp-free only within the
     single-writer ingest contract the signature table also assumes."""
-    import os
-
-    from pyspark_kmeans_spark.functions.warehouse_memo import memo_get, memo_put
-
     path = _pq_index_path(
         sf_dir,
         n_cells=n_cells,
@@ -1447,10 +1394,8 @@ def ensure_pq_index_table(
         batch_mod=batch_mod,
         residual=residual,
     )
-    cached = memo_get(spark, path)
-    if cached is not None:
-        return cached
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+
+    def write(path: str) -> None:
         centroids, books = _pq_artifacts(
             spark, sf_dir, n_cells=n_cells, ivf_seed=ivf_seed, m=m, k=k,
             seed=seed, batch_mod=batch_mod, id_col=id_col, residual=residual,
@@ -1462,7 +1407,8 @@ def ensure_pq_index_table(
             id_col=id_col,
             residual=residual,
         ).write.mode("overwrite").parquet(path)
-    return memo_put(spark, path, spark.read.parquet(path))
+
+    return ensure_artifact(spark, path, write)
 
 
 def _pq_artifacts(
@@ -1518,23 +1464,9 @@ def append_pq_index(
     fold it into the index artifact.  Exactly-once is the CALLER's
     contract (a replayed batch duplicates index rows, which inflates
     candidate sets but never corrupts scores — duplicates carry the same
-    codes).  Invalidates the session memo and Spark's cached file
-    listing so later ensure() reads see the appended rows.
-
-    Torn-fold safety (ADVICE r11 #3): the batch is written to a staging
-    dir first, then its part files MOVE into the live index (uniquely
-    prefixed — same-filesystem renames).  A crash during the Spark write
-    leaves only an orphaned staging dir the index never reads (swept on
-    the next fold); the exposure window shrinks from a job-long append
-    under the live _SUCCESS marker to the rename loop of already-written
-    files."""
-    import glob
-    import os
-    import shutil
-    import uuid
-
-    from pyspark_kmeans_spark.functions.warehouse_memo import memo_invalidate
-
+    codes).  The fold is a staged commit (`fold_artifact`), which also
+    invalidates the session memo and Spark's cached file listing so
+    later ensure() reads see the appended rows."""
     path = _pq_index_path(
         sf_dir,
         n_cells=n_cells,
@@ -1553,67 +1485,11 @@ def append_pq_index(
         spark, sf_dir, n_cells=n_cells, ivf_seed=ivf_seed, m=m, k=k,
         seed=seed, batch_mod=batch_mod, id_col=id_col, residual=residual,
     )
-    # Sweep staging dirs orphaned by a crashed prior fold (safe under the
-    # single-writer contract every artifact fold already assumes).
-    for stale in glob.glob(path + ".staging-*"):
-        shutil.rmtree(stale, ignore_errors=True)
-    tag = uuid.uuid4().hex[:12]
-    staging = f"{path}.staging-{tag}"
-    pq_index_frame(
-        batch, centroids, books, id_col=id_col, residual=residual
-    ).write.mode("overwrite").parquet(staging)
-    for fn in os.listdir(staging):
-        if not fn.startswith("_") and not fn.startswith("."):
-            os.rename(
-                os.path.join(staging, fn),
-                os.path.join(path, f"fold-{tag}-{fn}"),
-            )
-    shutil.rmtree(staging, ignore_errors=True)
-    memo_invalidate(spark, path)
-    spark.catalog.refreshByPath(path)
-
-
-def _pq_state_paths(
-    sf_dir: str,
-    *,
-    n_cells: int = 16,
-    ivf_seed: int = 1,
-    m: int = PQ_SUBSPACES,
-    k: int = PQ_CODES,
-    seed: int = PQ_SEED,
-    batch_mod: int = IVF_BATCH_MOD,
-    residual: bool = True,
-) -> list[str]:
-    """Every warehouse artifact the residual-IVFADC lifecycle writes for
-    an sf_dir — (IVF codebook, residual PQ codebooks, index) — so scratch
-    lifecycles (checks.pq_index_update_check) can clean up by the SAME
-    name derivation the builders use (the _graph_state_paths pattern)."""
-    import os
-
-    from pyspark_kmeans_spark.sources.bucketed import _WAREHOUSE, bucketed_name
-
-    ivf = os.path.join(
-        _WAREHOUSE,
-        bucketed_name(
-            f"ivf_codebook_m{batch_mod}_s{ivf_seed}", sf_dir, n_buckets=n_cells
-        ),
+    fold_artifact(
+        spark,
+        path,
+        pq_index_frame(batch, centroids, books, id_col=id_col, residual=residual),
     )
-    book = "pq_resbook_c{0}_is{1}_m{2}_k{3}_s{4}_bm{5}" if residual else (
-        "pq_codebook_m{2}_k{3}_s{4}_bm{5}"
-    )
-    books = os.path.join(
-        _WAREHOUSE,
-        bucketed_name(
-            book.format(n_cells, ivf_seed, m, k, seed, batch_mod),
-            sf_dir,
-            n_buckets=1,
-        ),
-    )
-    idx = _pq_index_path(
-        sf_dir, n_cells=n_cells, ivf_seed=ivf_seed, m=m, k=k, seed=seed,
-        batch_mod=batch_mod, residual=residual,
-    )
-    return [ivf, books, idx]
 
 
 def pq_topk(

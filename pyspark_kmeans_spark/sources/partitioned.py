@@ -16,14 +16,16 @@ tests/test_partitioned.py pins the PartitionFilters plan shape.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark_kmeans_spark.functions.exact import decimal_sum
-from pyspark_kmeans_spark.sources.bucketed import _WAREHOUSE, bucketed_name
+from pyspark_kmeans_spark.functions.warehouse_memo import (
+    artifact_path,
+    ensure_artifact,
+)
 from pyspark_kmeans_spark.sources.tables import load_table
 
 
@@ -32,22 +34,17 @@ def ensure_month_partitioned_orders(
 ) -> DataFrame:
     """Materialize (once per sf_dir) orders partitioned by order month and
     return it as a DataFrame whose month filters prune at the listing."""
-    # Reuse bucketed_name's (path-hash, leaf) cache key discipline; the
-    # "_b" suffix becomes a layout tag instead of a bucket count.
-    name = bucketed_name("orders_bymonth", sf_dir, n_buckets=0)
-    path = os.path.join(_WAREHOUSE, name)
-    marker = os.path.join(path, "_SUCCESS")
-    if not os.path.exists(marker):
-        (
-            load_table(spark, sf_dir, "orders")
-            .withColumn(
-                "o_month", F.date_format("o_orderdate", "yyyy-MM")
-            )
-            .write.mode("overwrite")
-            .partitionBy("o_month")
-            .parquet(path)
-        )
-    return spark.read.parquet(path)
+    # The "_b" suffix of the artifact name is a layout tag here, not a
+    # bucket count.
+    return ensure_artifact(
+        spark,
+        artifact_path("orders_bymonth", sf_dir, n_buckets=0),
+        lambda path: load_table(spark, sf_dir, "orders")
+        .withColumn("o_month", F.date_format("o_orderdate", "yyyy-MM"))
+        .write.mode("overwrite")
+        .partitionBy("o_month")
+        .parquet(path),
+    )
 
 
 def q_partitioned_month_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:

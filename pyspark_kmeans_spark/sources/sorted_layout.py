@@ -21,14 +21,16 @@ so the window predicate can touch at most ~window/total of the files.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark_kmeans_spark.functions.exact import decimal_sum
-from pyspark_kmeans_spark.sources.bucketed import _WAREHOUSE, bucketed_name
+from pyspark_kmeans_spark.functions.warehouse_memo import (
+    artifact_path,
+    ensure_artifact,
+)
 from pyspark_kmeans_spark.sources.tables import load_table
 
 SORT_FILES = 16  # layout-time range partitions ≈ files; sized so each file
@@ -40,18 +42,15 @@ def ensure_shipdate_sorted_lineitem(
 ) -> DataFrame:
     """Materialize (once per sf_dir) lineitem range-clustered on l_shipdate
     and return it; range predicates on shipdate then skip on footer stats."""
-    name = bucketed_name("lineitem_byship", sf_dir, n_buckets=SORT_FILES)
-    path = os.path.join(_WAREHOUSE, name)
-    marker = os.path.join(path, "_SUCCESS")
-    if not os.path.exists(marker):
-        (
-            load_table(spark, sf_dir, "lineitem")
-            .repartitionByRange(SORT_FILES, "l_shipdate")
-            .sortWithinPartitions("l_shipdate")
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-    return spark.read.parquet(path)
+    return ensure_artifact(
+        spark,
+        artifact_path("lineitem_byship", sf_dir, n_buckets=SORT_FILES),
+        lambda path: load_table(spark, sf_dir, "lineitem")
+        .repartitionByRange(SORT_FILES, "l_shipdate")
+        .sortWithinPartitions("l_shipdate")
+        .write.mode("overwrite")
+        .parquet(path),
+    )
 
 
 def q_sorted_shipdate_window(spark: SparkSession, sf_dir: str) -> DataFrame:

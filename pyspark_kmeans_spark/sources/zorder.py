@@ -31,14 +31,16 @@ layout for any fact table with two independent selective predicate columns.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark_kmeans_spark.functions.exact import decimal_sum
-from pyspark_kmeans_spark.sources.bucketed import _WAREHOUSE, bucketed_name
+from pyspark_kmeans_spark.functions.warehouse_memo import (
+    artifact_path,
+    ensure_artifact,
+)
 from pyspark_kmeans_spark.sources.tables import load_table
 
 Z_BITS = 8  # 256 rank buckets per dimension -> 16-bit z-value
@@ -74,10 +76,8 @@ def ensure_zordered_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materialize (once per sf_dir) orders z-ordered on
     (o_custkey, o_orderdate) and return it; point/range predicates on
     EITHER column then skip files on footer stats."""
-    name = bucketed_name("orders_zorder", sf_dir, n_buckets=Z_FILES)
-    path = os.path.join(_WAREHOUSE, name)
-    marker = os.path.join(path, "_SUCCESS")
-    if not os.path.exists(marker):
+
+    def write(path: str) -> None:
         orders = load_table(spark, sf_dir, "orders")
         days = F.datediff(F.col("o_orderdate"), F.lit(DATE_EPOCH))
         bounds = orders.agg(
@@ -100,7 +100,10 @@ def ensure_zordered_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite")
             .parquet(path)
         )
-    return spark.read.parquet(path)
+
+    return ensure_artifact(
+        spark, artifact_path("orders_zorder", sf_dir, n_buckets=Z_FILES), write
+    )
 
 
 # Static slice literals (must match the oracle verbatim): a fixed customer

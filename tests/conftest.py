@@ -24,6 +24,19 @@ def sf_dir():
 
 
 @pytest.fixture
+def tmp_sf(spark, tmp_path):
+    """An empty scratch corpus dir; every warehouse artifact built from it
+    is dropped on teardown, so scratch corpora leave nothing behind in
+    the checkout's spark-warehouse/."""
+    from pyspark_kmeans_spark.functions.warehouse_gc import drop_artifacts
+
+    d = str(tmp_path / "sf")
+    os.makedirs(d)
+    yield d
+    drop_artifacts(spark, d)
+
+
+@pytest.fixture
 def no_cache_leak(spark):
     """Fails the test if it leaves a persisted RDD or a cache-manager entry
     behind that was not there when it started."""

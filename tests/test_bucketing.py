@@ -192,15 +192,18 @@ def test_gc_warehouse_dry_run_lists_then_delete_spares_live(tmp_path):
     # every live artifact in production.
     live = wh / bucketed_name("doc_sigs_m5_s7", live_sf, n_buckets=64)
     dead = wh / bucketed_name("ivf_codebook_m5_s1", dead_sf, n_buckets=16)
+    # A crashed fold's orphaned staging dir follows its artifact's tag.
+    live_staging = wh / f"{live.name}.staging-0123456789ab"
+    dead_staging = wh / f"{dead.name}.staging-0123456789ab"
     other = wh / "metastore_db"
-    for d in (live, dead, other):
+    for d in (live, dead, live_staging, dead_staging, other):
         d.mkdir()
     victims = gc_warehouse([live_sf], warehouse=str(wh))
-    assert victims == [str(dead)]
+    assert victims == [str(dead), str(dead_staging)]
     assert dead.exists(), "dry run must not delete"
     gc_warehouse([live_sf], dry_run=False, warehouse=str(wh))
-    assert not dead.exists()
-    assert live.exists() and other.exists()
+    assert not dead.exists() and not dead_staging.exists()
+    assert live.exists() and live_staging.exists() and other.exists()
 
 
 def test_gc_pattern_requires_bucketed_infix(tmp_path):

@@ -214,9 +214,7 @@ def test_mine_incremental_edges_plan_is_batch_adjacent(spark):
 # slow (10 s): two-fold pair-table maintenance vs full re-mine; the
 # same equality is driver-gated every round (pairs_update_check).
 @pytest.mark.slow
-def test_append_pairs_table_two_folds_equal_full_remine(
-    spark, sf_dir, tmp_path
-):
+def test_append_pairs_table_two_folds_equal_full_remine(spark, sf_dir, tmp_sf):
     """Incremental pair-table maintenance (round 9): after folding TWO
     successive batches into a pair table built on the 60% corpus, the
     artifact must equal a full re-mine of the union corpus row-for-row —
@@ -226,12 +224,10 @@ def test_append_pairs_table_two_folds_equal_full_remine(
     frequencies, so an ordering-dependence bug in the prefix-lemma
     application cannot cancel out."""
     import os
-    import shutil
 
     from pyspark_kmeans_spark.operators.dedup import jaccard_pairs
     from pyspark_kmeans_spark.operators.graph import (
         GRAPH_PAIR_THRESHOLD,
-        _graph_state_paths,
         append_pairs_table,
     )
     from pyspark_kmeans_spark.sources.tables import load_table
@@ -240,28 +236,21 @@ def test_append_pairs_table_two_folds_equal_full_remine(
     corpus = docs.filter((F.col("doc_id") % 5 != 0) & (F.col("doc_id") % 5 != 1))
     batch1 = docs.filter(F.col("doc_id") % 5 == 0)
     batch2 = docs.filter(F.col("doc_id") % 5 == 1)
-    scratch_sf = str(tmp_path / "sf")
-    os.makedirs(scratch_sf)
     corpus.write.mode("overwrite").parquet(
-        os.path.join(scratch_sf, "documents.parquet")
+        os.path.join(tmp_sf, "documents.parquet")
     )
-    arts = _graph_state_paths(scratch_sf, GRAPH_PAIR_THRESHOLD)
-    try:
-        append_pairs_table(spark, scratch_sf, batch1)
-        folded = append_pairs_table(spark, scratch_sf, batch2)
-        got = {(r["doc_a"], r["doc_b"]) for r in folded.collect()}
-        want = {
-            (r["doc_a"], r["doc_b"])
-            for r in jaccard_pairs(docs, threshold=GRAPH_PAIR_THRESHOLD)
-            .select("doc_a", "doc_b")
-            .collect()
-        }
-        assert got == want and got
-        # Append-only discipline: no duplicate edges across folds.
-        assert folded.count() == len(got)
-    finally:
-        for a in arts:
-            shutil.rmtree(a, ignore_errors=True)
+    append_pairs_table(spark, tmp_sf, batch1)
+    folded = append_pairs_table(spark, tmp_sf, batch2)
+    got = {(r["doc_a"], r["doc_b"]) for r in folded.collect()}
+    want = {
+        (r["doc_a"], r["doc_b"])
+        for r in jaccard_pairs(docs, threshold=GRAPH_PAIR_THRESHOLD)
+        .select("doc_a", "doc_b")
+        .collect()
+    }
+    assert got == want and got
+    # Append-only discipline: no duplicate edges across folds.
+    assert folded.count() == len(got)
 
 
 def test_cross_source_pairs_normalizes_orientation(spark):

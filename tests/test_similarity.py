@@ -428,7 +428,7 @@ def test_refresh_codebook_rebuilds_and_invalidates_session_memo(
 
 
 def test_drift_loop_end_to_end_check_flips_then_refresh_heals(
-    spark, tmp_path
+    spark, tmp_path, tmp_sf
 ):
     """The full 100 TB drift loop on a scratch sf_dir: fit the codebook on
     the original corpus, mutate the corpus in place (the production
@@ -447,8 +447,6 @@ def test_drift_loop_end_to_end_check_flips_then_refresh_heals(
     )
 
     sf = "/root/testdata/sf0.001"
-    tmp_sf = str(tmp_path / "drift_sf")
-    os.makedirs(tmp_sf)
     # testdata tables are single parquet FILES; Spark writes directories —
     # load_table reads either shape.
     shutil.copy(f"{sf}/embeddings.parquet", f"{tmp_sf}/embeddings.parquet")
@@ -486,7 +484,7 @@ def test_drift_loop_end_to_end_check_flips_then_refresh_heals(
 
 
 def test_relative_drift_gate_catches_what_absolute_gate_misses(
-    spark, tmp_path
+    spark, tmp_path, tmp_sf
 ):
     """VERDICT r7 missing #4: the absolute IVF_SKEW_LIMIT (8.0) only
     catches severe collapse.  Build a 16-blob corpus whose fit is
@@ -495,7 +493,6 @@ def test_relative_drift_gate_catches_what_absolute_gate_misses(
     into blob 0 IN PLACE: current ratio 5.0 still passes the absolute
     gate, but is 5× the artifact's fit-time ratio — only the new
     relative gate (IVF_REL_DRIFT_LIMIT = 3.0) fires."""
-    import os
     import shutil
 
     from pyspark_kmeans_spark.operators.checks import q_codebook_check
@@ -503,8 +500,6 @@ def test_relative_drift_gate_catches_what_absolute_gate_misses(
         ensure_codebook_stats,
     )
 
-    tmp_sf = str(tmp_path / "mdrift_sf")
-    os.makedirs(tmp_sf)
     dim = 64
 
     def blob_vec(b):
@@ -614,7 +609,7 @@ def test_codebook_update_check_green_and_reclaims_scratch(spark):
     assert not glob.glob("spark-warehouse/ivf_codebook_*_bucketed_sf_*")
 
 
-def test_update_codebook_minibatch_matches_closed_form(spark, tmp_path):
+def test_update_codebook_minibatch_matches_closed_form(spark, tmp_sf):
     """The mini-batch update step, pinned against a Python mirror: route
     each batch point to its nearest persisted centroid in unit space,
     fold c' = (n*c + sum_u)/(n + m) per cell, leave untouched cells
@@ -629,8 +624,6 @@ def test_update_codebook_minibatch_matches_closed_form(spark, tmp_path):
     )
     from pyspark_kmeans_spark.sources.bucketed import _WAREHOUSE, bucketed_name
 
-    tmp_sf = str(tmp_path / "mb_sf")
-    os.makedirs(tmp_sf)
     # Two tight clusters around e0 and e1; corpus split (vec_id % 5 != 0)
     # covers both; the batch (vec_id % 5 == 0) sits near cluster e0.
     rows = []
@@ -893,12 +886,11 @@ def test_residual_index_frame_codes_are_argmin_over_residual(spark):
 # slow (30 s): builds a full PQ index from scratch; fold==rebuild is
 # driver-gated every round (pq_index_update_check).
 @pytest.mark.slow
-def test_pq_index_table_matches_direct_and_indexed_query(spark, tmp_path):
+def test_pq_index_table_matches_direct_and_indexed_query(spark, tmp_sf):
     """The persisted IVFADC index equals the direct pq_index_frame
     computation row-for-row, and ivf_pq_topk over the artifact is
     bit-identical to the self-contained form — persistence is pure
     layout, never semantics."""
-    import os
     import shutil
 
     from pyspark_kmeans_spark.operators.similarity import (
@@ -911,8 +903,6 @@ def test_pq_index_table_matches_direct_and_indexed_query(spark, tmp_path):
     )
 
     sf = "/root/testdata/sf0.001"
-    tmp_sf = str(tmp_path / "pqidx_sf")
-    os.makedirs(tmp_sf)
     shutil.copy(f"{sf}/embeddings.parquet", f"{tmp_sf}/embeddings.parquet")
     emb = spark.read.parquet(f"{tmp_sf}/embeddings.parquet")
     centroids = ensure_codebook_table(spark, tmp_sf, n_cells=16, seed=1)
@@ -960,12 +950,11 @@ def test_pq_index_update_check_all_zero(spark):
 
 # slow (23 s): PQ index build + append fold (fit-priced).
 @pytest.mark.slow
-def test_pq_index_append_folds_batch(spark, tmp_path):
+def test_pq_index_append_folds_batch(spark, tmp_sf):
     """append_pq_index routes+encodes ONLY the batch against the persisted
     codebooks and the appended artifact (visible through a fresh ensure —
     the memo is invalidated) equals index(corpus) ∪ index(batch) computed
     directly; exactly-once is the caller's contract."""
-    import os
     import shutil
 
     from pyspark.sql import functions as F
@@ -979,8 +968,6 @@ def test_pq_index_append_folds_batch(spark, tmp_path):
     )
 
     sf = "/root/testdata/sf0.001"
-    tmp_sf = str(tmp_path / "pqapp_sf")
-    os.makedirs(tmp_sf)
     shutil.copy(f"{sf}/embeddings.parquet", f"{tmp_sf}/embeddings.parquet")
     emb = spark.read.parquet(f"{tmp_sf}/embeddings.parquet")
     ensure_pq_index_table(spark, tmp_sf)
