@@ -471,12 +471,11 @@ def main() -> None:
         ensure_codebook_table(spark, d)
         ensure_pairs_table(spark, d)
         ensure_pq_codebook(spark, d)
-        # round 12: the residual-encoded IVFADC artifacts the registered
-        # path now reads (the raw-unit CODEBOOK above stays warmed for
-        # ann_pq_topk, the ADC correctness baseline; the raw-unit INDEX
-        # no longer has a registered consumer and is not built)
+        # the residual-encoded IVFADC artifacts the registered path reads
+        # (the raw-unit CODEBOOK above is warmed for ann_pq_topk, the ADC
+        # correctness baseline)
         ensure_residual_pq_codebook(spark, d)
-        ensure_pq_index_table(spark, d, residual=True)
+        ensure_pq_index_table(spark, d)
     spark.catalog.clearCache()
     jvm_pid = _jvm_pid(spark)
 

@@ -455,7 +455,7 @@ def q_ivfpq_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     centroids = ensure_codebook_table(spark, sf_dir, n_cells=16, seed=1)
     books = ensure_residual_pq_codebook(spark, sf_dir)
-    idx = ensure_pq_index_table(spark, sf_dir, residual=True)
+    idx = ensure_pq_index_table(spark, sf_dir)
     hits = exact.join(
         ivf_pq_topk(
             emb,
@@ -465,7 +465,6 @@ def q_ivfpq_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
             k=ANN_CHECK_K,
             n_probe_cells=IVFPQ_PROBE_CELLS,
             index=idx,
-            residual=True,
         ).select(*key),
         on=key,
         how="left_semi",
@@ -873,7 +872,8 @@ def q_daily_ingest_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitted.count()
     docs = _t(spark, sf_dir, "documents")
     batch = docs.filter(F.col("doc_id") % DAILY_BATCH_MOD == 0)
-    # Exact-digest kept set (the daily_ingest stage-1 spelling).
+    # Exact-digest kept set, re-derived with a window keeper (independent
+    # of the aggregate keeper the flagships share).
     fresh = batch.select(
         "doc_id", "lang", F.md5("text").alias("digest")
     ).join(ensure_digest_table(spark, sf_dir), on="digest", how="left_anti")
@@ -920,9 +920,15 @@ def q_daily_ingest_check(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_docs").alias("_ed"),
             F.sum("n_tokens").cast("bigint").alias("_et"),
         )
+        .withColumnRenamed("lang", "_el")
     )
+    # Null-safe: the flagship reports a NULL-lang group like any other.
     n_total_mismatch = (
-        emitted.join(F.broadcast(expected), on="lang", how="left")
+        emitted.join(
+            F.broadcast(expected),
+            on=F.col("lang").eqNullSafe(F.col("_el")),
+            how="left",
+        )
         .agg(
             F.sum(
                 F.when(
@@ -1784,9 +1790,8 @@ def q_pq_index_update_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     artifacts.  Union == the full embeddings table, so `n_batch` and
     `n_index` are SQL-anchored: `n_missing` = rows the fold lost,
     `n_extra` = rows it invented/duplicated, `n_mismatch` = rows whose
-    cell or codes drifted (a fold encoding against the wrong codebooks —
-    the raw-unit/residual confusion `_pq_index_path`'s name guards) —
-    all must be 0.
+    cell or codes drifted (a fold encoding against the wrong codebooks)
+    — all must be 0.
 
     Plan: the fold is the batch-linear path under test; the rebuild and
     the audit join are check-only costs (the codebook_update_check
@@ -1809,12 +1814,12 @@ def q_pq_index_update_check(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(scratch_sf, "embeddings.parquet")
         )
         n_batch = batch.count()
-        ensure_pq_index_table(spark, scratch_sf, residual=True)
-        append_pq_index(spark, scratch_sf, batch, residual=True)
-        folded = ensure_pq_index_table(spark, scratch_sf, residual=True)
+        ensure_pq_index_table(spark, scratch_sf)
+        append_pq_index(spark, scratch_sf, batch)
+        folded = ensure_pq_index_table(spark, scratch_sf)
         centroids = ensure_codebook_table(spark, scratch_sf, n_cells=16, seed=1)
         books = ensure_residual_pq_codebook(spark, scratch_sf)
-        expected = pq_index_frame(emb, centroids, books, residual=True).select(
+        expected = pq_index_frame(emb, centroids, books).select(
             "vec_id",
             F.col("cell").alias("_ce"),
             F.col("codes").alias("_de"),

@@ -948,115 +948,7 @@ def token_budget_selection(
     NULL scores (empty text) bucket under a -1.0 sentinel so they sort
     after every real class on both engines (oracle: DESC NULLS LAST) and
     join null-safely."""
-    from pyspark_kmeans_spark.functions.persist import registered_persist
-    from pyspark_kmeans_spark.operators.text import with_quality
-
-    scored = registered_persist(
-        with_quality(docs)
-        .select(
-            "doc_id",
-            "lang",
-            F.coalesce(F.col("quality_score"), F.lit(-1.0)).alias("_skey"),
-            F.col("n_tokens").cast("long").alias("n_tokens"),
-        )
-    )
-    budget = scored.agg(
-        F.floor(F.lit(fraction) * F.sum("n_tokens"))
-        .cast("long")
-        .alias("budget_tokens")
-    )
-    class_w = Window.orderBy(F.desc("_skey")).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    classes = (
-        scored.groupBy("_skey")
-        .agg(F.sum("n_tokens").alias("_ctok"))
-        .withColumn(
-            "_before",
-            F.coalesce(F.sum("_ctok").over(class_w), F.lit(0).cast("long")),
-        )
-        .crossJoin(F.broadcast(budget))
-    )
-    kept_whole = scored.join(
-        F.broadcast(
-            classes.filter(
-                F.col("_before") + F.col("_ctok") <= F.col("budget_tokens")
-            ).select("_skey")
-        ),
-        on="_skey",
-    ).select("lang", "n_tokens")
-    boundary = classes.filter(
-        (F.col("_before") < F.col("budget_tokens"))
-        & (F.col("_before") + F.col("_ctok") > F.col("budget_tokens"))
-    ).select("_skey", "_before", "budget_tokens")
-    # Two-level strictly-preceding cumsum over the boundary class (see
-    # the docstring's degenerate-tie-class paragraph): contiguous id
-    # buckets bound every window task at 2^20 rows even when the class
-    # is the whole corpus.  At most one class reaches here, so the
-    # bucket-offset window needs no partition key.
-    bdocs = scored.join(F.broadcast(boundary), on="_skey").withColumn(
-        "_bkt", F.shiftright("doc_id", 20)
-    )
-    bkt_w = Window.orderBy(F.asc("_bkt")).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = (
-        bdocs.groupBy("_bkt")
-        .agg(F.sum("n_tokens").alias("_btok"))
-        .withColumn(
-            "_boff",
-            F.coalesce(F.sum("_btok").over(bkt_w), F.lit(0).cast("long")),
-        )
-        .select("_bkt", "_boff")
-    )
-    in_bkt_w = (
-        Window.partitionBy("_bkt")
-        .orderBy(F.asc("doc_id"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    kept_boundary = (
-        bdocs.join(F.broadcast(offsets), on="_bkt")
-        .withColumn(
-            "_inb",
-            F.col("_boff")
-            + F.coalesce(
-                F.sum("n_tokens").over(in_bkt_w), F.lit(0).cast("long")
-            ),
-        )
-        .filter(F.col("_before") + F.col("_inb") < F.col("budget_tokens"))
-        .select("lang", "n_tokens")
-    )
-    kept = kept_whole.unionByName(kept_boundary)
-    totals = scored.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_tokens").alias("total_tokens"),
-    )
-    kept_agg = kept.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_kept"),
-        F.sum("n_tokens").alias("kept_tokens"),
-    )
-    # eqNullSafe on the report group key (ADVICE r8 #1): the oracle GROUPs
-    # BY the nullable lang column, so a kept NULL-lang doc must land in its
-    # own report row — a null-unsafe equi-join would zero its n_kept and
-    # desync from the oracle.  Same rule score_percentiles already applies.
-    kept_side = kept_agg.select(
-        F.col("lang").alias("_kl"), "n_kept", "kept_tokens"
-    )
-    return (
-        totals.join(
-            kept_side, on=F.col("lang").eqNullSafe(F.col("_kl")), how="left"
-        )
-        .select(
-            "lang",
-            "n_docs",
-            F.coalesce("n_kept", F.lit(0).cast("long")).alias("n_kept"),
-            "total_tokens",
-            F.coalesce("kept_tokens", F.lit(0).cast("long")).alias(
-                "kept_tokens"
-            ),
-        )
-        .crossJoin(F.broadcast(budget))
-    )
+    return _token_budget(docs, fraction, [])
 
 
 def token_budget_per_lang(
@@ -1083,6 +975,43 @@ def token_budget_per_lang(
     group key of pathological cardinality (millions of groups) the
     semi-joins would need shuffle form — lang cardinality is bounded by
     the language inventory, so the broadcast contract holds here."""
+    return _token_budget(docs, fraction, ["lang"])
+
+
+def _key_join(
+    left: DataFrame,
+    right: DataFrame,
+    keys: list[str],
+    *,
+    exact: tuple[str, ...] = (),
+    how: str = "inner",
+) -> DataFrame:
+    """left ⋈ broadcast(right): null-safe on `keys`, plain equality on
+    `exact`; with neither there is no condition, i.e. a cross join.
+    right's join columns are renamed apart for the condition and dropped
+    after it, so the output carries left's copies only."""
+    on_cols = [*keys, *exact]
+    r = right.select(
+        *[
+            F.col(c).alias("_r" + c) if c in on_cols else F.col(c)
+            for c in right.columns
+        ]
+    )
+    conds = [F.col(c).eqNullSafe(F.col("_r" + c)) for c in keys] + [
+        F.col(c) == F.col("_r" + c) for c in exact
+    ]
+    return left.join(F.broadcast(r), on=conds or None, how=how).drop(
+        *["_r" + c for c in on_cols]
+    )
+
+
+def _token_budget(docs: DataFrame, fraction: float, keys: list[str]) -> DataFrame:
+    """The histogram-CDF selection behind both public faces: one budget
+    floor(fraction × group tokens) per `keys` group ([] → one global
+    budget), the greedy (quality DESC, doc_id ASC) rule within each
+    group, the per-lang report.  Every window partitions by `keys` and
+    every budget-side join keys on them null-safely (`_key_join`), so a
+    NULL-lang group budgets like any other."""
     from pyspark_kmeans_spark.functions.persist import registered_persist
     from pyspark_kmeans_spark.operators.text import with_quality
 
@@ -1094,77 +1023,64 @@ def token_budget_per_lang(
             F.col("n_tokens").cast("long").alias("n_tokens"),
         )
     )
-    budgets = scored.groupBy("lang").agg(
+    budgets = scored.groupBy(*keys).agg(
         F.floor(F.lit(fraction) * F.sum("n_tokens"))
         .cast("long")
         .alias("budget_tokens")
     )
-    class_w = Window.partitionBy("lang").orderBy(F.desc("_skey")).rowsBetween(
+    class_w = Window.partitionBy(*keys).orderBy(F.desc("_skey")).rowsBetween(
         Window.unboundedPreceding, -1
     )
-    bud_side = budgets.select(F.col("lang").alias("_bl"), "budget_tokens")
-    classes = (
-        scored.groupBy("lang", "_skey")
+    classes = _key_join(
+        scored.groupBy(*keys, "_skey")
         .agg(F.sum("n_tokens").alias("_ctok"))
         .withColumn(
             "_before",
             F.coalesce(F.sum("_ctok").over(class_w), F.lit(0).cast("long")),
-        )
-        .join(
-            F.broadcast(bud_side), on=F.col("lang").eqNullSafe(F.col("_bl"))
-        )
-        .drop("_bl")
+        ),
+        budgets,
+        keys,
     )
-    whole = classes.filter(
-        F.col("_before") + F.col("_ctok") <= F.col("budget_tokens")
-    ).select(F.col("lang").alias("_wl"), F.col("_skey").alias("_wk"))
-    kept_whole = scored.join(
-        F.broadcast(whole),
-        on=F.col("lang").eqNullSafe(F.col("_wl"))
-        & (F.col("_skey") == F.col("_wk")),
+    kept_whole = _key_join(
+        scored,
+        classes.filter(
+            F.col("_before") + F.col("_ctok") <= F.col("budget_tokens")
+        ).select(*keys, "_skey"),
+        keys,
+        exact=("_skey",),
         how="left_semi",
     ).select("lang", "n_tokens")
     boundary = classes.filter(
         (F.col("_before") < F.col("budget_tokens"))
         & (F.col("_before") + F.col("_ctok") > F.col("budget_tokens"))
-    ).select(
-        F.col("lang").alias("_bl2"),
-        F.col("_skey").alias("_bk"),
-        "_before",
-        "budget_tokens",
+    ).select(*keys, "_skey", "_before", "budget_tokens")
+    # Two-level strictly-preceding cumsum over each group's boundary class
+    # (see token_budget_selection's degenerate-tie-class paragraph):
+    # contiguous id buckets bound every window task at 2^20 rows even when
+    # the class is the whole group.  At most one class per group reaches
+    # here, so the bucket-offset window needs no key beyond the group's.
+    bdocs = _key_join(scored, boundary, keys, exact=("_skey",)).withColumn(
+        "_bkt", F.shiftright("doc_id", 20)
     )
-    bdocs = scored.join(
-        F.broadcast(boundary),
-        on=F.col("lang").eqNullSafe(F.col("_bl2"))
-        & (F.col("_skey") == F.col("_bk")),
-    ).withColumn("_bkt", F.shiftright("doc_id", 20))
-    bkt_w = Window.partitionBy("lang").orderBy(F.asc("_bkt")).rowsBetween(
+    bkt_w = Window.partitionBy(*keys).orderBy(F.asc("_bkt")).rowsBetween(
         Window.unboundedPreceding, -1
     )
     offsets = (
-        bdocs.groupBy("lang", "_bkt")
+        bdocs.groupBy(*keys, "_bkt")
         .agg(F.sum("n_tokens").alias("_btok"))
         .withColumn(
             "_boff",
             F.coalesce(F.sum("_btok").over(bkt_w), F.lit(0).cast("long")),
         )
-        .select(
-            F.col("lang").alias("_ol"),
-            F.col("_bkt").alias("_obkt"),
-            "_boff",
-        )
+        .select(*keys, "_bkt", "_boff")
     )
     in_bkt_w = (
-        Window.partitionBy("lang", "_bkt")
+        Window.partitionBy(*keys, "_bkt")
         .orderBy(F.asc("doc_id"))
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     kept_boundary = (
-        bdocs.join(
-            F.broadcast(offsets),
-            on=F.col("lang").eqNullSafe(F.col("_ol"))
-            & (F.col("_bkt") == F.col("_obkt")),
-        )
+        _key_join(bdocs, offsets, keys, exact=("_bkt",))
         .withColumn(
             "_inb",
             F.col("_boff")
@@ -1184,26 +1100,23 @@ def token_budget_per_lang(
         F.count(F.lit(1)).alias("n_kept"),
         F.sum("n_tokens").alias("kept_tokens"),
     )
+    # eqNullSafe on the report group key (ADVICE r8 #1): the oracle GROUPs
+    # BY the nullable lang column, so a kept NULL-lang doc must land in its
+    # own report row — a null-unsafe equi-join would zero its n_kept and
+    # desync from the oracle.  Same rule score_percentiles already applies.
     kept_side = kept_agg.select(
         F.col("lang").alias("_kl"), "n_kept", "kept_tokens"
     )
-    return (
-        totals.join(
-            kept_side, on=F.col("lang").eqNullSafe(F.col("_kl")), how="left"
-        )
-        .join(
-            F.broadcast(bud_side), on=F.col("lang").eqNullSafe(F.col("_bl"))
-        )
-        .select(
-            "lang",
-            "n_docs",
-            F.coalesce("n_kept", F.lit(0).cast("long")).alias("n_kept"),
-            "total_tokens",
-            F.coalesce("kept_tokens", F.lit(0).cast("long")).alias(
-                "kept_tokens"
-            ),
-            "budget_tokens",
-        )
+    report = totals.join(
+        kept_side, on=F.col("lang").eqNullSafe(F.col("_kl")), how="left"
+    )
+    return _key_join(report, budgets, keys).select(
+        "lang",
+        "n_docs",
+        F.coalesce("n_kept", F.lit(0).cast("long")).alias("n_kept"),
+        "total_tokens",
+        F.coalesce("kept_tokens", F.lit(0).cast("long")).alias("kept_tokens"),
+        "budget_tokens",
     )
 
 

@@ -408,28 +408,6 @@ def near_dedup_kept(
 # --------------------------------------------------------------------------
 
 
-def minhash_signatures(
-    df: DataFrame,
-    *,
-    num_hashes: int = 32,
-    seed: int = LSH_SEED,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """(id, sig: array<bigint>) — minhash over distinct tokens.
-
-    One xxhash64 per token, then `num_hashes` universal hashes
-    (a*h+b mod 2^31-1, matching the 31-bit folded domain — see the module
-    comment on why a wider modulus destroys recall) folded with array_min
-    — all JVM expressions, zero
-    Python per row, no shuffle.
-    """
-    base = hashed_tokens_col(text_col)
-    return df.select(
-        F.col(id_col), _sig_col(base, num_hashes=num_hashes, seed=seed).alias("sig")
-    )
-
-
 def _sig_col(hashed_tokens, *, num_hashes: int, seed: int) -> F.Column:
     """MinHash signature expression over a bigint token-hash array."""
     rng = random.Random(seed)

@@ -49,7 +49,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark_kmeans_spark.functions.persist import (
@@ -114,29 +114,37 @@ def ensure_lang_stats_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_daily_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    release_persisted()
-    docs = load_table(spark, sf_dir, "documents")
+def _digest_kept(spark: SparkSession, sf_dir: str, batch: DataFrame) -> DataFrame:
+    """Stage 1 of every daily-ingest form — exact dedup: corpus digests
+    (the persisted digest table) kill batch docs; within the batch the
+    lowest doc_id per digest survives.  `batch` carries doc_id and a
+    `digest` column; the survivors keep every other batch column.
+
+    The keeper is an aggregate argmin (min_by over the row struct), the
+    `dedup.exact_dedup` convention: partial aggregation bounds the
+    per-digest memory, where a window over an unbounded digest group
+    would sort the whole group in one task."""
+    cols = [c for c in batch.columns if c != "digest"]
+    return (
+        batch.join(ensure_digest_table(spark, sf_dir), on="digest", how="left_anti")
+        .groupBy("digest")
+        .agg(F.min_by(F.struct(*cols), F.col("doc_id")).alias("_keep"))
+        .select("_keep.*")
+    )
+
+
+def _ingest_report(
+    spark: SparkSession,
+    sf_dir: str,
+    kept: DataFrame,
+    codebook: list[list[float]],
+) -> DataFrame:
+    """Stages 2–4 of `daily_ingest` and `daily_ingest_lsh` over the
+    accepted batch `kept` (doc_id, lang, _n_tok): route its embeddings to
+    `codebook` cells (map-side), roll it up per (lang, cell), merge its
+    per-lang partials into the persisted lang-stats state, and join the
+    rollup to the merged totals."""
     emb = load_table(spark, sf_dir, "embeddings")
-    batch = docs.filter(F.col("doc_id") % DAILY_BATCH_MOD == 0).select(
-        "doc_id",
-        "lang",
-        F.md5("text").alias("digest"),
-        F.size(F.split("text", " ")).alias("_n_tok"),
-    )
-    # 1. exact dedup: corpus digests kill batch docs; within the batch the
-    # lowest doc_id per digest survives (whole-partition window min — one
-    # digest shuffle).
-    fresh = batch.join(
-        ensure_digest_table(spark, sf_dir), on="digest", how="left_anti"
-    )
-    kept = registered_persist(
-        fresh.withColumn(
-            "_min", F.min("doc_id").over(Window.partitionBy("digest"))
-        )
-        .filter(F.col("doc_id") == F.col("_min"))
-        .drop("_min", "digest")
-    )
     # 2. route accepted docs' embeddings to codebook cells (map-side).
     routed = ivf_assign(
         emb.join(
@@ -144,7 +152,7 @@ def q_daily_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             on="vec_id",
             how="left_semi",
         ),
-        ingest_codebook(),
+        codebook,
     ).select(F.col("vec_id").alias("doc_id"), "cell")
     # 3. per-(lang, cell) bookkeeping of the accepted batch.
     rollup = (
@@ -168,9 +176,15 @@ def q_daily_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_docs").alias("total_docs"),
             F.sum("n_tokens").cast("bigint").alias("total_tokens"),
         )
+        .withColumnRenamed("lang", "_ml")
     )
     # merged is O(langs): broadcast the dimension side of the final join.
-    return rollup.join(F.broadcast(merged), on="lang").select(
+    # documents.lang is nullable and both groupBys keep a NULL-lang group,
+    # so the join is null-safe — an equi-join would drop accepted
+    # NULL-lang docs from the report without a trace.
+    return rollup.join(
+        F.broadcast(merged), on=F.col("lang").eqNullSafe(F.col("_ml"))
+    ).select(
         "lang",
         "cell",
         "batch_docs",
@@ -178,6 +192,22 @@ def q_daily_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "total_docs",
         "total_tokens",
     )
+
+
+def q_daily_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    release_persisted()
+    batch = (
+        load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % DAILY_BATCH_MOD == 0)
+        .select(
+            "doc_id",
+            "lang",
+            F.size(F.split("text", " ")).alias("_n_tok"),
+            F.md5("text").alias("digest"),
+        )
+    )
+    kept = registered_persist(_digest_kept(spark, sf_dir, batch))
+    return _ingest_report(spark, sf_dir, kept, ingest_codebook())
 
 
 def q_daily_ingest_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -214,7 +244,6 @@ def q_daily_ingest_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     release_persisted()
     docs = load_table(spark, sf_dir, "documents")
-    emb = load_table(spark, sf_dir, "embeddings")
     batch = docs.filter(F.col("doc_id") % DAILY_BATCH_MOD == 0)
     sigs = ensure_signature_table(spark, sf_dir)
     kept_ids = incremental_kept_against(sigs, batch, threshold=0.9)
@@ -230,43 +259,7 @@ def q_daily_ingest_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     codebook = ensure_codebook_table(
         spark, sf_dir, n_cells=INGEST_N_CELLS, seed=1, batch_mod=DAILY_BATCH_MOD
     )
-    routed = ivf_assign(
-        emb.join(
-            kept.select(F.col("doc_id").alias("vec_id")),
-            on="vec_id",
-            how="left_semi",
-        ),
-        codebook,
-    ).select(F.col("vec_id").alias("doc_id"), "cell")
-    rollup = (
-        kept.join(routed, on="doc_id")
-        .groupBy("lang", "cell")
-        .agg(
-            F.count(F.lit(1)).alias("batch_docs"),
-            F.sum("_n_tok").cast("bigint").alias("batch_tokens"),
-        )
-    )
-    delta = kept.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("_n_tok").alias("n_tokens"),
-    )
-    merged = (
-        ensure_lang_stats_table(spark, sf_dir)
-        .unionByName(delta)
-        .groupBy("lang")
-        .agg(
-            F.sum("n_docs").alias("total_docs"),
-            F.sum("n_tokens").cast("bigint").alias("total_tokens"),
-        )
-    )
-    return rollup.join(F.broadcast(merged), on="lang").select(
-        "lang",
-        "cell",
-        "batch_docs",
-        "batch_tokens",
-        "total_docs",
-        "total_tokens",
-    )
+    return _ingest_report(spark, sf_dir, kept, codebook)
 
 
 def trio_stage_marks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -331,17 +324,9 @@ def trio_stage_marks(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     base.count()  # feeds stage 1, the LSH semi-join and the marks join
-    # Stage 1 — exact digest vs the persisted digest table; within the
-    # batch the lowest id per digest wins (aggregate keeper, the round-9
-    # exact_dedup convention — never a window over an unbounded digest
-    # group).
+    # Stage 1 — exact digest vs the persisted digest table.
     kept1 = registered_persist(
-        base.join(
-            ensure_digest_table(spark, sf_dir), on="digest", how="left_anti"
-        )
-        .groupBy("digest")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
+        _digest_kept(spark, sf_dir, base.select("doc_id", "digest"))
     )
     kept1.count()
     # Stage 2 — MinHash-LSH vs the persisted signature table, on stage-1
@@ -386,7 +371,6 @@ def trio_stage_marks(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         centroids,
         books,
-        residual=True,
     ).select(F.col("vec_id").alias("doc_id"), F.col("cell").alias("_cell"))
     marks = base.select("doc_id", "lang", "_n_tok")
     for k, kept in (("_k1", kept1), ("_k2", kept2), ("_k3", kept3)):
@@ -502,7 +486,7 @@ def _ingest_oracle_sql() -> str:
         )
         SELECT r.lang, r.cell, r.batch_docs, r.batch_tokens,
                m.total_docs, m.total_tokens
-        FROM rollup r JOIN merged m ON r.lang = m.lang
+        FROM rollup r JOIN merged m ON r.lang IS NOT DISTINCT FROM m.lang
     """
 
 

@@ -1341,16 +1341,14 @@ def _pq_index_path(
     k: int,
     seed: int,
     batch_mod: int,
-    residual: bool = False,
 ) -> str:
     # EVERY parameter that changes index content is in the name (the
-    # ensure_signature_table contract): both codebooks' geometry, both
-    # fit seeds, AND the encoding target (raw-unit vs residual — round
-    # 12) — a mismatch routes/encodes against the wrong centroids while
-    # every downstream shape still typechecks.
-    enc = "res" if residual else "c"
+    # ensure_signature_table contract): both codebooks' geometry and both
+    # fit seeds — a mismatch routes/encodes against the wrong centroids
+    # while every downstream shape still typechecks.  The `res` tag names
+    # the encoding target (residuals, Jégou §V).
     return artifact_path(
-        f"pq_index_{enc}{n_cells}_is{ivf_seed}_m{m}_k{k}_s{seed}_bm{batch_mod}",
+        f"pq_index_res{n_cells}_is{ivf_seed}_m{m}_k{k}_s{seed}_bm{batch_mod}",
         sf_dir,
     )
 
@@ -1366,7 +1364,6 @@ def ensure_pq_index_table(
     seed: int = PQ_SEED,
     batch_mod: int = IVF_BATCH_MOD,
     id_col: str = "vec_id",
-    residual: bool = False,
 ) -> DataFrame:
     """The PERSISTED IVFADC index: (id, cell, codes) over the full
     embeddings table, built once per (sf_dir, parameters) and read
@@ -1377,13 +1374,13 @@ def ensure_pq_index_table(
     a corpus encode.
 
     Build composes the two persisted codebook artifacts (IVF centroids
-    for the cell; raw-unit or RESIDUAL subspace codebooks for the codes
-    — residual=True is the registered round-12 production shape) in the
-    single zero-shuffle pq_index_frame scan.  `append_pq_index` folds
-    accepted batches in (exactly-once is the caller's contract, as for
-    every artifact fold); it invalidates the session memo + Spark's file
-    index under the path, so this handle is stamp-free only within the
-    single-writer ingest contract the signature table also assumes."""
+    for the cell; RESIDUAL subspace codebooks, ensure_residual_pq_codebook,
+    for the codes) in the single zero-shuffle pq_index_frame scan.
+    `append_pq_index` folds accepted batches in (exactly-once is the
+    caller's contract, as for every artifact fold); it invalidates the
+    session memo + Spark's file index under the path, so this handle is
+    stamp-free only within the single-writer ingest contract the
+    signature table also assumes."""
     path = _pq_index_path(
         sf_dir,
         n_cells=n_cells,
@@ -1392,20 +1389,18 @@ def ensure_pq_index_table(
         k=k,
         seed=seed,
         batch_mod=batch_mod,
-        residual=residual,
     )
 
     def write(path: str) -> None:
         centroids, books = _pq_artifacts(
             spark, sf_dir, n_cells=n_cells, ivf_seed=ivf_seed, m=m, k=k,
-            seed=seed, batch_mod=batch_mod, id_col=id_col, residual=residual,
+            seed=seed, batch_mod=batch_mod, id_col=id_col,
         )
         pq_index_frame(
             load_table(spark, sf_dir, "embeddings"),
             centroids,
             books,
             id_col=id_col,
-            residual=residual,
         ).write.mode("overwrite").parquet(path)
 
     return ensure_artifact(spark, path, write)
@@ -1422,25 +1417,18 @@ def _pq_artifacts(
     seed: int,
     batch_mod: int,
     id_col: str,
-    residual: bool,
 ) -> tuple[list[list[float]], list[list[list[float]]]]:
-    """(IVF centroids, PQ codebooks) matching the index's encoding target
-    — single-sourced so the build and the fold cannot pick different
+    """(IVF centroids, residual PQ codebooks) of one index path —
+    single-sourced so the build and the fold cannot pick different
     codebooks for the same index path."""
     centroids = ensure_codebook_table(
         spark, sf_dir, n_cells=n_cells, seed=ivf_seed, batch_mod=batch_mod,
         id_col=id_col,
     )
-    if residual:
-        books = ensure_residual_pq_codebook(
-            spark, sf_dir, n_cells=n_cells, ivf_seed=ivf_seed, m=m, k=k,
-            seed=seed, batch_mod=batch_mod, id_col=id_col,
-        )
-    else:
-        books = ensure_pq_codebook(
-            spark, sf_dir, m=m, k=k, seed=seed, batch_mod=batch_mod,
-            id_col=id_col,
-        )
+    books = ensure_residual_pq_codebook(
+        spark, sf_dir, n_cells=n_cells, ivf_seed=ivf_seed, m=m, k=k,
+        seed=seed, batch_mod=batch_mod, id_col=id_col,
+    )
     return centroids, books
 
 
@@ -1456,7 +1444,6 @@ def append_pq_index(
     seed: int = PQ_SEED,
     batch_mod: int = IVF_BATCH_MOD,
     id_col: str = "vec_id",
-    residual: bool = False,
 ) -> None:
     """Incremental IVFADC index maintenance: route + encode an accepted
     batch against the PERSISTED codebooks (one zero-shuffle batch-sized
@@ -1475,20 +1462,17 @@ def append_pq_index(
         k=k,
         seed=seed,
         batch_mod=batch_mod,
-        residual=residual,
     )
     ensure_pq_index_table(
         spark, sf_dir, n_cells=n_cells, ivf_seed=ivf_seed, m=m, k=k,
-        seed=seed, batch_mod=batch_mod, id_col=id_col, residual=residual,
+        seed=seed, batch_mod=batch_mod, id_col=id_col,
     )
     centroids, books = _pq_artifacts(
         spark, sf_dir, n_cells=n_cells, ivf_seed=ivf_seed, m=m, k=k,
-        seed=seed, batch_mod=batch_mod, id_col=id_col, residual=residual,
+        seed=seed, batch_mod=batch_mod, id_col=id_col,
     )
     fold_artifact(
-        spark,
-        path,
-        pq_index_frame(batch, centroids, books, id_col=id_col, residual=residual),
+        spark, path, pq_index_frame(batch, centroids, books, id_col=id_col)
     )
 
 
@@ -1596,21 +1580,20 @@ def pq_index_frame(
     codebooks: list[list[list[float]]],
     *,
     id_col: str = "vec_id",
-    residual: bool = False,
 ) -> DataFrame:
     """The IVFADC index map, ONE scan: (id, cell, codes) — argmin-L2 IVF
-    cell + per-subspace PQ codes, both in UNIT space, both from
-    plan-literal artifacts, zero shuffle.  This frame is what
+    cell of the UNIT vector + per-subspace PQ codes of its residual,
+    both from plan-literal artifacts, zero shuffle.  This frame is what
     ensure_pq_index_table persists (and append_pq_index appends) — the
     ingestion-side composition of the registered ivf_assign and
     pq_encode shapes.
 
-    residual=True is the full Jégou IVFADC quantizer: codes cover
-    unit − centroid(cell) (pass codebooks fit by
-    ensure_residual_pq_codebook — raw-unit codebooks applied to
-    residuals are silently wrong while every shape typechecks).  The
-    cell is computed once and reused for the subtraction (a staged
-    projection, still one scan / zero shuffle)."""
+    The codes cover unit − centroid(cell), the full Jégou IVFADC
+    quantizer: pass codebooks fit by ensure_residual_pq_codebook
+    (raw-unit codebooks applied to residuals are silently wrong while
+    every shape typechecks).  The cell is computed once and reused for
+    the subtraction (a staged projection, still one scan / zero
+    shuffle)."""
     unit = F.transform("vec", lambda x: x / F.col("norm"))
     base = with_unit_vectors(corpus).select(
         F.col(id_col),
@@ -1619,14 +1602,10 @@ def pq_index_frame(
             "cell"
         ].alias("cell"),
     )
-    target = (
-        F.zip_with(
-            "_u",
-            F.element_at(_centroid_lit(centroids), F.col("cell") + 1),
-            lambda x, y: x - y,
-        )
-        if residual
-        else F.col("_u")
+    target = F.zip_with(
+        "_u",
+        F.element_at(_centroid_lit(centroids), F.col("cell") + 1),
+        lambda x, y: x - y,
     )
     return base.select(
         F.col(id_col), "cell", _pq_codes(target, codebooks).alias("codes")
@@ -1643,8 +1622,7 @@ def ivf_pq_topk(
     n_probe_cells: int = 4,
     refine: int = PQ_REFINE,
     id_col: str = "vec_id",
-    index: DataFrame | None = None,
-    residual: bool = False,
+    index: DataFrame,
 ) -> DataFrame:
     """IVFADC (Jégou et al., TPAMI 2011 §V): the composition of the two
     persisted ANN artifacts — IVF cell routing bounds WHICH corpus rows a
@@ -1655,12 +1633,10 @@ def ivf_pq_topk(
     r10 next-round #1 — the only scale-killer left in a registered plan).
 
     Plan shape:
-      1. Corpus index: (id, cell, codes).  Pass `index` to read the
-         PERSISTED artifact (ensure_pq_index_table — the production
-         shape: the registered query pays only the probe side + the ADC
-         join, never a corpus encode); with index=None the frame is
-         recomputed in ONE zero-shuffle scan (pq_index_frame) — the
-         self-contained form tests pin against the indexed one.
+      1. Corpus index: (id, cell, codes) — the PERSISTED artifact
+         (ensure_pq_index_table), so the registered query pays only the
+         probe side + the ADC join, never a corpus encode.  Tests pass a
+         pq_index_frame of their own corpus in its place.
       2. Probe routing: each probe precomputes its m×k ADC lookup table
          (dim·k work, corpus-independent) and explodes to its
          n_probe_cells nearest cells — |probes|·n_probe_cells rows,
@@ -1679,23 +1655,16 @@ def ivf_pq_topk(
     outside the probed cells is never ADC-scored) and floor-pinned by
     checks.ivfpq_recall_check.
 
-    residual=True (the registered round-12 shape) scores against a
-    RESIDUAL-encoded index (Jégou §V): q·x ≈ q·c(cell) + q·r̂ where the
-    second term is the same per-subspace LUT sum over residual codebooks
-    and the first rides the probe's own routing — each probed cell's
-    struct already carries d = |q−c|² = 1 + |c|² − 2 q·c, so
+    The index is RESIDUAL-encoded (Jégou §V): q·x ≈ q·c(cell) + q·r̂
+    where the second term is the per-subspace LUT sum over residual
+    codebooks and the first rides the probe's own routing — each probed
+    cell's struct already carries d = |q−c|² = 1 + |c|² − 2 q·c, so
     q·c = (1 + |c|² − d)/2 with |c|² a plan literal.  Zero extra work
     per candidate; the offset is per (probe, cell), computed once in the
     broadcast probe frame."""
     m = len(codebooks)
     unit = F.transform("vec", lambda x: x / F.col("norm"))
-    enc = (
-        index
-        if index is not None
-        else pq_index_frame(
-            corpus, centroids, codebooks, id_col=id_col, residual=residual
-        )
-    ).select(F.col(id_col).alias("neighbor_id"), "cell", "codes")
+    enc = index.select(F.col(id_col).alias("neighbor_id"), "cell", "codes")
     routed = with_unit_vectors(probes).select(
         F.col(id_col).alias("probe_id"),
         _pq_lut(unit, codebooks).alias("_lut"),
@@ -1705,36 +1674,29 @@ def ivf_pq_topk(
             )
         ).alias("_rc"),
     )
-    if residual:
-        cn2 = F.array(
-            *[F.lit(float(sum(v * v for v in c))) for c in centroids]
-        )
-        p = routed.select(
-            "probe_id",
-            "_lut",
-            F.col("_rc")["cell"].alias("cell"),
+    cn2 = F.array(*[F.lit(float(sum(v * v for v in c))) for c in centroids])
+    p = routed.select(
+        "probe_id",
+        "_lut",
+        F.col("_rc")["cell"].alias("cell"),
+        (
             (
-                (
-                    F.lit(1.0)
-                    + F.element_at(cn2, F.col("_rc")["cell"] + 1)
-                    - F.col("_rc")["d"]
-                )
-                / F.lit(2.0)
-            ).alias("_qc"),
-        )
-        adc = F.col("_qc") + _adc(m)
-    else:
-        p = routed.select(
-            "probe_id", "_lut", F.col("_rc")["cell"].alias("cell")
-        )
-        adc = _adc(m)
+                F.lit(1.0)
+                + F.element_at(cn2, F.col("_rc")["cell"] + 1)
+                - F.col("_rc")["d"]
+            )
+            / F.lit(2.0)
+        ).alias("_qc"),
+    )
     w = Window.partitionBy("probe_id").orderBy(
         F.desc("_adc"), F.asc("neighbor_id")
     )
     cand = (
         enc.join(F.broadcast(p), on="cell")
         .filter(F.col("probe_id") != F.col("neighbor_id"))
-        .select("probe_id", "neighbor_id", adc.alias("_adc"))
+        .select(
+            "probe_id", "neighbor_id", (F.col("_qc") + _adc(m)).alias("_adc")
+        )
         .withColumn("_r", F.row_number().over(w))
         .filter(F.col("_r") <= refine * k)
         .select("probe_id", "neighbor_id")
@@ -1805,7 +1767,7 @@ def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     centroids = ensure_codebook_table(spark, sf_dir, n_cells=16, seed=1)
     books = ensure_residual_pq_codebook(spark, sf_dir)
-    idx = ensure_pq_index_table(spark, sf_dir, residual=True)
+    idx = ensure_pq_index_table(spark, sf_dir)
     return ivf_pq_topk(
         emb,
         _probes(emb),
@@ -1814,7 +1776,6 @@ def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=5,
         n_probe_cells=IVFPQ_PROBE_CELLS,
         index=idx,
-        residual=True,
     )
 
 

@@ -79,7 +79,7 @@ def streaming_sliding_rollup(
 ) -> DataFrame:
     """The streaming form of sliding_rollup: the watermark closes windows
     `watermark` behind the max event time and evicts their state — bounded
-    memory at any rate (mirrors streaming_hourly_rollup)."""
+    memory at any rate."""
     stream = read_events_stream(spark, sf_dir).withWatermark("ts", watermark)
     return sliding_rollup(stream)
 
@@ -136,16 +136,6 @@ def read_events_stream(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return normalize_event_ts(spark, reader.parquet(sf_dir))
-
-
-def streaming_hourly_rollup(
-    spark: SparkSession, sf_dir: str, *, watermark: str = "2 hours"
-) -> DataFrame:
-    """The real streaming form: watermarked tumbling-window aggregation.
-    Late events beyond `watermark` are dropped and state is evicted —
-    bounded memory at any stream rate."""
-    stream = read_events_stream(spark, sf_dir).withWatermark("ts", watermark)
-    return hourly_rollup(stream)
 
 
 def segment_rollup(events: DataFrame, customer: DataFrame) -> DataFrame:

@@ -428,8 +428,10 @@ def test_token_budget_null_score_sorts_last(spark):
     """An empty-text doc has NULL quality_score (0-length division);
     the -1.0 sentinel must class it AFTER every real score on both the
     histogram and oracle orderings — with a half-total budget it is
-    never kept, and totals still count it."""
+    never kept, and totals still count it.  One lang, so the global and
+    per-lang faces must agree."""
     from pyspark_kmeans_spark.operators.curation import (
+        token_budget_per_lang,
         token_budget_selection,
     )
 
@@ -439,15 +441,18 @@ def test_token_budget_null_score_sorts_last(spark):
         (3, "", "en"),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    got = token_budget_selection(docs, fraction=0.5).collect()
-    assert len(got) == 1
-    r = got[0]
-    assert r["n_docs"] == 3
-    # Budget = floor(0.5 * 25) = 12 tokens: doc 1 (12 tokens) fills it
-    # exactly; doc 2's preceding sum is not under budget; the empty doc
-    # (1 whitespace token, NULL score -> sentinel class) sorts last.
-    assert r["n_kept"] == 1 and r["kept_tokens"] == 12
-    assert r["total_tokens"] == 25 and r["budget_tokens"] == 12
+    for select in (token_budget_selection, token_budget_per_lang):
+        got = select(docs, fraction=0.5).collect()
+        assert len(got) == 1, select.__name__
+        r = got[0]
+        assert r["n_docs"] == 3, select.__name__
+        # Budget = floor(0.5 * 25) = 12 tokens: doc 1 (12 tokens) fills it
+        # exactly; doc 2's preceding sum is not under budget; the empty doc
+        # (1 whitespace token, NULL score -> sentinel class) sorts last.
+        assert r["n_kept"] == 1 and r["kept_tokens"] == 12, select.__name__
+        assert r["total_tokens"] == 25 and r["budget_tokens"] == 12, (
+            select.__name__
+        )
 
 
 def test_token_budget_per_lang_preserves_mixture(spark):
@@ -493,8 +498,9 @@ def test_token_budget_constant_score_class_spans_buckets(spark):
     fold.  Ids straddle the 2^20 bucket edge, so the bucket-offset window
     (not just the within-bucket window) is load-bearing: a zero offset on
     the second bucket would keep too many docs and fail the by-hand kept
-    count."""
+    count.  One lang, so the global and per-lang faces must agree."""
     from pyspark_kmeans_spark.operators.curation import (
+        token_budget_per_lang,
         token_budget_selection,
     )
 
@@ -504,36 +510,46 @@ def test_token_budget_constant_score_class_spans_buckets(spark):
     docs = spark.createDataFrame(
         [(i, text, "en") for i in ids], "doc_id long, text string, lang string"
     )
-    got = token_budget_selection(docs, fraction=0.5).collect()
-    assert len(got) == 1
-    r = got[0]
-    # budget = floor(0.5 * 120) = 60 tokens; greedy by doc_id keeps docs
-    # while the strictly-preceding sum is under 60 → ids[0..4] (the 5th
-    # doc's preceding sum is exactly 60, not under).
-    assert r["n_docs"] == 10 and r["budget_tokens"] == 60
-    assert r["n_kept"] == 5 and r["kept_tokens"] == 60
+    for select in (token_budget_selection, token_budget_per_lang):
+        got = select(docs, fraction=0.5).collect()
+        assert len(got) == 1, select.__name__
+        r = got[0]
+        # budget = floor(0.5 * 120) = 60 tokens; greedy by doc_id keeps docs
+        # while the strictly-preceding sum is under 60 → ids[0..4] (the 5th
+        # doc's preceding sum is exactly 60, not under).
+        assert r["n_docs"] == 10 and r["budget_tokens"] == 60, select.__name__
+        assert r["n_kept"] == 5 and r["kept_tokens"] == 60, select.__name__
 
 
 def test_token_budget_null_lang_report_row(spark):
     """ADVICE r8 #1: the lang report join must be null-safe — a KEPT doc
     whose lang is NULL gets its own report row with the true kept counts,
     not a row zeroed by a null-unsafe equi-join (the oracle GROUPs BY the
-    nullable lang column, so NULL groups with NULL there)."""
+    nullable lang column, so NULL groups with NULL there).  The per-lang
+    face also budgets the NULL group on its own, through the same
+    null-safe joins."""
     from pyspark_kmeans_spark.operators.curation import (
+        token_budget_per_lang,
         token_budget_selection,
     )
 
     text = "the cat and the dog walk to a park in the morning sun"
     rows = [(1, text, "en"), (2, text, None), (3, text, None)]
     docs = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    # fraction=1.0: budget == total tokens, every doc's strictly-preceding
-    # sum is under budget, so ALL docs are kept — including the NULL-lang
-    # pair, whose report row is the one the unsafe join would zero.
-    got = {r["lang"]: r for r in token_budget_selection(docs, fraction=1.0).collect()}
-    assert set(got) == {"en", None}
-    assert got[None]["n_docs"] == 2 and got[None]["n_kept"] == 2
-    assert got[None]["kept_tokens"] == got[None]["total_tokens"]
-    assert got["en"]["n_kept"] == 1
+    # fraction=1.0: budget == total tokens (globally and per lang), every
+    # doc's strictly-preceding sum is under budget, so ALL docs are kept —
+    # including the NULL-lang pair, whose report row is the one the unsafe
+    # join would zero.
+    for select in (token_budget_selection, token_budget_per_lang):
+        got = {r["lang"]: r for r in select(docs, fraction=1.0).collect()}
+        assert set(got) == {"en", None}, select.__name__
+        assert got[None]["n_docs"] == 2 and got[None]["n_kept"] == 2, (
+            select.__name__
+        )
+        assert got[None]["kept_tokens"] == got[None]["total_tokens"], (
+            select.__name__
+        )
+        assert got["en"]["n_kept"] == 1, select.__name__
 
 
 def test_length_batching_planted_padding_math(spark):

@@ -13,9 +13,12 @@ import pytest
 
 from pyspark_kmeans_spark.operators.ingest import (
     DAILY_BATCH_MOD,
+    ORACLES,
     q_daily_ingest,
     q_daily_ingest_lsh,
 )
+from pyspark_kmeans_spark.schemas import TESTDATA_TABLES
+from tests.oracle_util import compare, duckdb_con
 
 
 def test_lsh_form_kept_subset_of_exact_form(spark, sf_dir):
@@ -101,3 +104,55 @@ def test_persisted_artifacts_written_once(spark, sf_dir):
         assert os.path.exists(os.path.join(path, "_SUCCESS")), table
     again = sorted(map(tuple, q_daily_ingest(spark, sf_dir).collect()))
     assert first == again
+
+
+def test_null_lang_batch_docs_reach_the_report(spark, tmp_sf):
+    """documents.lang is nullable: accepted batch docs with a NULL lang
+    must land in their own report row with the merged corpus + batch
+    totals of the NULL group — not vanish at the rollup ⋈ totals join —
+    and the SQL oracle must agree on the planted corpus."""
+    import hashlib
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    src = "/root/testdata/sf0.001"
+    for t in TESTDATA_TABLES:
+        if t != "documents":
+            os.symlink(f"{src}/{t}.parquet", f"{tmp_sf}/{t}.parquet")
+    docs = pq.read_table(f"{src}/documents.parquet")
+    null_lang = pc.equal(pc.bit_wise_and(docs["doc_id"], 3), 0)  # id % 4 == 0
+    lang = pc.if_else(null_lang, pa.scalar(None, pa.string()), docs["lang"])
+    docs = docs.set_column(docs.schema.get_field_index("lang"), "lang", lang)
+    pq.write_table(docs, f"{tmp_sf}/documents.parquet")
+
+    # By-hand expectation for the NULL group: corpus docs + the batch docs
+    # the exact-digest stage accepts (new digest, lowest id per digest).
+    rows = docs.to_pylist()
+    corpus_digests = {
+        hashlib.md5(r["text"].encode()).hexdigest()
+        for r in rows
+        if r["doc_id"] % DAILY_BATCH_MOD != 0
+    }
+    winners: dict[str, dict] = {}
+    for r in rows:
+        d = hashlib.md5(r["text"].encode()).hexdigest()
+        if r["doc_id"] % DAILY_BATCH_MOD == 0 and d not in corpus_digests:
+            if d not in winners or r["doc_id"] < winners[d]["doc_id"]:
+                winners[d] = r
+    n_tok = lambda r: len(r["text"].split(" "))  # noqa: E731
+    kept_null = [r for r in winners.values() if r["lang"] is None]
+    group = [r for r in rows if r["doc_id"] % DAILY_BATCH_MOD != 0] + kept_null
+    group = [r for r in group if r["lang"] is None]
+    assert kept_null, "planted corpus must accept NULL-lang batch docs"
+
+    out = q_daily_ingest(spark, tmp_sf)
+    null_rows = [r for r in out.collect() if r["lang"] is None]
+    assert null_rows, "NULL-lang batch docs dropped from the report"
+    assert sum(r["batch_docs"] for r in null_rows) == len(kept_null)
+    assert sum(r["batch_tokens"] for r in null_rows) == sum(map(n_tok, kept_null))
+    for r in null_rows:
+        assert r["total_docs"] == len(group)
+        assert r["total_tokens"] == sum(map(n_tok, group))
+    compare(out, duckdb_con(tmp_sf), ORACLES["daily_ingest"])

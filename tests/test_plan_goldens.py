@@ -4,7 +4,7 @@ The value-correctness oracle can't see a broadcast silently degrading to
 sort-merge, a join reordering adding an exchange, or a fact table scanned
 twice — plan shapes only fail the targeted asserts in test_plans.py for
 the handful of queries they cover.  This test pins the join-strategy /
-exchange / scan / window counts (plans.inspect.plan_signature) of ALL 29
+exchange / scan / window counts (plans.inspect.plan_signature) of ALL 36
 headline queries against a committed golden, so any code change that
 alters a headline plan shape is a visible, reviewed diff instead of a
 silent 100 TB regression.

@@ -743,49 +743,25 @@ def test_pq_topk_finds_exact_duplicate_first(spark):
     assert first["neighbor_id"] == 1 and first["cosine"] == 1.0
 
 
-def test_ivfpq_exact_duplicate_first(spark):
-    """IVFADC: an exact duplicate shares the probe's cell AND every
-    subspace code, so it must survive cell routing + ADC selection and
-    land at rank 1 with cosine 1.0 after the exact re-rank."""
+def test_ivfpq_equals_cosine_topk_when_nothing_pruned(spark):
+    """With n_probe_cells == n_cells the cell routing prunes nothing, and
+    with refine·k ≥ N the ADC selection keeps every candidate, so
+    residual IVFADC must produce BIT-IDENTICAL output to brute-force
+    cosine_topk (both rank the exact rounded cosine through _rank_topk)
+    — pinning that the composition changes the candidate set only,
+    never the final scoring."""
     import random
 
-    from pyspark_kmeans_spark.operators.similarity import ivf_pq_topk
-
-    rng = random.Random(13)
-    dim, m = 8, 4
-    base = [rng.gauss(0, 1) for _ in range(dim)]
-    rows = [(0, base), (1, list(base))] + [
-        (i, [rng.gauss(0, 1) for _ in range(dim)]) for i in range(2, 40)
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    books = [
-        [[rng.gauss(0, 1) for _ in range(dim // m)] for _ in range(4)]
-        for _ in range(m)
-    ]
-    centroids = [
-        [rng.gauss(0, 1) for _ in range(dim)] for _ in range(4)
-    ]
-    probe = df.filter(F.col("vec_id") == 0)
-    top = ivf_pq_topk(
-        df, probe, centroids, books, k=3, n_probe_cells=1, refine=4
-    ).collect()
-    first = [r for r in top if r["rank"] == 1][0]
-    assert first["neighbor_id"] == 1 and first["cosine"] == 1.0
-
-
-def test_ivfpq_equals_pq_when_all_cells_probed(spark):
-    """With n_probe_cells == n_cells the cell routing prunes nothing, so
-    IVFADC must produce BIT-IDENTICAL output to plain pq_topk (same ADC
-    scores, same tie-breaks, same exact re-rank) — pinning that the
-    composition changes the candidate set only, never the scoring."""
-    import random
-
-    from pyspark_kmeans_spark.operators.similarity import ivf_pq_topk, pq_topk
+    from pyspark_kmeans_spark.operators.similarity import (
+        cosine_topk,
+        ivf_pq_topk,
+        pq_index_frame,
+    )
 
     rng = random.Random(29)
-    dim, m = 8, 4
+    dim, m, n = 8, 4, 60
     rows = [
-        (i, [rng.gauss(0, 1) for _ in range(dim)]) for i in range(60)
+        (i, [rng.gauss(0, 1) for _ in range(dim)]) for i in range(n)
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     books = [
@@ -794,14 +770,15 @@ def test_ivfpq_equals_pq_when_all_cells_probed(spark):
     ]
     centroids = [[rng.gauss(0, 1) for _ in range(dim)] for _ in range(3)]
     probes = df.filter(F.col("vec_id") % 10 == 0)
+    k = 3
     want = sorted(
-        (r["probe_id"], r["neighbor_id"], r["rank"], r["cosine"])
-        for r in pq_topk(df, probes, books, k=3, refine=4).collect()
+        tuple(r) for r in cosine_topk(df, probes, k=k).collect()
     )
     got = sorted(
-        (r["probe_id"], r["neighbor_id"], r["rank"], r["cosine"])
+        tuple(r)
         for r in ivf_pq_topk(
-            df, probes, centroids, books, k=3, n_probe_cells=3, refine=4
+            df, probes, centroids, books, k=k, n_probe_cells=3,
+            refine=n // k, index=pq_index_frame(df, centroids, books),
         ).collect()
     )
     assert got == want
@@ -822,11 +799,14 @@ def test_residual_ivfpq_finds_exact_duplicate_first(spark):
     """Residual IVFADC (codes over unit − centroid(cell), ADC score
     q·c + LUT sum): an exact duplicate shares its probe's cell AND
     residual codes, so it survives routing + ADC selection and lands at
-    rank 1 with cosine 1.0 after the exact re-rank — the same invariant
-    the raw-unit path pins, through the offset-corrected scoring."""
+    rank 1 with cosine 1.0 after the exact re-rank — quantization may
+    cost recall on hard neighbors, never on an identical one."""
     import random
 
-    from pyspark_kmeans_spark.operators.similarity import ivf_pq_topk
+    from pyspark_kmeans_spark.operators.similarity import (
+        ivf_pq_topk,
+        pq_index_frame,
+    )
 
     rng = random.Random(13)
     dim, m = 8, 4
@@ -843,14 +823,14 @@ def test_residual_ivfpq_finds_exact_duplicate_first(spark):
     probe = df.filter(F.col("vec_id") == 0)
     top = ivf_pq_topk(
         df, probe, centroids, books, k=3, n_probe_cells=1, refine=4,
-        residual=True,
+        index=pq_index_frame(df, centroids, books),
     ).collect()
     first = [r for r in top if r["rank"] == 1][0]
     assert first["neighbor_id"] == 1 and first["cosine"] == 1.0
 
 
 def test_residual_index_frame_codes_are_argmin_over_residual(spark):
-    """pq_index_frame(residual=True) assigns each subspace the TRUE
+    """pq_index_frame assigns each subspace the TRUE
     argmin centroid of the RESIDUAL (unit − nearest IVF centroid) —
     hand-computed on literal vectors, pinning both the staged cell
     lookup and that the subtraction happens before slicing."""
@@ -878,7 +858,7 @@ def test_residual_index_frame_codes_are_argmin_over_residual(spark):
     df = spark.createDataFrame(
         [(7, v)], "vec_id long, embedding array<float>"
     )
-    got = pq_index_frame(df, centroids, books, residual=True).collect()[0]
+    got = pq_index_frame(df, centroids, books).collect()[0]
     assert got["cell"] == 0
     assert list(got["codes"]) == want
 
@@ -888,16 +868,16 @@ def test_residual_index_frame_codes_are_argmin_over_residual(spark):
 @pytest.mark.slow
 def test_pq_index_table_matches_direct_and_indexed_query(spark, tmp_sf):
     """The persisted IVFADC index equals the direct pq_index_frame
-    computation row-for-row, and ivf_pq_topk over the artifact is
-    bit-identical to the self-contained form — persistence is pure
-    layout, never semantics."""
+    computation over the residual codebooks row-for-row, and ivf_pq_topk
+    over the artifact is bit-identical to ivf_pq_topk over that direct
+    frame — persistence is pure layout, never semantics."""
     import shutil
 
     from pyspark_kmeans_spark.operators.similarity import (
         _probes,
         ensure_codebook_table,
-        ensure_pq_codebook,
         ensure_pq_index_table,
+        ensure_residual_pq_codebook,
         ivf_pq_topk,
         pq_index_frame,
     )
@@ -906,11 +886,11 @@ def test_pq_index_table_matches_direct_and_indexed_query(spark, tmp_sf):
     shutil.copy(f"{sf}/embeddings.parquet", f"{tmp_sf}/embeddings.parquet")
     emb = spark.read.parquet(f"{tmp_sf}/embeddings.parquet")
     centroids = ensure_codebook_table(spark, tmp_sf, n_cells=16, seed=1)
-    books = ensure_pq_codebook(spark, tmp_sf)
+    books = ensure_residual_pq_codebook(spark, tmp_sf)
     idx = ensure_pq_index_table(spark, tmp_sf)
+    direct = pq_index_frame(emb, centroids, books)
     want_rows = sorted(
-        (r["vec_id"], r["cell"], tuple(r["codes"]))
-        for r in pq_index_frame(emb, centroids, books).collect()
+        (r["vec_id"], r["cell"], tuple(r["codes"])) for r in direct.collect()
     )
     got_rows = sorted(
         (r["vec_id"], r["cell"], tuple(r["codes"])) for r in idx.collect()
@@ -918,7 +898,10 @@ def test_pq_index_table_matches_direct_and_indexed_query(spark, tmp_sf):
     assert got_rows == want_rows
     probes = _probes(emb)
     want = sorted(
-        tuple(r) for r in ivf_pq_topk(emb, probes, centroids, books, k=5).collect()
+        tuple(r)
+        for r in ivf_pq_topk(
+            emb, probes, centroids, books, k=5, index=direct
+        ).collect()
     )
     got = sorted(
         tuple(r)
@@ -962,8 +945,8 @@ def test_pq_index_append_folds_batch(spark, tmp_sf):
     from pyspark_kmeans_spark.operators.similarity import (
         append_pq_index,
         ensure_codebook_table,
-        ensure_pq_codebook,
         ensure_pq_index_table,
+        ensure_residual_pq_codebook,
         pq_index_frame,
     )
 
@@ -974,7 +957,7 @@ def test_pq_index_append_folds_batch(spark, tmp_sf):
     batch = emb.withColumn("vec_id", F.col("vec_id") + 1_000_000)
     append_pq_index(spark, tmp_sf, batch)
     centroids = ensure_codebook_table(spark, tmp_sf, n_cells=16, seed=1)
-    books = ensure_pq_codebook(spark, tmp_sf)
+    books = ensure_residual_pq_codebook(spark, tmp_sf)
     want = sorted(
         (r["vec_id"], r["cell"], tuple(r["codes"]))
         for r in pq_index_frame(emb, centroids, books)
