@@ -1,9 +1,15 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR on
 local[$SPARK_GRAFT_CPUS].
 
-Prints ONE JSON line:
+Usage: python bench.py                 every headline and extended entry
+       python bench.py <name> [...]    only the named registry entries
+
+A full run prints a detail line, writes it to bench_full_last*.json, and
+prints ONE compact JSON line last:
   {"metric": "...", "value": <total sec>, "unit": "sec",
    "queries": {...per-query sec...}, "sf": <sf>}
+A named run prints one "named_queries" line (median, best, cpu and every
+run per entry) after the same warm-up, and writes no file.
 
 Each query is forced end-to-end with a noop sink (full execution, no
 driver-side collect).  The set covers every operator family: the flagship
@@ -249,10 +255,9 @@ def gates_dir_for(sf_dir: str) -> str:
     return cand if os.path.isdir(cand) else sf_dir
 
 
-def force(df) -> int:
+def force(df) -> None:
     """Execute the full plan without materializing on the driver."""
     df.write.format("noop").mode("overwrite").save()
-    return 0
 
 
 # Pinned per-query quiet-window wall medians (seconds) at the standard
@@ -287,6 +292,9 @@ def force(df) -> int:
 #  - The detector only ever ADDS one rep and drops that query's worst
 #    sample; it never removes an entry from the ledger.
 BAND_TOLERANCE = 1.5
+# The pins are local[32] medians: on another core count every entry would
+# be compared against a different machine shape's numbers.
+PINNED_BAND_CORES = 32
 PINNED_BAND: dict[str, float] = {
     "ann_ivf_assign": 0.815,
     "ann_ivf_topk": 3.567,
@@ -374,6 +382,28 @@ PINNED_BAND: dict[str, float] = {
 }
 
 
+def band_pins(sf_dir: str, cores: int) -> dict[str, float]:
+    """The pinned quiet bands that apply to a run.  They only describe the
+    standard layout (bench at sf0.1, gates at sf0.01) on PINNED_BAND_CORES
+    cores; any other run disables the sustained-burst detector rather than
+    flagging everything."""
+    standard = (
+        os.path.basename(sf_dir.rstrip("/")) == "sf0.1" and GATES_SF == "0.01"
+    )
+    return PINNED_BAND if standard and cores == PINNED_BAND_CORES else {}
+
+
+def band_flagged(runs: dict[str, list[float]], pinned: dict[str, float]) -> list:
+    """Post-requeue sustained-burst labels: entries whose best is STILL
+    above the pinned band after the extra rep — environment,
+    self-adjudicated in-JSON."""
+    return sorted(
+        n
+        for n, rs in runs.items()
+        if pinned.get(n) is not None and min(rs) > BAND_TOLERANCE * pinned[n]
+    )
+
+
 def settle(runs: list[float], n_keep: int) -> float:
     """Median over the n_keep LOWEST runs.  For a query that was never
     requeued this is the plain median; for a requeued one the extra rep
@@ -435,15 +465,17 @@ def run_section(
     return runs, cpus, requeued
 
 
-def main() -> None:
+def main(names: list[str]) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    spark = get_spark(app_name="bench")
-    load_start = loadavg()
-
     import __spark_entry__ as entrymod
 
     queries = entrymod.queries()
+    unknown = sorted(set(names) - set(queries))
+    if unknown:
+        raise SystemExit(f"not registered: {unknown}")
+    spark = get_spark(app_name="bench")
+    load_start = loadavg()
     # Warm-up: JVM/codegen/readers (not counted), plus the write-once
     # warehouse artifacts (signature/digest/lang-stats/codebook tables).
     # Their first-touch builds are the ingestion job's cost by contract
@@ -478,23 +510,40 @@ def main() -> None:
         ensure_pq_index_table(spark, d)
     spark.catalog.clearCache()
     jvm_pid = _jvm_pid(spark)
+    cores = spark.sparkContext.defaultParallelism
+    pinned = band_pins(sf_dir, cores)
+
+    def dir_for(name: str) -> str:
+        return gates_dir if is_gate(name) else sf_dir
+
+    if names:
+        runs, cpus, requeued = run_section(
+            spark, queries, names, REPEATS, jvm_pid, dir_for, pinned=pinned
+        )
+        print(json.dumps({
+            "metric": "named_queries",
+            "queries": {n: round(settle(runs[n], REPEATS), 3) for n in names},
+            "best": {n: round(min(runs[n]), 3) for n in names},
+            "cpu": {n: round(median_of(sorted(cpus[n])), 3) for n in names},
+            "runs": {n: [round(r, 3) for r in runs[n]] for n in names},
+            "repeats": REPEATS,
+            "requeued": requeued,
+            "band_flagged": band_flagged(runs, pinned),
+            "gates": sorted(n for n in names if dir_for(n) != sf_dir),
+            "load_start": load_start,
+            "load_end": loadavg(),
+            "sf": float(sf),
+        }))
+        spark.stop()
+        return
 
     # This host shows real CPU steal (BASELINE.md records 106/490/642 s for
     # identical runs), so a single-shot measurement can't be trusted against
     # a 2x gate: REPEATS interleaved round-robin reps per query (see
     # run_section) and report the per-query MEDIAN (plus the best, to
     # expose the noise floor), sorted slowest first.
-    # The pinned quiet bands only describe the standard layout (bench at
-    # sf0.1, gates at sf0.01); a custom SPARK_GRAFT_SF_DIR disables the
-    # sustained-burst detector rather than flagging everything.
-    apply_band = (
-        os.path.basename(sf_dir.rstrip("/")) == "sf0.1"
-        and GATES_SF == "0.01"
-    )
-    pinned = PINNED_BAND if apply_band else {}
     h_runs, h_cpus, h_requeued = run_section(
-        spark, queries, HEADLINE, REPEATS, jvm_pid, lambda name: sf_dir,
-        pinned=pinned,
+        spark, queries, HEADLINE, REPEATS, jvm_pid, dir_for, pinned=pinned
     )
     medians = {n: round(settle(h_runs[n], REPEATS), 3) for n in HEADLINE}
     bests = {n: round(min(h_runs[n]), 3) for n in HEADLINE}
@@ -509,13 +558,7 @@ def main() -> None:
         n for n in ext_names if is_gate(n) and gates_dir != sf_dir
     ]
     e_runs, e_cpus, e_requeued = run_section(
-        spark,
-        queries,
-        ext_names,
-        REPEATS_EXT,
-        jvm_pid,
-        lambda name: gates_dir if is_gate(name) else sf_dir,
-        pinned=pinned,
+        spark, queries, ext_names, REPEATS_EXT, jvm_pid, dir_for, pinned=pinned
     )
     extended = {n: round(settle(e_runs[n], REPEATS_EXT), 3) for n in ext_names}
     extended_best = {n: round(min(e_runs[n]), 3) for n in ext_names}
@@ -523,14 +566,7 @@ def main() -> None:
         n: round(median_of(sorted(e_cpus[n])), 3) for n in ext_names
     }
     requeued = sorted(h_requeued + e_requeued)
-    # Post-requeue sustained-burst labels: best STILL above the pinned
-    # band after the extra rep — environment, self-adjudicated in-JSON.
-    band_flagged = sorted(
-        n
-        for n, rs in {**h_runs, **e_runs}.items()
-        if pinned.get(n) is not None
-        and min(rs) > BAND_TOLERANCE * pinned[n]
-    )
+    flagged = band_flagged({**h_runs, **e_runs}, pinned)
 
     load_end = loadavg()
     order = sorted(medians, key=medians.get, reverse=True)
@@ -560,7 +596,7 @@ def main() -> None:
         "repeats": REPEATS,
         "repeats_extended": REPEATS_EXT,
         "requeued": requeued,
-        "band_flagged": band_flagged,
+        "band_flagged": flagged,
         "band_tolerance": BAND_TOLERANCE,
         "gates_sf": float(GATES_SF) if gate_names else float(sf),
         "gates": sorted(gate_names),
@@ -569,18 +605,16 @@ def main() -> None:
         "sf": float(sf),
     }
     print(json.dumps(detail))
-    # Low-core scaling runs (the driver's 8-core pass, bench_scale_* A/Bs)
-    # get their own detail file so they never clobber the full-width run's
+    # Low-core scaling runs (an 8-core pass on a wider host) get their own
+    # detail file so they never clobber the full-width run's
     # bench_full_last.json — VERDICT r12 "What's wrong" #4: the r12 8-core
     # run overwrote the 32-core detail and a cold reader would "find"
-    # phantom regressions.  Full-width = local[$SPARK_GRAFT_CPUS] using
-    # every hardware thread; anything narrower is a scaling probe.
-    n_cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    hw = os.cpu_count() or 32
+    # phantom regressions.  Full-width = a local[N] session using every
+    # hardware thread; anything narrower is a scaling probe.
     detail_name = (
         "bench_full_last.json"
-        if not n_cpus.isdigit() or int(n_cpus) >= hw
-        else f"bench_full_last_c{n_cpus}.json"
+        if cores >= (os.cpu_count() or cores)
+        else f"bench_full_last_c{cores}.json"
     )
     detail_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), detail_name
@@ -623,8 +657,8 @@ def main() -> None:
                 "requeued": requeued[:5],
                 # sustained-burst labels (best > 1.5x pinned quiet band
                 # even after requeue — environment, not regression)
-                "band_flagged_n": len(band_flagged),
-                "band_flagged": band_flagged[:5],
+                "band_flagged_n": len(flagged),
+                "band_flagged": flagged[:5],
                 "gates_sf": float(GATES_SF) if gate_names else float(sf),
                 "detail": detail_name,
                 "load_start": load_start,
@@ -637,4 +671,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

@@ -50,6 +50,16 @@ def clamp_plan_string_length(
         spark.conf.set("spark.sql.maxPlanStringLength", str(limit))
 
 
+def host_defaults() -> tuple[int, str]:
+    """(cores, driver heap) for a local session when the environment does
+    not set them: every core this process may run on, and half of
+    physical memory capped at 48g — the driver JVM shares the host with
+    the Python driver and its workers, so a heap sized for another
+    machine gets the process OOM-killed instead of spilling."""
+    half_mib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return len(os.sched_getaffinity(0)), f"{min(half_mib, 48 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "pyspark_kmeans_spark",
     master: str | None = None,
@@ -60,12 +70,15 @@ def get_spark(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; on a real
     cluster pass ``None`` and set master via spark-submit.
+    ``SPARK_GRAFT_CPUS`` and ``SPARK_DRIVER_MEMORY`` default to
+    ``host_defaults()``.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    host_cores, host_heap = host_defaults()
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(host_cores)
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+        shuffle_partitions = int(cpus) if cpus.isdigit() else host_cores
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -82,7 +95,10 @@ def get_spark(
         # sources.tables.load_table.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or host_heap,
+        )
         # See PLAN_STRING_MAX_CHARS above — plan strings, not plans, are
         # the driver-heap hazard on the deepest AQE trees.
         .config("spark.sql.maxPlanStringLength", str(PLAN_STRING_MAX_CHARS))
