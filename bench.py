@@ -27,61 +27,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+import __spark_entry__ as entrymod  # noqa: E402
+from __spark_entry__ import HEADLINE, HEADLINE_V1  # noqa: E402
 from pyspark_kmeans_spark.session import get_spark  # noqa: E402
-
-# v1 headline set (rounds 4-8): the cross-round comparison basis.  The
-# BASELINE.md operative tables and every BENCH_r{4..8}.json total sum
-# over exactly these 29 — the compact line reports their subtotal as
-# `value_v1` so the series stays comparable after v2 additions.
-HEADLINE_V1 = [
-    "customer_features",
-    "pricing_summary",
-    "top_orders",
-    "region_volume",
-    "customer_revenue_stats",
-    "row_number",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_jaccard_pairs",
-    "ann_topk_cosine",
-    "ann_lsh_topk",
-    "ann_ivf_topk",
-    "text_quality",
-    "text_lang_id",
-    "multimodal_features",
-    "event_hourly_rollup",
-    "event_user_sessions",
-    "asof_last_order",
-    "range_join_recent_orders",
-    "dedup_lsh_kept",
-    "dedup_incremental_lsh",
-    "bucketed_order_revenue",
-    "kmeans_embedding_clusters",
-    "curation_dup_ngrams",
-    "curation_contamination",
-    "event_segment_rollup",
-    "dedup_semantic",
-    "source_quota_sample",
-    "training_order",
-]
-
-# v2 additions (round 9, VERDICT r8 stretch #8): the round-8 curation
-# surface + the leakage-safe split, promoted from the extended section so
-# the newest operators get median-of-3 round-over-round tracking.  The
-# headline `value` is the 35-query v2 total; `value_v1` preserves the
-# 29-query basis — versioned in BASELINE.md, never silently rebased.
-HEADLINE_V2_ADDITIONS = [
-    "split_leakage_safe",
-    "curation_token_budget",
-    "curation_length_batching",
-    "curation_fuzzy_contamination",
-    "curation_score_percentiles",
-    "curation_decontaminated",
-    "curation_top_boilerplate",
-]
-
-HEADLINE = HEADLINE_V1 + HEADLINE_V2_ADDITIONS
-
 
 REPEATS = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
 # Extended entries were single-shot through round 5 — on a host with
@@ -468,8 +416,6 @@ def run_section(
 def main(names: list[str]) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    import __spark_entry__ as entrymod
-
     queries = entrymod.queries()
     unknown = sorted(set(names) - set(queries))
     if unknown:

@@ -760,9 +760,10 @@ def q_incremental_lsh_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_lsh_twowave_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hash-checkable twin of `dedup_lsh_kept` (rows-only: xxhash64-based
     kept set).  Pins the round-5 TWO-WAVE rewrite of the heaviest headline
-    query: the kept set from `lsh_near_dedup_kept` (wave-1 bucket-min
-    verify + wave-2 capped expansion over unresolved docs) must equal the
-    kept set derived from the pair-set spelling (`minhash_lsh_pairs`
+    query: the kept set from `lsh_near_dedup_kept` (the two verify
+    waves of `dedup._two_wave_kept`, shared with
+    `incremental_kept_against`) must equal the kept set derived from
+    the pair-set spelling (`minhash_lsh_pairs`
     losers removed) — the docstring claim for corpora where no bucket
     exceeds the cap, previously pinned only in tests/test_dedup.py.
     `n_docs` anchors the corpus (the oracle recomputes it); a zero

@@ -633,42 +633,49 @@ def minhash_lsh_pairs(
     # two-consumer race — the verify joins that reference `toks` twice
     # run strictly later and read the filled cache.  The separate count
     # was a full extra single-task tokenize pass (0.3-1.4 s at sf0.1).
-    # Contrast lsh_near_dedup_kept, whose FIRST action references its
-    # persisted frame three times and therefore keeps the eager count.
+    # Contrast lsh_near_dedup_kept: the first action of its two-wave core
+    # (the wave-1 drop count) references the persisted frame three times,
+    # so it keeps the eager count.
     toks = _persist(
-        df.select(F.col(id_col), hashed_tokens_col(text_col).alias("_toks"))
-        .withColumn("_n", F.size("_toks"))
+        df.select(F.col(id_col), hashed_tokens_col(text_col).alias("toks"))
+        .withColumn("n", F.size("toks"))
     )
     # Banded bucket entries → grouped member lists (ONE shuffle; the
     # signature — num_hashes universal hashes per token — computes once
     # into the persisted grouped frame) → partition-local pair expansion.
-    sig = _sig_col(F.col("_toks"), num_hashes=num_hashes, seed=seed)
+    sig = _sig_col(F.col("toks"), num_hashes=num_hashes, seed=seed)
     candidates = _bucket_candidates(
         band_entries_from_sig(
-            toks.select(F.col(id_col), F.col("_n"), sig.alias("sig")),
+            toks.select(F.col(id_col), F.col("n"), sig.alias("sig")),
             bands=bands,
             rows_per_band=rows_per_band,
             id_col=id_col,
-            extra_cols=("_n",),
+            extra_cols=("n",),
         ),
         max_bucket,
         "minhash_lsh_pairs",
         id_col,
-        n_col="_n",
+        n_col="n",
         threshold=threshold,
         # The grouped verify dedups via collect_set — a separate distinct
         # here would shuffle the candidate set twice (round 13).
         deduped=False,
     )
-
-    return _verify_jaccard(candidates, toks, threshold, id_col)
+    side = toks.hint("shuffle_hash")
+    return _verify_jaccard(candidates, side, side, threshold, id_col)
 
 
 def _verify_jaccard(
-    candidates: DataFrame, toks: DataFrame, threshold: float, id_col: str
+    candidates: DataFrame,
+    a_side: DataFrame,
+    b_side: DataFrame,
+    threshold: float,
+    id_col: str,
 ) -> DataFrame:
-    """Exact-Jaccard verification of (doc_a, doc_b) candidates against the
-    persisted (id, _toks, _n) token frame → (doc_a, doc_b, jaccard ≥ t).
+    """Exact-Jaccard verification of (doc_a, doc_b) candidates → (doc_a,
+    doc_b, jaccard ≥ t); doc_a's tokens come from `a_side`, doc_b's from
+    `b_side`, both (id, toks, n) frames as build_signature_table spells
+    them.  The one grouped verifier of this module.
 
     Grouped two-level attach (round 13 — VERDICT r12 item 2, guide
     §2.3/§2.4).  Candidates need NOT be pre-deduplicated: ONE
@@ -691,29 +698,31 @@ def _verify_jaccard(
     exact prefix path, so a collect_set array stays far below task memory
     (≤ ~40k bigints at the default cap).
 
-    shuffle_hash hints: BOTH attach sides are corpus-scale and the grouped
-    candidate frame has explode lineage (garbage static size estimate — at
-    a 64x corpus Catalyst once "estimated" it broadcastable and died
-    collecting 12 GiB to the driver).  The hint pins a shuffled hash join:
-    no broadcast of an unboundedly-large side, no sort, per-task hash
-    tables bounded by the shuffle partitioning.
+    Join hints travel on the side frames (a hint survives the select
+    below).  Corpus-scale sides carry shuffle_hash: the grouped candidate
+    frame has explode lineage (garbage static size estimate — at a 64x
+    corpus Catalyst once "estimated" it broadcastable and died collecting
+    12 GiB to the driver), and the hint pins a shuffled hash join: no
+    broadcast of an unboundedly-large side, no sort, per-task hash tables
+    bounded by the shuffle partitioning.  A bounded batch side goes
+    unhinted, so AQE may broadcast it when it actually fits.
     """
     grp = candidates.groupBy("doc_a").agg(
         F.collect_set("doc_b").alias("_bs")
     )
     with_a = grp.join(
-        toks.select(
-            F.col(id_col).alias("doc_a"), F.col("_toks").alias("_ta"), F.col("_n").alias("_na")
-        ).hint("shuffle_hash"),
+        a_side.select(
+            F.col(id_col).alias("doc_a"), F.col("toks").alias("_ta"), F.col("n").alias("_na")
+        ),
         on="doc_a",
     )
     pairs = with_a.select(
         "doc_a", "_na", "_ta", F.explode("_bs").alias("doc_b")
     )
     with_b = pairs.join(
-        toks.select(
-            F.col(id_col).alias("doc_b"), F.col("_toks").alias("_tb"), F.col("_n").alias("_nb")
-        ).hint("shuffle_hash"),
+        b_side.select(
+            F.col(id_col).alias("doc_b"), F.col("toks").alias("_tb"), F.col("n").alias("_nb")
+        ),
         on="doc_b",
     )
     inter = F.size(F.array_intersect("_ta", "_tb"))
@@ -854,6 +863,155 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_pairs(load_table(spark, sf_dir, "documents"), max_hamming=3)
 
 
+def _two_wave_kept(
+    entries: DataFrame,
+    a_side: DataFrame,
+    b_side: DataFrame,
+    n_batch: int,
+    *,
+    threshold: float,
+    id_col: str,
+    max_bucket: int | None,
+    caller: str,
+) -> DataFrame:
+    """The two-wave LSH kept-set core behind lsh_near_dedup_kept (a batch
+    with no corpus side) and incremental_kept_against → the batch ids that
+    survive.
+
+    `entries` are (id, band, bucket, n, _is_corpus) band entries.  A batch
+    doc (_is_corpus = 0) is dropped iff a member of one of its buckets
+    beats it — any corpus doc, or a batch doc with a lower id — with
+    jaccard ≥ threshold (greedy is one-hop: a dropped doc still kills
+    later ids).  `a_side` carries (id, toks, n) for every doc `entries`
+    names, `b_side` for the `n_batch` batch docs, each with its caller's
+    join hint (see _verify_jaccard).  The caller persists and counts both
+    sides (the lazy-persist race, see minhash_lsh_pairs); the batch count
+    also feeds the wave-2 skip.
+
+    Kept-set semantics only need ONE qualifying partner per dropped doc, so
+    verification runs in TWO WAVES instead of over the full bucket pair
+    expansion (round 5; measured 2.6M → ~30k verified candidates on the
+    sf0.1 corpus, where 961k true pairs resolve just 2.6k drops):
+
+    - Wave 1 pairs every batch member with just two bucket representatives,
+      the minimum corpus member and the minimum batch member, from WINDOW
+      mins over (band, bucket) (struct min = lexicographic = min id first;
+      round 13 — every entry must reach its bucket's reducer anyway, so the
+      window's single exchange replaces a groupBy + join-back).  Array-free
+      and UNCAPPED: a degenerate 10^6-member boilerplate bucket costs one
+      sorted run and 10^6 verifies (not 5·10^11), and its members still
+      get DEDUPED instead of skipped-with-a-warning.  On clique-heavy
+      corpora the cluster minimum shares a bucket with nearly every
+      member, so wave 1 resolves almost all drops.
+    - Wave 2 runs the capped grouped-bucket expansion over what wave 1 left
+      unresolved: b is an unresolved batch member, a any member that beats
+      it, both filtered INSIDE the member array (JVM array filter — pruned
+      pairs are never materialized).  Only true uniques and stragglers
+      whose representative failed the size prune or the verify reach the
+      second verify, and those docs have few true partners.
+
+    Wave 1 is a subset of the full candidate set and wave 2 is complete
+    for every doc wave 1 left unresolved, so the drops equal the full
+    expansion's whenever no bucket exceeds `max_bucket` (pinned in
+    tests/test_dedup.py); past the cap this path drops strictly MORE true
+    duplicates than the capped pair spelling (planted-flood tests).
+    """
+
+    def size_ok(a: F.Column, b: F.Column) -> F.Column:
+        # The exact size prune (j ≥ t ⟹ min(n) ≥ t·max(n)), before any verify.
+        return (a["_sz"] >= F.lit(threshold) * b["_sz"]) & (
+            b["_sz"] >= F.lit(threshold) * a["_sz"]
+        )
+
+    member = F.struct(F.col(id_col).alias("_id"), F.col("n").alias("_sz"))
+    wband = Window.partitionBy("band", "bucket")
+    w1 = (
+        entries.select(
+            "_is_corpus",
+            member.alias("_b"),
+            F.min(F.when(F.col("_is_corpus") == 1, member)).over(wband).alias("_minc"),
+            F.min(F.when(F.col("_is_corpus") == 0, member)).over(wband).alias("_minb"),
+        )
+        .filter(F.col("_is_corpus") == 0)
+        .select(
+            "_b",
+            F.explode(
+                F.array_compact(
+                    F.array(
+                        "_minc",
+                        F.when(F.col("_minb._id") < F.col("_b._id"), F.col("_minb")),
+                    )
+                )
+            ).alias("_a"),
+        )
+        .filter(size_ok(F.col("_a"), F.col("_b")))
+        .select(F.col("_a._id").alias("doc_a"), F.col("_b._id").alias("doc_b"))
+    )
+    dropped1 = _persist(
+        _verify_jaccard(w1, a_side, b_side, threshold, id_col)
+        .select(F.col("doc_b").alias(id_col))
+        .distinct()
+    )
+    losers = dropped1
+    # Wave-2 skip (round 6): zero extra jobs, since n_batch is counted by
+    # the caller and this count is the eager materializer of dropped1.
+    # When wave 1 dropped the ENTIRE batch — the re-ingest of already-seen
+    # data, the commonest degenerate incremental input — wave 2 has no
+    # unresolved b-side doc and is a provable no-op.
+    if dropped1.count() < n_batch:
+        # Members stay SLIM (id, size, flags) — carrying token arrays into
+        # the member lists materializes B² × array-bytes per bucket in the
+        # expansion (the round-12 bucket-local-verify dead end, see
+        # minhash_lsh_pairs).  shuffle_hash: dropped1 is pair-derived
+        # (explode lineage, no usable static estimate).
+        entries2 = entries.join(
+            dropped1.withColumn("_res", F.lit(1)).hint("shuffle_hash"),
+            on=id_col,
+            how="left",
+        ).na.fill({"_res": 0})
+        grouped = _grouped_buckets(
+            entries2,
+            F.struct(
+                F.col(id_col).alias("_id"), F.col("n").alias("_sz"), "_is_corpus", "_res"
+            ),
+            max_bucket,
+            f"{caller}[wave2]",
+        )
+        b = F.col("_b")
+        # No distinct: the grouped verify's collect_set dedups (round 13).
+        w2 = (
+            grouped.select(
+                "_ms",
+                F.explode(
+                    F.filter("_ms", lambda m: (m["_is_corpus"] == 0) & (m["_res"] == 0))
+                ).alias("_b"),
+            )
+            .select(
+                b["_id"].alias("doc_b"),
+                F.explode(
+                    F.filter(
+                        "_ms",
+                        lambda a: ((a["_is_corpus"] == 1) | (a["_id"] < b["_id"]))
+                        & size_ok(a, b),
+                    )
+                ).alias("_a"),
+            )
+            .select(F.col("_a._id").alias("doc_a"), "doc_b")
+        )
+        dropped2 = (
+            _verify_jaccard(w2, a_side, b_side, threshold, id_col)
+            .select(F.col("doc_b").alias(id_col))
+            .distinct()
+        )
+        losers = dropped1.unionByName(dropped2).distinct()
+    # shuffle_hash: same rationale as near_dedup_kept — pair-derived loser
+    # sets have explode lineage (no usable static estimate) and can be
+    # billions of ids at corpus scale; never statically broadcast.
+    return b_side.select(id_col).join(
+        losers.hint("shuffle_hash"), on=id_col, how="left_anti"
+    )
+
+
 def lsh_near_dedup_kept(
     df: DataFrame,
     *,
@@ -866,137 +1024,27 @@ def lsh_near_dedup_kept(
 
     Same greedy lowest-id-wins semantics as near_dedup_kept (drop b iff
     ANY a < b has jaccard ≥ threshold), but candidates come from banded
-    MinHash — nothing quadratic in corpus size.
-
-    Unlike the pair-set queries, kept-set semantics only need ONE
-    qualifying partner per dropped doc, so verification runs in TWO WAVES
-    instead of over the full bucket pair expansion (round 5; measured
-    2.6M → ~30k verified candidates on the sf0.1 corpus, where 961k true
-    pairs resolve just 2.6k drops):
-
-    - Wave 1 pairs every bucket member with its bucket's MINIMUM id only
-      (Σ(B-1) candidates per bucket instead of B(B-1)/2), spelled
-      ARRAY-FREE — a groupBy min + an equi-join back on (band, bucket) —
-      so it carries NO bucket cap and NO per-row O(bucket) memory: a
-      degenerate 10^6-member boilerplate bucket costs 10^6 verifies (not
-      5·10^11) and, unlike the capped pair path, still gets DEDUPED
-      instead of skipped-with-a-warning.  On clique-heavy corpora — the
-      real-world near-dup shape — the cluster minimum shares a bucket
-      with nearly every member, so wave 1 resolves almost all drops.
-    - Wave 2 runs the capped grouped-bucket expansion with resolved docs
-      FILTERED OUT of the b-side inside the member array (resolved docs
-      stay on the a-side: a dropped doc still kills later ids — greedy is
-      one-hop, not transitive).  Only pairs among still-unresolved docs —
-      true uniques and stragglers whose bucket-min failed the size prune
-      or the exact verify — reach the second verify, and those docs are
-      precisely the ones with few true partners.
-
-    Wave 1 is a subset of the full candidate set and wave 2 is complete
-    for every doc wave 1 left unresolved, so the union of drops equals
-    the full expansion's drop set whenever no bucket exceeds `max_bucket`
-    (output equality with the pair-set spelling is pinned in
-    tests/test_dedup.py); past the cap this path drops strictly MORE true
-    duplicates than the pair-set spelling (planted-flood test).
+    MinHash — nothing quadratic in corpus size.  This is
+    incremental_kept_against with no corpus side: the whole frame is the
+    batch of _two_wave_kept, which holds both verify waves.
     """
-    num_hashes, bands, seed = 64, 8, 7
-    rows_per_band = num_hashes // bands
-    # ONE persisted frame carries (id, _toks, _n, sig) for wave-1 banding,
-    # the wave-1 verify joins, AND wave-2 banding (round 12 — previously
-    # two persisted frames with two eager counts; one materialization pass
-    # fewer, same bytes cached).  Eager count: the lazy-persist race, see
-    # minhash_lsh_pairs.
-    sigf = _persist(
-        df.select(F.col(id_col), hashed_tokens_col(text_col).alias("_toks"))
-        .withColumn("_n", F.size("_toks"))
-        .withColumn(
-            "sig", _sig_col(F.col("_toks"), num_hashes=num_hashes, seed=seed)
-        )
-    )
-    sigf.count()
-
-    size_ok = (
-        F.col("_a._sz") >= F.lit(threshold) * F.col("_b._sz")
-    ) & (F.col("_b._sz") >= F.lit(threshold) * F.col("_a._sz"))
-
-    # Wave 1: per-bucket minimum as a WINDOW min over (band, bucket)
-    # (struct min = lexicographic = min id first) instead of the round-5
-    # groupBy + join-back (round 13, guide §2.4): the join spelling
-    # expanded the unpersisted banding expression TWICE (agg input + join
-    # probe) and paid two exchanges; every entry row must reach its
-    # bucket's reducer anyway to be paired with the minimum, so the
-    # window's single exchange ships the same bytes once, and the
-    # partition-local sort replaces the join probe.  Pair set is
-    # bit-identical (same min struct, same filters; pinned by the
-    # twowave-vs-pairs equality tests).  No member list materializes; a
-    # degenerate bucket costs one sorted run, never B².
+    # ONE persisted frame carries (id, toks, n, sig) for banding AND both
+    # verify waves.  Eager count: the lazy-persist race, see
+    # minhash_lsh_pairs; it is also the batch size of the wave-2 skip.
+    sigf = _persist(build_signature_table(df, id_col=id_col, text_col=text_col))
+    n_docs = sigf.count()
     entries = band_entries_from_sig(
-        sigf, bands=bands, rows_per_band=rows_per_band,
-        id_col=id_col, extra_cols=("_n",),
+        sigf.withColumn("_is_corpus", F.lit(0)),
+        bands=LSH_BANDS,
+        rows_per_band=LSH_NUM_HASHES // LSH_BANDS,
+        id_col=id_col,
+        extra_cols=("n", "_is_corpus"),
     )
-    member = F.struct(F.col(id_col).alias("_id"), F.col("_n").alias("_sz"))
-    w1 = (
-        entries.select(
-            member.alias("_b"),
-            F.min(member).over(Window.partitionBy("band", "bucket")).alias("_a"),
-        )
-        .filter(F.col("_a._id") < F.col("_b._id"))
-        .filter(size_ok)
-        .select(F.col("_a._id").alias("doc_a"), F.col("_b._id").alias("doc_b"))
+    side = sigf.hint("shuffle_hash")
+    return _two_wave_kept(
+        entries, side, side, n_docs, threshold=threshold, id_col=id_col,
+        max_bucket=max_bucket, caller="lsh_near_dedup_kept",
     )
-    dropped1 = _persist(
-        _verify_jaccard(w1, sigf, threshold, id_col)
-        .select(F.col("doc_b").alias(id_col))
-        .distinct()
-    )
-    dropped1.count()
-
-    # Wave 2: capped grouped-bucket expansion with resolved docs pruned
-    # from the b-side INSIDE the member arrays (JVM array filter — the
-    # pruned pairs are never materialized).  shuffle_hash: dropped1 is
-    # pair-derived (explode lineage, no usable static estimate;
-    # corpus-scale at 100 TB).  Members stay SLIM (id, size, resolved
-    # flag) — carrying token arrays into the member lists materializes
-    # B² × array-bytes per bucket in the expansion (the round-12
-    # bucket-local-verify dead end, see minhash_lsh_pairs).
-    tagged = sigf.join(
-        dropped1.withColumn("_res", F.lit(1)).hint("shuffle_hash"),
-        on=id_col,
-        how="left",
-    ).na.fill({"_res": 0})
-    entries2 = band_entries_from_sig(
-        tagged, bands=bands, rows_per_band=rows_per_band,
-        id_col=id_col, extra_cols=("_n", "_res"),
-    )
-    member2 = F.struct(
-        F.col(id_col).alias("_id"), F.col("_n").alias("_sz"), F.col("_res")
-    )
-    grouped2 = _grouped_buckets(
-        entries2, member2, max_bucket, "lsh_near_dedup_kept[wave2]"
-    )
-    unresolved_tail = F.filter(
-        F.slice("_ms", F.col("_i") + 2, F.size("_ms")),
-        lambda m: m["_res"] == 0,
-    )
-    # No distinct: the grouped verify's collect_set dedups (round 13).
-    w2 = (
-        grouped2.select("_ms", F.posexplode("_ms").alias("_i", "_a"))
-        .select("_a", F.explode(unresolved_tail).alias("_b"))
-        .filter(size_ok)
-        .select(F.col("_a._id").alias("doc_a"), F.col("_b._id").alias("doc_b"))
-    )
-    dropped2 = (
-        _verify_jaccard(w2, sigf, threshold, id_col)
-        .select(F.col("doc_b").alias(id_col))
-        .distinct()
-    )
-
-    # shuffle_hash: same rationale as near_dedup_kept — pair-derived loser
-    # sets have explode lineage (no usable static estimate) and can be
-    # billions of ids at corpus scale; never statically broadcast.
-    losers = dropped1.unionByName(dropped2).distinct()
-    return df.join(
-        losers.hint("shuffle_hash"), on=id_col, how="left_anti"
-    ).select(id_col)
 
 
 def q_dedup_lsh_kept(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1415,19 +1463,14 @@ def incremental_kept_against(
     batch pays tokenize+minhash.  Semantics are identical to
     lsh_incremental_kept (corpus always wins; between batch docs the lower
     id wins) whenever no bucket exceeds `max_bucket`: output equality is
-    pinned in tests/test_dedup.py.  Verification runs in TWO WAVES (round
-    5, the lsh_near_dedup_kept shape): wave 1 pairs each batch doc with
-    only the bucket's min corpus member and min batch member — array-free
-    and UNCAPPED, so batch docs landing in boilerplate buckets larger
-    than the cap are still deduped (strictly more complete than the
-    capped expansion alone; planted-flood test) — and wave 2 runs the
-    capped grouped expansion for whatever wave 1 left unresolved.
-    `num_hashes`/`seed` must match the
-    values the signature table was built with — the stored signature WIDTH
-    is validated loudly below (a silent mismatch would band past the stored
-    arrays' end, buckets would never collide, and every duplicate batch doc
-    would be kept); the seed cannot be validated from the data and remains
-    the caller's contract.
+    pinned in tests/test_dedup.py.  The two verify waves are
+    _two_wave_kept's; batch docs landing in boilerplate buckets larger
+    than the cap are still deduped (planted-flood test).
+    `num_hashes`/`seed` must match the values the signature table was
+    built with — the stored signature WIDTH is validated loudly below (a
+    silent mismatch would band past the stored arrays' end, buckets would
+    never collide, and every duplicate batch doc would be kept); the seed
+    cannot be validated from the data and remains the caller's contract.
     """
     if num_hashes % bands != 0:
         raise ValueError(
@@ -1465,71 +1508,6 @@ def incremental_kept_against(
     ).unionByName(
         bat.select(F.col(id_col), "toks", "n", "sig", F.lit(0).alias("_is_corpus"))
     )
-    def _verify_losers(candidates: DataFrame, sig_side: DataFrame) -> DataFrame:
-        """(doc_a, doc_b) candidates → distinct losing batch ids: exact
-        size prune + Jaccard verify + the precedence rule (corpus always
-        beats a batch doc; between batch docs the lower id wins).
-
-        `sig_side` is the frame the a-side token arrays come from — passed
-        EXPLICITLY (not closed over) because the caller narrows `all_sig`
-        to the batch-adjacent persisted slice after this helper is
-        defined; a closure would silently verify against whichever frame
-        the name happened to mean at call time.
-
-        Grouped two-level attach (round 13 — same rewrite as
-        _verify_jaccard, see there): candidates need not be pre-deduped —
-        collect_set absorbs the dedup into the groupBy(doc_a) exchange,
-        `_ta` attaches once per distinct doc_a, and only the exploded
-        per-pair row meets the batch side.
-
-        shuffle_hash on the a-side: the explode-derived candidate frame
-        has no usable size estimate and the corpus∪batch token side is
-        unboundedly large; never broadcast.  No hint on the batch side:
-        `bat` is the bounded daily batch (the whole point of the
-        incremental form) and its cached size estimate is real — AQE may
-        broadcast it when it actually fits (and then the fat exploded
-        side never crosses an exchange at all)."""
-        grp = candidates.groupBy("doc_a").agg(
-            F.collect_set("doc_b").alias("_bs")
-        )
-        with_a = grp.join(
-            sig_side.select(
-                F.col(id_col).alias("doc_a"),
-                F.col("toks").alias("_ta"),
-                F.col("n").alias("_na"),
-                "_is_corpus",
-            ).hint("shuffle_hash"),
-            on="doc_a",
-        )
-        pair_rows = with_a.select(
-            "doc_a", "_ta", "_na", "_is_corpus",
-            F.explode("_bs").alias("doc_b"),
-        )
-        with_b = pair_rows.join(
-            bat.select(
-                F.col(id_col).alias("doc_b"),
-                F.col("toks").alias("_tb"),
-                F.col("n").alias("_nb"),
-            ),
-            on="doc_b",
-        )
-        size_ok = (F.col("_na") >= F.lit(threshold) * F.col("_nb")) & (
-            F.col("_nb") >= F.lit(threshold) * F.col("_na")
-        )
-        inter = F.size(F.array_intersect("_ta", "_tb"))
-        union = F.col("_na") + F.col("_nb") - inter
-        jac = inter.cast("double") / union
-        precedence = (F.col("_is_corpus") == 1) | (
-            F.col("doc_a") < F.col("doc_b")
-        )
-        return (
-            with_b.filter(precedence)
-            .filter(size_ok)
-            .filter(jac >= threshold)
-            .select(F.col("doc_b").alias(id_col))
-            .distinct()
-        )
-
     # Batch-adjacency prune (round 5): a bucket with no batch member can
     # never produce a candidate, so the corpus's band entries are filtered
     # MAP-SIDE against the batch's (band, bucket) key set before any agg.
@@ -1551,7 +1529,7 @@ def incremental_kept_against(
             bands=bands,
             rows_per_band=rows_per_band,
             id_col=id_col,
-            extra_cols=("_is_corpus",),
+            extra_cols=("n", "_is_corpus"),
         ).join(
             F.broadcast(batch_buckets), on=["band", "bucket"], how="left_semi"
         )
@@ -1571,123 +1549,16 @@ def incremental_kept_against(
         all_sig.join(near_ids.hint("shuffle_hash"), on=id_col, how="left_semi")
     )
     all_sig_near.count()
-
-    # Wave 1 (round 5 — the two-wave shape of lsh_near_dedup_kept applied
-    # to the bipartite form): pair every batch member with just TWO bucket
-    # representatives — the minimum-id corpus member (ANY corpus match
-    # kills a batch doc, so one representative suffices as a first try)
-    # and the minimum-id batch member (killer of every later batch doc in
-    # the bucket).  Array-free partial-agg groupBy + equi-join: NO bucket
-    # cap and no per-row O(bucket) memory, so a 10^6-member boilerplate
-    # corpus bucket costs ONE candidate per batch doc instead of 10^6 —
-    # and batch docs landing in capped buckets still get deduped instead
-    # of silently kept.
-    # Round 13: the two bucket representatives come from WINDOW mins over
-    # (band, bucket) instead of the round-5 groupBy + join-back — every
-    # batch entry must reach its bucket's reducer anyway to meet the
-    # representatives, so the window's single exchange ships the same
-    # bytes with one exchange + one join + one cache scan fewer (and
-    # one fewer job in the wave-1 action chain, the scaling-ratio-1.00
-    # fix VERDICT r12 item 3 asked for).  Pair set bit-identical; the
-    # grouped verify's collect_set dedups (no separate distinct).
-    wband = Window.partitionBy("band", "bucket")
-    w1 = (
-        entries.select(
-            F.col(id_col),
-            "_is_corpus",
-            F.min(F.when(F.col("_is_corpus") == 1, F.col(id_col)))
-            .over(wband)
-            .alias("_minc"),
-            F.min(F.when(F.col("_is_corpus") == 0, F.col(id_col)))
-            .over(wband)
-            .alias("_minb"),
-        )
-        .filter(F.col("_is_corpus") == 0)
-        .select(
-            F.col(id_col).alias("doc_b"),
-            F.explode(
-                F.array_compact(
-                    F.array(
-                        F.col("_minc"),
-                        F.when(
-                            F.col("_minb") < F.col(id_col), F.col("_minb")
-                        ),
-                    )
-                )
-            ).alias("doc_a"),
-        )
-        .select("doc_a", "doc_b")
+    # The corpus∪batch a-side is unboundedly large: shuffle_hash.  `bat` is
+    # the bounded daily batch (the whole point of the incremental form)
+    # and its cached size estimate is real, so it stays unhinted — AQE may
+    # broadcast it when it fits, and the fat exploded side then never
+    # crosses an exchange at all.
+    return _two_wave_kept(
+        entries, all_sig_near.hint("shuffle_hash"), bat, n_batch,
+        threshold=threshold, id_col=id_col, max_bucket=max_bucket,
+        caller="incremental_kept_against",
     )
-    dropped1 = _persist(_verify_losers(w1, all_sig_near))
-    n_dropped1 = dropped1.count()
-
-    # Wave-2 skip (round 6, VERDICT r5 item 6): both counts above are
-    # already forced eagerly, so this guard costs ZERO extra jobs.  If
-    # wave 1 dropped the ENTIRE batch — the re-ingest-of-already-seen-data
-    # case, the most common degenerate input an incremental pipeline sees
-    # — wave 2 has no unresolved b-side doc by construction and the whole
-    # grouped expansion (tag join + groupBy + explode + verify) is a
-    # provable no-op.  The weaker condition (no unresolved batch doc IN
-    # ENTRIES, though some batch docs survive outside any pruned bucket)
-    # would also suffice but needs an extra batch-sized anti-join count
-    # per run; measured A/B in PLANS.md — not worth paying on every
-    # normal batch for the same skip.
-    if n_dropped1 == n_batch:
-        return new_df.join(
-            dropped1.hint("shuffle_hash"), on=id_col, how="left_anti"
-        ).select(id_col)
-
-    # Wave 2: the capped grouped-bucket bipartite expansion over what wave
-    # 1 left unresolved.  Members carry the corpus flag so pair generation
-    # stays bipartite WITHOUT a join — the b-side is restricted to
-    # UNRESOLVED batch docs inside the member array (corpus×corpus
-    # cohabitation is irrelevant to which batch docs survive, so it is
-    # never generated); resolved docs stay on the a-side (a dropped batch
-    # doc still kills later batch ids — the rule is one-hop).  Both
-    # explodes are partition-local; the groupBy inside _grouped_buckets is
-    # the only shuffle of this candidate stage.  The resolved tag joins
-    # onto the PERSISTED batch-adjacent entries (no second corpus scan;
-    # only batch members ever read their _res flag on the b-side).
-    # shuffle_hash: dropped1 is pair-derived (explode lineage, no usable
-    # static estimate).
-    entries2 = entries.join(
-        dropped1.withColumn("_res", F.lit(1)).hint("shuffle_hash"),
-        on=id_col,
-        how="left",
-    ).na.fill({"_res": 0})
-    grouped = _grouped_buckets(
-        entries2,
-        F.struct(
-            F.col(id_col).alias("_id"), F.col("_is_corpus"), F.col("_res")
-        ),
-        max_bucket,
-        "incremental_kept_against",
-    )
-    b_rows = grouped.select(
-        "_ms",
-        F.explode(
-            F.filter(
-                F.col("_ms"),
-                lambda m: (m["_is_corpus"] == 0) & (m["_res"] == 0),
-            )
-        ).alias("_b"),
-    )
-    # No distinct: the grouped verify's collect_set dedups (round 13).
-    candidates = (
-        b_rows.select(
-            F.col("_b")["_id"].alias("doc_b"),
-            F.explode(
-                F.filter(
-                    F.col("_ms"), lambda a: a["_id"] != F.col("_b")["_id"]
-                )
-            ).alias("_a"),
-        )
-        .select(F.col("_a")["_id"].alias("doc_a"), "doc_b")
-    )
-    losers = dropped1.unionByName(
-        _verify_losers(candidates, all_sig_near)
-    ).distinct()
-    return new_df.join(losers, on=id_col, how="left_anti").select(id_col)
 
 
 INCREMENTAL_BATCH_MOD = 5  # doc_id % 5 == 0 → 20% of docs are the new batch

@@ -23,14 +23,15 @@ crash between sink write and checkpoint commit) comes from two decisions:
    bit-identical, not merely set-identical.
 
 Scale shape: state is read as a plain parquet scan (at 100 TB: a compacted
-table the ingestion service owns); only the batch is tokenized+signed; the
-candidate stage is the capped band-bucket join from the batch twin.  Nothing
-here collects to the driver.  `compact_signature_state` keeps the state
-listing-bound growth in check: per-batch directories below the stream's
-checkpoint merge into one snapshot (`compacted=<K>`) + incremental tail —
-the Delta/Iceberg checkpoint pattern in plain parquet, crash-safe by
-write ordering (snapshot commits before garbage collection; the reader
-never double-counts overlap).
+table the ingestion service owns); only the batch is tokenized+signed;
+candidates and verify are the batch twin's two-wave core
+(`dedup._two_wave_kept`).  Nothing here collects to the driver.
+`compact_signature_state` keeps the state listing-bound growth in check:
+per-batch directories below the stream's checkpoint merge into one
+snapshot (`compacted=<K>`) + incremental tail — the Delta/Iceberg
+checkpoint pattern in plain parquet, crash-safe by write ordering
+(snapshot commits before garbage collection; the reader never
+double-counts overlap).
 """
 
 from __future__ import annotations

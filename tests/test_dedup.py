@@ -558,6 +558,68 @@ def test_incremental_wave2_skip_on_full_reingest(spark):
     release_persisted()
 
 
+def test_batch_kept_is_incremental_kept_with_no_corpus(spark, sf_dir):
+    """Batch = incremental with an empty corpus: lsh_near_dedup_kept and
+    incremental_kept_against over an empty signature table run the same
+    two-wave core, so they keep the same docs, on the sf0.01 corpus and on
+    a boilerplate flood larger than the bucket cap."""
+    import os
+
+    from pyspark_kmeans_spark.operators import dedup
+    from pyspark_kmeans_spark.sources.tables import load_table
+
+    def both(docs, **kw):
+        empty = dedup.build_signature_table(docs.limit(0))
+        return [
+            {r.doc_id for r in kept.collect()}
+            for kept in (
+                dedup.lsh_near_dedup_kept(docs, **kw),
+                dedup.incremental_kept_against(empty, docs, **kw),
+            )
+        ]
+
+    sf001 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    batch, incremental = both(load_table(spark, sf001, "documents"))
+    assert batch == incremental and batch
+    flood = "common boilerplate license header identical in every document"
+    rows = [(i, flood) for i in range(30)] + [
+        (100, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
+        (101, "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda"),
+        (102, "totally unrelated content words appear exactly once here"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    assert both(df, max_bucket=10) == [{0, 100, 102}] * 2
+    dedup.release_persisted()
+
+
+# Construction jobs (eager count()/first() before a DataFrame is returned)
+# of the two LSH kept queries at sf0.001 on the test session (local[4], 4
+# shuffle partitions), after one warm call, measured before both shared
+# one two-wave core.
+CONSTRUCTION_JOBS = {"q_dedup_lsh_kept": 17, "q_dedup_incremental_lsh": 27}
+
+
+def test_lsh_kept_construction_jobs_do_not_rise(spark, sf_dir):
+    """A new eager action on either two-wave path fails here."""
+    from pyspark_kmeans_spark.operators import dedup
+
+    sc = spark.sparkContext
+    got = {}
+    for name in CONSTRUCTION_JOBS:
+        query = getattr(dedup, name)
+        query(spark, sf_dir).count()
+        group = f"construction_jobs_{name}"
+        sc.setJobGroup(group, name)
+        try:
+            query(spark, sf_dir)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        got[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    dedup.release_persisted()
+    assert all(got[n] <= CONSTRUCTION_JOBS[n] for n in got), got
+
+
 def test_keep_best_keeps_highest_quality_not_lowest_id(spark):
     """Quality-aware keeper selection must differ from min-id-wins where
     it matters: a 3-doc near-dup cluster (pairwise Jaccard 38/42 ≈ 0.905)

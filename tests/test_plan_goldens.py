@@ -1,4 +1,5 @@
-"""Plan-SHAPE golden regression for every headline (bench.py) query.
+"""Plan-SHAPE golden regression for every headline query
+(__spark_entry__.HEADLINE, the set bench.py times).
 
 The value-correctness oracle can't see a broadcast silently degrading to
 sort-merge, a join reordering adding an exchange, or a fact table scanned
@@ -19,12 +20,12 @@ environment).  Regenerate after an INTENDED plan change:
     import sys, json; sys.path.insert(0, '.')
     from pyspark_kmeans_spark.session import get_spark
     from pyspark_kmeans_spark.plans.inspect import plan_signature
-    import __spark_entry__ as e, bench
+    import __spark_entry__ as e
     spark = get_spark(app_name="golden_gen", master="local[4]",
                       shuffle_partitions=4)
     q = e.queries()
     goldens = {n: plan_signature(q[n](spark, "/root/testdata/sf0.001"))
-               for n in bench.HEADLINE}
+               for n in e.HEADLINE}
     json.dump(goldens, open("tests/plan_goldens.json", "w"),
               indent=1, sort_keys=True)
     PY
@@ -35,7 +36,6 @@ from __future__ import annotations
 import json
 import os
 
-import bench
 import __spark_entry__ as entrymod
 from pyspark_kmeans_spark.plans.inspect import plan_signature
 
@@ -46,12 +46,12 @@ def test_headline_plan_shapes_match_golden(spark, sf_dir):
     with open(GOLDEN_PATH) as f:
         goldens = json.load(f)
     queries = entrymod.queries()
-    assert set(goldens) == set(bench.HEADLINE), (
-        "golden file out of sync with bench.HEADLINE — regenerate "
+    assert set(goldens) == set(entrymod.HEADLINE), (
+        "golden file out of sync with __spark_entry__.HEADLINE — regenerate "
         "(recipe in this module's docstring)"
     )
     diffs = {}
-    for name in bench.HEADLINE:
+    for name in entrymod.HEADLINE:
         got = plan_signature(queries[name](spark, sf_dir))
         if got != goldens[name]:
             diffs[name] = {"golden": goldens[name], "got": got}

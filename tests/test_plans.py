@@ -15,9 +15,11 @@ and eager-verify families are documented exceptions —
   pay a corpus-sized build job on the FIRST call per (sf_dir, params) and
   a bounded read (the codebook adds an O(n_cells) collect) on every later
   call — including plan-only ones.
-- the two-wave LSH kept paths (dedup.lsh_near_dedup_kept,
-  incremental_kept_against) eagerly persist+count their candidate frames
-  at construction, by design (the wave-2 input depends on wave-1 results).
+- the two-wave LSH kept paths (dedup.lsh_near_dedup_kept and
+  incremental_kept_against, one core: dedup._two_wave_kept) eagerly
+  persist+count their side frames and wave-1 drops at construction, by
+  design (the wave-2 input depends on wave-1 results); tests/test_dedup.py
+  caps their construction job counts.
 - similarity.hybrid_topk runs its survivor guard (a limit+count) at
   construction so a non-selective keyword fails loudly before the
   broadcast, not after.

@@ -50,6 +50,11 @@ def test_scale_harness_drops_its_scratch_corpora(
         return out
 
     monkeypatch.setattr(bench_scale, "drop_artifacts", recording_drop)
+    forced: list[int] = []
+    real_force = bench_scale.force
+    monkeypatch.setattr(
+        bench_scale, "force", lambda df: forced.append(1) or real_force(df)
+    )
     record = json.loads(json.dumps(bench_scale.run_family(
         spark, "ann", str(tmp_path), sf_dir=sf_dir, ks=(1, 2), repeats=1,
         queries=("ann_ivf_assign",),
@@ -59,6 +64,8 @@ def test_scale_harness_drops_its_scratch_corpora(
     assert record["sizes"]["2"] == 2 * record["sizes"]["1"] > 0
     assert set(record["seconds"]["ann_ivf_assign"]) == {"1", "2"}
     assert isinstance(record["exponent"]["ann_ivf_assign"], float)
+    # One untimed warm-up pass at the first k, then one timed rep per k.
+    assert len(forced) == 3
     # ann_ivf_assign builds the codebook artifact of each scratch corpus;
     # the harness must have dropped it, leaving neither artifact nor tree.
     assert dropped
