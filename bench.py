@@ -4,12 +4,15 @@ local[$SPARK_GRAFT_CPUS].
 Usage: python bench.py                 every headline and extended entry
        python bench.py <name> [...]    only the named registry entries
 
-A full run prints a detail line, writes it to bench_full_last*.json, and
+Each section (headline, extended, or the named entries) first runs every
+entry it times once, untimed, then times interleaved reps (run_section).
+
+A full run prints a detail line, writes it to bench_full_last.json, and
 prints ONE compact JSON line last:
   {"metric": "...", "value": <total sec>, "unit": "sec",
    "queries": {...per-query sec...}, "sf": <sf>}
 A named run prints one "named_queries" line (median, best, cpu and every
-run per entry) after the same warm-up, and writes no file.
+run per entry) and writes no file.
 
 Each query is forced end-to-end with a noop sink (full execution, no
 driver-side collect).  The set covers every operator family: the flagship
@@ -208,150 +211,6 @@ def force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-# Pinned per-query quiet-window wall medians (seconds) at the standard
-# sf0.1 layout — BASELINE.md's round-11 operative re-pin
-# (bench_r11_repin_full.json, load_start 0.08), refreshed per round for
-# entries whose code changed.  The within-run burst detector (VERDICT
-# r11 "What's wrong" #1): a SUSTAINED co-tenant burst inflates all of a
-# query's round-robin reps equally, so the median>2×best requeue never
-# fires — but the query's BEST still sits far above its quiet band.  Any
-# entry whose best exceeds BAND_TOLERANCE × its pin gets one requeue rep
-# and, if still above, lands in `band_flagged` — the JSON self-labels
-# the inflation without a judge re-run.  Entries added or changed in
-# round 12 (the IVFADC residual family, span removal, trio stage 4) are
-# pinned from the round-12 closing quiet run.
-#
-# PIN-REFRESH DISCIPLINE (VERDICT r12 "Next round" #7 — the detector is
-# load-bearing harness machinery, so pins are evidence, not knobs):
-#  - A pin may ONLY be refreshed from a COMMITTED run named here, and a
-#    pin may only move DOWN from a loaded window (a loaded median is an
-#    upper bound of the quiet median, so a downward refresh keeps the
-#    detector conservative — it can under-flag, never false-flag).
-#    Current pin sources: bench_r11_repin_full.json (round-11 quiet
-#    re-pin, load 0.08) for entries untouched since; and the lower of
-#    bench_r13_close1_full.json (load ~3.5) / bench_r13_repin_full.json
-#    (load_start 0.18, v2 66.0 s — the round-13 operative record) for
-#    every entry whose code changed in round 13 (the dedup verify/CC
-#    family, the ANN/PQ/codebook literal family) plus the six
-#    previously-unpinned round-11/12 additions.  All 29 ran faster in
-#    BOTH round-13 runs than their old quiet pins.
-#  - A non-empty `band_flagged` in a driver or closing run is REPORTED
-#    in the round's OPTIMIZATION_r*.md — never silently re-run away.
-#  - The detector only ever ADDS one rep and drops that query's worst
-#    sample; it never removes an entry from the ledger.
-BAND_TOLERANCE = 1.5
-# The pins are local[32] medians: on another core count every entry would
-# be compared against a different machine shape's numbers.
-PINNED_BAND_CORES = 32
-PINNED_BAND: dict[str, float] = {
-    "ann_ivf_assign": 0.815,
-    "ann_ivf_topk": 3.567,
-    "ann_lsh_topk": 4.215,
-    "ann_pq_topk": 6.134,
-    "ann_topk_cosine": 2.755,
-    "asof_last_order": 1.057,
-    "bucketed_order_revenue": 0.841,
-    "codebook_check": 0.97,
-    "codebook_update_check": 13.046,
-    "curation_contamination": 0.942,
-    "curation_decontaminated": 2.81,
-    "curation_domain_filter": 0.809,
-    "curation_domain_stats": 0.875,
-    "curation_dup_ngrams": 3.363,
-    "curation_funnel": 0.636,
-    "curation_fuzzy_contamination": 1.958,
-    "curation_length_batching": 0.436,
-    "curation_score_percentiles": 0.688,
-    "curation_segment_dedup": 0.758,
-    "curation_span_dedup": 4.198,
-    "curation_token_budget": 1.531,
-    "curation_token_budget_per_lang": 1.456,
-    "curation_top_boilerplate": 1.939,
-    "customer_features": 2.305,
-    "customer_revenue_stats": 1.503,
-    "daily_ingest": 1.98,
-    "daily_ingest_check": 16.989,
-    "daily_ingest_lsh": 8.919,
-    "dedup_exact": 0.293,
-    "dedup_incremental_lsh": 5.941,
-    "dedup_jaccard_pairs": 4.259,
-    "dedup_lsh_kept": 5.679,
-    "dedup_lsh_recall": 12.171,
-    "dedup_minhash_lsh": 5.021,
-    "dedup_semantic": 3.04,
-    "dedup_semantic_incremental": 2.76,
-    "dedup_simhash_recall": 10.205,
-    "epoch_plan": 0.657,
-    "event_hourly_rollup": 0.439,
-    "event_segment_rollup": 0.549,
-    "event_user_sessions": 0.832,
-    "graph_cross_source": 0.683,
-    "graph_degrees": 0.557,
-    "graph_triangles": 15.258,
-    "graph_triangles_capped": 1.266,
-    "incremental_semdedup_check": 4.373,
-    "kmeans_check": 4.347,
-    "kmeans_embedding_clusters": 1.358,
-    "lsh_twowave_check": 6.774,
-    "mixture_weights": 0.45,
-    "multimodal_features": 1.753,
-    "pairs_update_check": 9.457,
-    "partitioned_month_revenue": 0.414,
-    "pq_recall_check": 3.018,
-    "pricing_summary": 2.427,
-    "range_join_recent_orders": 0.967,
-    "region_volume": 1.103,
-    "row_number": 0.438,
-    "sorted_shipdate_window": 0.311,
-    "source_quota_sample": 0.219,
-    "split_leakage_safe": 5.368,
-    "streaming_ingest_check": 50.396,
-    "text_lang_id": 0.588,
-    "text_quality": 0.494,
-    "top_orders": 0.982,
-    "tpch_q11": 0.681,
-    "tpch_q12": 0.592,
-    "tpch_q17": 0.538,
-    "tpch_q19": 0.444,
-    "tpch_q2": 3.305,
-    "tpch_q20": 0.539,
-    "tpch_q21": 1.063,
-    "tpch_q4": 0.614,
-    "tpch_q8": 1.056,
-    "tpch_q9": 0.929,
-    "training_order": 0.481,
-    "zorder_cust_window": 0.287,
-    "ann_ivfpq_topk": 4.025,
-    "curation_span_removed": 3.873,
-    "daily_ingest_semantic": 33.428,
-    "daily_ingest_semantic_check": 46.232,
-    "ivfpq_recall_check": 2.739,
-    "pq_index_update_check": 33.114,
-}
-
-
-def band_pins(sf_dir: str, cores: int) -> dict[str, float]:
-    """The pinned quiet bands that apply to a run.  They only describe the
-    standard layout (bench at sf0.1, gates at sf0.01) on PINNED_BAND_CORES
-    cores; any other run disables the sustained-burst detector rather than
-    flagging everything."""
-    standard = (
-        os.path.basename(sf_dir.rstrip("/")) == "sf0.1" and GATES_SF == "0.01"
-    )
-    return PINNED_BAND if standard and cores == PINNED_BAND_CORES else {}
-
-
-def band_flagged(runs: dict[str, list[float]], pinned: dict[str, float]) -> list:
-    """Post-requeue sustained-burst labels: entries whose best is STILL
-    above the pinned band after the extra rep — environment,
-    self-adjudicated in-JSON."""
-    return sorted(
-        n
-        for n, rs in runs.items()
-        if pinned.get(n) is not None and min(rs) > BAND_TOLERANCE * pinned[n]
-    )
-
-
 def settle(runs: list[float], n_keep: int) -> float:
     """Median over the n_keep LOWEST runs.  For a query that was never
     requeued this is the plain median; for a requeued one the extra rep
@@ -361,9 +220,18 @@ def settle(runs: list[float], n_keep: int) -> float:
 
 
 def run_section(
-    spark, queries, names, n_reps, jvm_pid, dir_for, pinned=None
+    spark, queries, names, n_reps, jvm_pid, dir_for
 ) -> tuple[dict, dict, list]:
-    """Round-robin timing (VERDICT r10 next-round #3): rep 1 of EVERY
+    """Time `names`: one untimed round, then round-robin timed reps.
+
+    The untimed round forces every entry once in the dir its timed reps
+    use (`dir_for`), so no timed rep is an entry's first execution in the
+    JVM (its own codegen and readers), and the entry itself builds the
+    write-once warehouse artifacts it reads — their first-touch build is
+    the ingestion job's cost by contract (BASELINE.md), never a measured
+    rep's.
+
+    Round-robin timing (VERDICT r10 next-round #3): rep 1 of EVERY
     query, then rep 2, ... — instead of n consecutive reps per query.
     Two driver ledgers in a row were poisoned by episodic co-tenant
     bursts lasting minutes: with consecutive reps one burst inflates all
@@ -373,43 +241,39 @@ def run_section(
     queries' single reps, so each query's median survives.
 
     Then one requeue pass at end of run: any query whose median still
-    exceeds 2× its own best, OR whose BEST exceeds BAND_TOLERANCE × its
-    pinned quiet-window median (the round-12 within-run detector for
-    SUSTAINED bursts that inflate all reps equally — VERDICT r11 "What's
-    wrong" #1), gets ONE extra rep, and its median is taken over the
-    n_reps lowest samples (the extra displaces the poisoned worst).
-    Queries still above after requeue stay in the ledger but are listed
-    in `requeued` / `band_flagged`, so the JSON self-labels the
-    exception."""
-    pinned = pinned or {}
+    exceeds 2× its own best gets ONE extra rep, and its median is taken
+    over the n_reps lowest samples (the extra displaces the poisoned
+    worst).  Requeued queries stay in the ledger and are listed in
+    `requeued`, so the JSON self-labels the exception."""
+
+    def run(name: str) -> None:
+        force(queries[name](spark, dir_for(name)))
+
+    for name in names:
+        run(name)
+        spark.catalog.clearCache()
     runs: dict[str, list[float]] = {n: [] for n in names}
     cpus: dict[str, list[float]] = {n: [] for n in names}
+
+    def rep(name: str) -> None:
+        w, c = timed(lambda: run(name), jvm_pid)
+        runs[name].append(w)
+        cpus[name].append(c)
+        # Operators persist intermediates (tokenization, signatures) for
+        # their own multi-use plans; drop them so repeats and queries are
+        # measured independently and memory pressure doesn't leak across
+        # timings.
+        spark.catalog.clearCache()
+
     for _ in range(n_reps):
         for name in names:
-            w, c = timed(
-                lambda: force(queries[name](spark, dir_for(name))), jvm_pid
-            )
-            runs[name].append(w)
-            cpus[name].append(c)
-            # Operators persist intermediates (tokenization, signatures)
-            # for their own multi-use plans; drop them so repeats and
-            # queries are measured independently and memory pressure
-            # doesn't leak across timings.
-            spark.catalog.clearCache()
+            rep(name)
     requeued: list[str] = []
     for name in names:
         rs = sorted(runs[name])
-        pin = pinned.get(name)
-        episodic = len(rs) >= 2 and median_of(rs) > 2 * rs[0]
-        sustained = pin is not None and rs[0] > BAND_TOLERANCE * pin
-        if episodic or sustained:
+        if len(rs) >= 2 and median_of(rs) > 2 * rs[0]:
             requeued.append(name)
-            w, c = timed(
-                lambda: force(queries[name](spark, dir_for(name))), jvm_pid
-            )
-            runs[name].append(w)
-            cpus[name].append(c)
-            spark.catalog.clearCache()
+            rep(name)
     return runs, cpus, requeued
 
 
@@ -422,49 +286,15 @@ def main(names: list[str]) -> None:
         raise SystemExit(f"not registered: {unknown}")
     spark = get_spark(app_name="bench")
     load_start = loadavg()
-    # Warm-up: JVM/codegen/readers (not counted), plus the write-once
-    # warehouse artifacts (signature/digest/lang-stats/codebook tables).
-    # Their first-touch builds are the ingestion job's cost by contract
-    # (BASELINE.md) and must not land inside a measured repeat — with 2
-    # extended repeats the build would otherwise BE the recorded median.
-    force(queries["scan_projection"](spark, sf_dir))
-    from pyspark_kmeans_spark.operators.dedup import ensure_signature_table
-    from pyspark_kmeans_spark.operators.ingest import (
-        ensure_digest_table,
-        ensure_lang_stats_table,
-    )
-    from pyspark_kmeans_spark.operators.graph import ensure_pairs_table
-    from pyspark_kmeans_spark.operators.similarity import (
-        ensure_codebook_table,
-        ensure_pq_codebook,
-        ensure_pq_index_table,
-        ensure_residual_pq_codebook,
-    )
-
     gates_dir = gates_dir_for(sf_dir)
-    for d in {sf_dir, gates_dir}:
-        ensure_signature_table(spark, d)
-        ensure_digest_table(spark, d)
-        ensure_lang_stats_table(spark, d)
-        ensure_codebook_table(spark, d)
-        ensure_pairs_table(spark, d)
-        ensure_pq_codebook(spark, d)
-        # the residual-encoded IVFADC artifacts the registered path reads
-        # (the raw-unit CODEBOOK above is warmed for ann_pq_topk, the ADC
-        # correctness baseline)
-        ensure_residual_pq_codebook(spark, d)
-        ensure_pq_index_table(spark, d)
-    spark.catalog.clearCache()
     jvm_pid = _jvm_pid(spark)
-    cores = spark.sparkContext.defaultParallelism
-    pinned = band_pins(sf_dir, cores)
 
     def dir_for(name: str) -> str:
         return gates_dir if is_gate(name) else sf_dir
 
     if names:
         runs, cpus, requeued = run_section(
-            spark, queries, names, REPEATS, jvm_pid, dir_for, pinned=pinned
+            spark, queries, names, REPEATS, jvm_pid, dir_for
         )
         print(json.dumps({
             "metric": "named_queries",
@@ -474,7 +304,6 @@ def main(names: list[str]) -> None:
             "runs": {n: [round(r, 3) for r in runs[n]] for n in names},
             "repeats": REPEATS,
             "requeued": requeued,
-            "band_flagged": band_flagged(runs, pinned),
             "gates": sorted(n for n in names if dir_for(n) != sf_dir),
             "load_start": load_start,
             "load_end": loadavg(),
@@ -489,7 +318,7 @@ def main(names: list[str]) -> None:
     # run_section) and report the per-query MEDIAN (plus the best, to
     # expose the noise floor), sorted slowest first.
     h_runs, h_cpus, h_requeued = run_section(
-        spark, queries, HEADLINE, REPEATS, jvm_pid, dir_for, pinned=pinned
+        spark, queries, HEADLINE, REPEATS, jvm_pid, dir_for
     )
     medians = {n: round(settle(h_runs[n], REPEATS), 3) for n in HEADLINE}
     bests = {n: round(min(h_runs[n]), 3) for n in HEADLINE}
@@ -504,7 +333,7 @@ def main(names: list[str]) -> None:
         n for n in ext_names if is_gate(n) and gates_dir != sf_dir
     ]
     e_runs, e_cpus, e_requeued = run_section(
-        spark, queries, ext_names, REPEATS_EXT, jvm_pid, dir_for, pinned=pinned
+        spark, queries, ext_names, REPEATS_EXT, jvm_pid, dir_for
     )
     extended = {n: round(settle(e_runs[n], REPEATS_EXT), 3) for n in ext_names}
     extended_best = {n: round(min(e_runs[n]), 3) for n in ext_names}
@@ -512,7 +341,6 @@ def main(names: list[str]) -> None:
         n: round(median_of(sorted(e_cpus[n])), 3) for n in ext_names
     }
     requeued = sorted(h_requeued + e_requeued)
-    flagged = band_flagged({**h_runs, **e_runs}, pinned)
 
     load_end = loadavg()
     order = sorted(medians, key=medians.get, reverse=True)
@@ -542,8 +370,6 @@ def main(names: list[str]) -> None:
         "repeats": REPEATS,
         "repeats_extended": REPEATS_EXT,
         "requeued": requeued,
-        "band_flagged": flagged,
-        "band_tolerance": BAND_TOLERANCE,
         "gates_sf": float(GATES_SF) if gate_names else float(sf),
         "gates": sorted(gate_names),
         "load_start": load_start,
@@ -551,17 +377,7 @@ def main(names: list[str]) -> None:
         "sf": float(sf),
     }
     print(json.dumps(detail))
-    # Low-core scaling runs (an 8-core pass on a wider host) get their own
-    # detail file so they never clobber the full-width run's
-    # bench_full_last.json — VERDICT r12 "What's wrong" #4: the r12 8-core
-    # run overwrote the 32-core detail and a cold reader would "find"
-    # phantom regressions.  Full-width = a local[N] session using every
-    # hardware thread; anything narrower is a scaling probe.
-    detail_name = (
-        "bench_full_last.json"
-        if cores >= (os.cpu_count() or cores)
-        else f"bench_full_last_c{cores}.json"
-    )
+    detail_name = "bench_full_last.json"
     detail_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), detail_name
     )
@@ -574,7 +390,7 @@ def main(names: list[str]) -> None:
     # 5+5 query entries regardless of registry growth) so the driver's
     # 2000-char tail capture always keeps it whole and parseable.  The
     # slowest-5 of each section carry median, best-of AND cpu median:
-    # best << median OR wall >> cpu/32 means host steal, not regression
+    # best << median OR wall >> cpu/cores means host steal, not regression
     # (VERDICT r6 "What's wrong" #1; VERDICT r9 Missing #2).
     slowest5_h = order[:5]
     slowest5 = sorted(extended, key=extended.get, reverse=True)[:5]
@@ -601,10 +417,6 @@ def main(names: list[str]) -> None:
                 # end-of-run requeue rep (first 5; full list in detail)
                 "requeued_n": len(requeued),
                 "requeued": requeued[:5],
-                # sustained-burst labels (best > 1.5x pinned quiet band
-                # even after requeue — environment, not regression)
-                "band_flagged_n": len(flagged),
-                "band_flagged": flagged[:5],
                 "gates_sf": float(GATES_SF) if gate_names else float(sf),
                 "detail": detail_name,
                 "load_start": load_start,

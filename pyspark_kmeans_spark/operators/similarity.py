@@ -385,23 +385,7 @@ def ivf_topk(
         F.col("norm").alias("pnorm"),
         F.transform("vec", lambda x: x / F.col("norm")).alias("_puvec"),
     )
-    dists = F.array(
-        *[
-            F.struct(
-                F.aggregate(
-                    F.zip_with(
-                        "_puvec",
-                        _array_lit(c),
-                        lambda x, y: (x - y) * (x - y),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ).alias("d"),
-                F.lit(i).alias("cell"),
-            )
-            for i, c in enumerate(centroids)
-        ]
-    )
+    dists = _cell_dists("_puvec", centroids)
     probe_cells = p.withColumn(
         "cell",
         F.explode(
@@ -446,23 +430,7 @@ def ivf_assign(
         F.col(id_col),
         F.transform("vec", lambda x: x / F.col("norm")).alias("_uvec"),
     )
-    dists = F.array(
-        *[
-            F.struct(
-                F.aggregate(
-                    F.zip_with(
-                        "_uvec",
-                        _array_lit(c),
-                        lambda x, y: (x - y) * (x - y),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ).alias("d"),
-                F.lit(i).alias("cell"),
-            )
-            for i, c in enumerate(centroids)
-        ]
-    )
+    dists = _cell_dists("_uvec", centroids)
     best = F.element_at(F.array_sort(dists), 1)
     cols = [
         F.col(id_col),
@@ -1535,8 +1503,9 @@ def pq_topk(
 def _cell_dists(unit, centroids: list[list[float]]) -> F.Column:
     """Array of (squared-L2, cell) structs of a UNIT-vector column against
     the literal IVF centroids — argmin via element_at(array_sort, 1),
-    n-nearest via slice(array_sort, 1, n).  The ivf_assign distance
-    expression, shared by the IVFADC index builder and probe router."""
+    n-nearest via slice(array_sort, 1, n).  The one IVF routing
+    expression: ivf_topk, ivf_assign and the IVFADC index builder and
+    probe router all call it."""
     return F.array(
         *[
             F.struct(
@@ -1556,12 +1525,6 @@ def _cell_dists(unit, centroids: list[list[float]]) -> F.Column:
     )
 
 
-def _centroid_lit(centroids: list[list[float]]) -> F.Column:
-    """The IVF codebook as a plan-literal array-of-arrays (model-sized by
-    construction — √N cells at the standard sizing)."""
-    return _array_lit(centroids)
-
-
 def _residual(unit, centroids: list[list[float]]) -> F.Column:
     """unit − centroid(argmin-L2 cell): the IVFADC encoding target.  Both
     the routing and the subtraction are pure JVM array expressions over
@@ -1569,7 +1532,7 @@ def _residual(unit, centroids: list[list[float]]) -> F.Column:
     cell = F.element_at(F.array_sort(_cell_dists(unit, centroids)), 1)["cell"]
     return F.zip_with(
         unit,
-        F.element_at(_centroid_lit(centroids), cell + 1),
+        F.element_at(_array_lit(centroids), cell + 1),
         lambda x, y: x - y,
     )
 
@@ -1604,7 +1567,7 @@ def pq_index_frame(
     )
     target = F.zip_with(
         "_u",
-        F.element_at(_centroid_lit(centroids), F.col("cell") + 1),
+        F.element_at(_array_lit(centroids), F.col("cell") + 1),
         lambda x, y: x - y,
     )
     return base.select(

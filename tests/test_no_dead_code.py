@@ -14,14 +14,21 @@ PKG = "pyspark_kmeans_spark"
 
 
 def _tracked_py_files() -> list[str]:
+    """The checkout's tracked *.py files; outside a git work tree (a
+    `git archive` export) every *.py under ROOT, skipping dot-dirs."""
     out = subprocess.run(
         ["git", "ls-files", "*.py"],
         cwd=ROOT,
         capture_output=True,
         text=True,
-        check=True,
-    ).stdout
-    return [os.path.join(ROOT, p) for p in out.splitlines()]
+    )
+    if out.returncode == 0 and out.stdout:
+        return [os.path.join(ROOT, p) for p in out.stdout.splitlines()]
+    found = []
+    for dirpath, dirnames, filenames in os.walk(ROOT):
+        dirnames[:] = [d for d in dirnames if not d.startswith(".")]
+        found += [os.path.join(dirpath, f) for f in filenames if f.endswith(".py")]
+    return found
 
 
 def _docstring_nodes(tree: ast.AST) -> set[int]:

@@ -1,7 +1,7 @@
 """The root tool scripts and the session factory's host defaults: the
-scaling harness cleans up after its scratch corpora, bench.py applies its
-pinned bands only on the machine shape they were measured on, and the
-query registry fails loudly on a broken import."""
+scaling harness cleans up after its scratch corpora, bench.py runs every
+entry of a section once, untimed, in its own dir before the timed reps,
+and the query registry fails loudly on a broken import."""
 
 from __future__ import annotations
 
@@ -18,11 +18,38 @@ from pyspark_kmeans_spark.session import host_defaults
 from pyspark_kmeans_spark.sources.bucketed import _WAREHOUSE, path_tag
 
 
-def test_band_pins_apply_only_on_the_pinned_core_count(sf_dir):
-    sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.1")
-    assert bench.band_pins(sf01, 4) == {}
-    assert bench.band_pins(sf01, bench.PINNED_BAND_CORES) == bench.PINNED_BAND
-    assert bench.band_pins(sf_dir, bench.PINNED_BAND_CORES) == {}
+def test_bench_section_warms_every_entry_once_untimed(
+    spark, sf_dir, monkeypatch
+):
+    registry = entrymod.queries()
+    names = ["row_number", "text_quality"]
+    calls: list[tuple[str, str]] = []
+
+    def recorded(name):
+        def build(spark, d):
+            calls.append((name, d))
+            return registry[name](spark, sf_dir)
+
+        return build
+
+    forced: list[int] = []
+    real_force = bench.force
+    monkeypatch.setattr(
+        bench, "force", lambda df: forced.append(1) or real_force(df)
+    )
+    runs, cpus, requeued = bench.run_section(
+        spark, {n: recorded(n) for n in names}, names, 2,
+        bench._jvm_pid(spark), lambda n: f"dir-of-{n}",
+    )
+    # One untimed round, then two timed reps (three if requeued).
+    for n in names:
+        reps = 2 + (n in requeued)
+        assert len(runs[n]) == len(cpus[n]) == reps
+        assert calls.count((n, f"dir-of-{n}")) == 1 + reps
+    assert len(forced) == len(calls)
+    assert {d for n, d in calls} == {f"dir-of-{n}" for n in names}
+    # The warm-up round runs every entry before any timed rep.
+    assert [n for n, _ in calls[:2]] == names
 
 
 def test_registry_import_failure_is_loud(monkeypatch):
