@@ -7,8 +7,9 @@ Usage: python bench.py                 every headline and extended entry
 Each section (headline, extended, or the named entries) first runs every
 entry it times once, untimed, then times interleaved reps (run_section).
 
-A full run prints a detail line, writes it to bench_full_last.json, and
-prints ONE compact JSON line last:
+A full run prints a detail line, writes it to bench_full_last.json when
+its SF is the default 0.1 (that file is the tracked sf0.1 record; a run
+at any other SF leaves it alone), and prints ONE compact JSON line last:
   {"metric": "...", "value": <total sec>, "unit": "sec",
    "queries": {...per-query sec...}, "sf": <sf>}
 A named run prints one "named_queries" line (median, best, cpu and every
@@ -377,15 +378,15 @@ def main(names: list[str]) -> None:
         "sf": float(sf),
     }
     print(json.dumps(detail))
-    detail_name = "bench_full_last.json"
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), detail_name
-    )
-    try:
-        with open(detail_path, "w") as f:
-            json.dump(detail, f, indent=1)
-    except OSError:
-        pass  # read-only checkout: the stdout detail line still exists
+    if sf == "0.1":  # the tracked record is the default SF's
+        detail_path = os.path.join(
+            os.path.dirname(os.path.abspath(__file__)), "bench_full_last.json"
+        )
+        try:
+            with open(detail_path, "w") as f:
+                json.dump(detail, f, indent=1)
+        except OSError:
+            pass  # read-only checkout: the stdout detail line still exists
     # The compact record is emitted LAST and is BOUNDED (~800 chars, fixed
     # 5+5 query entries regardless of registry growth) so the driver's
     # 2000-char tail capture always keeps it whole and parseable.  The

@@ -1,12 +1,15 @@
 """Warehouse artifact garbage collection (VERDICT r7 stretch #8).
 
 Every persisted artifact family (bucketed/partitioned/sorted/Z-order
-layouts, signature/digest/lang-stats tables, the pair graph, the IVF and
-PQ codebooks, the PQ index) is keyed by
+layouts, signature/digest/lang-stats tables, the pair graph, the IVF
+k-means model, the IVF and PQ codebooks, the PQ index) is keyed by
 `sources.bucketed.bucketed_name`: one directory per (artifact,
 parameter-set, source sf_dir) under `spark-warehouse/`, named
 `<artifact>_<leaf>_<md5(abs sf_dir)[:8]>_b<n>`, plus the
-`<name>.staging-<hex>` dir a fold writes before it commits.  Write-once keying is what
+`<name>.staging-<hex>` dir a fold writes before it commits.  The
+signature tables and the IVF model put a fingerprint of their source's
+file listing in `<artifact>`, so a source rewritten in place leaves its
+old artifact under the same path tag, and it goes with its corpus.  Write-once keying is what
 makes the caches safe — but it also means the warehouse only ever GROWS:
 scratch sf_dirs (tests, the check queries' tmp corpora) leave orphaned
 artifacts behind forever.  This is the one unbounded-growth path the

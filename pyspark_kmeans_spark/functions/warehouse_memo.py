@@ -1,9 +1,10 @@
 """The write-once warehouse artifact lifecycle and its session memo.
 
 Every corpus-scale precomputation (signature/digest/lang-stats tables,
-the pair graph and its prefix state, the IVF and PQ codebooks, the PQ
-index, the layout copies) lives in one directory under `spark-warehouse/`
-named by `artifact_path`, and goes through the three helpers here:
+the pair graph and its prefix state, the IVF k-means model, the IVF and
+PQ codebooks, the PQ index, the layout copies) lives in one directory
+under `spark-warehouse/` named by `artifact_path`, and goes through the
+three helpers here:
 
 - `ensure_artifact`: memo hit, else write unless `_SUCCESS` exists, then
   read and memoize.  Spark writes `_SUCCESS` last, so a torn write from a
@@ -33,6 +34,7 @@ scratch-corpus check queries and the tests).
 from __future__ import annotations
 
 import glob
+import hashlib
 import os
 import shutil
 import threading
@@ -93,6 +95,25 @@ def artifact_path(table: str, sf_dir: str, n_buckets: int = 1) -> str:
     return os.path.join(_WAREHOUSE, bucketed_name(table, sf_dir, n_buckets))
 
 
+def source_fingerprint(sf_dir: str, table: str) -> str:
+    """8-hex md5 of the file listing of `sf_dir`'s `table` source: the
+    relative name, size and mtime_ns of every file under it, no data read.
+    An artifact that carries it in its `table` name part is rebuilt when
+    its source is rewritten in place; the old one stays until its corpus
+    is dropped (`warehouse_gc`), since the path tag is unchanged."""
+    src = os.path.join(sf_dir, f"{table}.parquet")
+    files = (
+        [src]
+        if os.path.isfile(src)
+        else sorted(os.path.join(d, f) for d, _, fs in os.walk(src) for f in fs)
+    )
+    listing = []
+    for f in files:
+        st = os.stat(f)
+        listing.append((os.path.relpath(f, src), st.st_size, st.st_mtime_ns))
+    return hashlib.md5(repr(listing).encode()).hexdigest()[:8]
+
+
 def ensure_artifact(
     spark: SparkSession,
     path: str,
@@ -101,14 +122,19 @@ def ensure_artifact(
 ) -> Any:
     """Return the session's memoized `read(path)`; on a miss, first run
     `write(path)` unless the artifact is committed (`_SUCCESS` present).
-    `read` defaults to a parquet read.  The memo value is shared by every
-    later caller in the session: a caller returning mutable values copies
-    them."""
+    A writer that leaves no top-level marker (MLlib's model save writes
+    only `metadata/` and `data/`) is committed here once it returns, so a
+    write that raises first is redone by the next call.  `read` defaults
+    to a parquet read.  The memo value is shared by every later caller in
+    the session: a caller returning mutable values copies them."""
     cached = memo_get(spark, path)
     if cached is not None:
         return cached
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    marker = os.path.join(path, "_SUCCESS")
+    if not os.path.exists(marker):
         write(path)
+        if not os.path.exists(marker):
+            open(marker, "w").close()
     return memo_put(spark, path, (read or spark.read.parquet)(path))
 
 

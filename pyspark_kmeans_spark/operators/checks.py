@@ -321,7 +321,9 @@ def q_ann_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k, asserted above measured-with-margin floors.  The exact pair
     count is SQL-computable (5 per probe); the recall booleans are what
     the driver hash pins — an IVF codebook or LSH banding regression goes
-    red in the sweep."""
+    red in the sweep.  The IVF side refits k-means here instead of loading
+    the persisted model `ann_ivf_topk` reads, so it stays an independent
+    reference for that artifact."""
     from pyspark_kmeans_spark.functions.persist import registered_persist
     from pyspark_kmeans_spark.operators.similarity import (
         _probes,

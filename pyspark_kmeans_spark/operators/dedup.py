@@ -885,8 +885,9 @@ def _two_wave_kept(
     later ids).  `a_side` carries (id, toks, n) for every doc `entries`
     names, `b_side` for the `n_batch` batch docs, each with its caller's
     join hint (see _verify_jaccard).  The caller persists and counts both
-    sides (the lazy-persist race, see minhash_lsh_pairs); the batch count
-    also feeds the wave-2 skip.
+    sides unless they are reads of a persisted artifact (the lazy-persist
+    race, see minhash_lsh_pairs); the batch count also feeds the wave-2
+    skip.
 
     Kept-set semantics only need ONE qualifying partner per dropped doc, so
     verification runs in TWO WAVES instead of over the full bucket pair
@@ -1032,15 +1033,30 @@ def lsh_near_dedup_kept(
     # verify waves.  Eager count: the lazy-persist race, see
     # minhash_lsh_pairs; it is also the batch size of the wave-2 skip.
     sigf = _persist(build_signature_table(df, id_col=id_col, text_col=text_col))
-    n_docs = sigf.count()
+    return _kept_from_signatures(
+        sigf, sigf.count(), threshold=threshold, id_col=id_col,
+        max_bucket=max_bucket,
+    )
+
+
+def _kept_from_signatures(
+    sigs: DataFrame,
+    n_docs: int,
+    *,
+    threshold: float,
+    id_col: str = "doc_id",
+    max_bucket: int | None = LSH_BUCKET_CAP,
+) -> DataFrame:
+    """The kept ids of the `n_docs` docs of a build_signature_table frame,
+    all of them the batch of _two_wave_kept."""
     entries = band_entries_from_sig(
-        sigf.withColumn("_is_corpus", F.lit(0)),
+        sigs.withColumn("_is_corpus", F.lit(0)),
         bands=LSH_BANDS,
         rows_per_band=LSH_NUM_HASHES // LSH_BANDS,
         id_col=id_col,
         extra_cols=("n", "_is_corpus"),
     )
-    side = sigf.hint("shuffle_hash")
+    side = sigs.hint("shuffle_hash")
     return _two_wave_kept(
         entries, side, side, n_docs, threshold=threshold, id_col=id_col,
         max_bucket=max_bucket, caller="lsh_near_dedup_kept",
@@ -1048,8 +1064,15 @@ def lsh_near_dedup_kept(
 
 
 def q_dedup_lsh_kept(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """lsh_near_dedup_kept over the whole documents table, read from the
+    persisted whole-table signature artifact (ensure_signature_table with
+    batch_mod=None: signed once per documents listing, read thereafter),
+    so a call neither tokenizes nor signs a document; the memoized row
+    count is the batch size of the wave-2 skip.  The kept set equals
+    lsh_near_dedup_kept's (pinned in tests/test_dedup.py)."""
     release_persisted()
-    return lsh_near_dedup_kept(load_table(spark, sf_dir, "documents"), threshold=0.9)
+    sigs, n_docs = _ensure_signatures(spark, sf_dir, batch_mod=None)
+    return _kept_from_signatures(sigs, n_docs, threshold=0.9)
 
 
 def near_dup_clusters(
@@ -1579,42 +1602,73 @@ def ensure_signature_table(
     *,
     num_hashes: int = LSH_NUM_HASHES,
     seed: int = LSH_SEED,
+    batch_mod: int | None = INCREMENTAL_BATCH_MOD,
 ) -> DataFrame:
-    """Materialize ONCE per sf_dir the corpus signature table for the
-    80% corpus split (doc_id % INCREMENTAL_BATCH_MOD != 0) and return the
-    parquet read — the ingestion-job contract: a production pipeline
-    writes/appends this table at accept time, and every later batch dedup
-    only READS it (same write-once-read-thereafter convention as
-    sources/sorted_layout.py's range-clustered copy).  BOTH num_hashes and
-    seed are part of the cache name, so any parameter change rebuilds
-    instead of silently reusing a mismatched table — a seed mismatch is
-    the nastier case because the width check downstream still passes while
-    buckets never collide and every duplicate batch doc is silently kept."""
+    """Materialize ONCE the signature table of sf_dir's documents and
+    return the parquet read — the ingestion-job contract: a production
+    pipeline writes/appends this table at accept time, and every later
+    dedup only READS it (same write-once-read-thereafter convention as
+    sources/sorted_layout.py's range-clustered copy).  Two artifacts share
+    this body and differ only in the filter and the name:
+
+    - `batch_mod=INCREMENTAL_BATCH_MOD` (default): the 80% corpus split
+      (doc_id % batch_mod != 0) that incremental dedup joins each batch
+      against;
+    - `batch_mod=None`: the whole table, which q_dedup_lsh_kept reads.
+
+    num_hashes, seed, batch_mod AND the documents file listing
+    (source_fingerprint) are part of the name, so a parameter change or
+    an in-place rewrite of the source rebuilds instead of silently
+    reusing a mismatched table — a seed mismatch is the nastier case
+    because the width check downstream still passes while buckets never
+    collide and every duplicate batch doc is silently kept."""
+    return _ensure_signatures(
+        spark, sf_dir, num_hashes=num_hashes, seed=seed, batch_mod=batch_mod
+    )[0]
+
+
+def _ensure_signatures(
+    spark: SparkSession,
+    sf_dir: str,
+    *,
+    num_hashes: int = LSH_NUM_HASHES,
+    seed: int = LSH_SEED,
+    batch_mod: int | None,
+) -> tuple[DataFrame, int]:
+    """Shared ensure body of ensure_signature_table: (table, row count),
+    both memoized, so the count runs once per session."""
     from pyspark_kmeans_spark.functions.warehouse_memo import (
         artifact_path,
         ensure_artifact,
+        source_fingerprint,
     )
 
     def write(path: str) -> None:
-        corpus = load_table(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % INCREMENTAL_BATCH_MOD != 0
-        )
+        docs = load_table(spark, sf_dir, "documents")
+        if batch_mod is not None:
+            docs = docs.filter(F.col("doc_id") % batch_mod != 0)
         build_signature_table(
-            corpus, num_hashes=num_hashes, seed=seed
+            docs, num_hashes=num_hashes, seed=seed
         ).write.mode("overwrite").parquet(path)
+
+    def read(path: str) -> tuple[DataFrame, int]:
+        sigs = spark.read.parquet(path)
+        return sigs, sigs.count()
 
     # Deliberately NO content stamp on the memoized handle, unlike
     # ensure_codebook_table's memo: the signature table has no sanctioned
     # rewrite path (no refresh/update analogue — appends go to NEW batch
-    # dirs, parameter changes change the path), so the write-once
-    # contract makes an unstamped handle valid for the whole session.
-    # Anyone adding an in-place update path later must add the stamp.
+    # dirs, parameter and source changes change the path), so the
+    # write-once contract makes an unstamped handle valid for the whole
+    # session.  Anyone adding an in-place update path later must add the
+    # stamp.
+    split = "all" if batch_mod is None else f"m{batch_mod}"
+    fp = source_fingerprint(sf_dir, "documents")
     return ensure_artifact(
         spark,
-        artifact_path(
-            f"doc_sigs_m{INCREMENTAL_BATCH_MOD}_s{seed}", sf_dir, num_hashes
-        ),
+        artifact_path(f"doc_sigs_{split}_{fp}_s{seed}", sf_dir, num_hashes),
         write,
+        read,
     )
 
 

@@ -592,32 +592,81 @@ def test_batch_kept_is_incremental_kept_with_no_corpus(spark, sf_dir):
     dedup.release_persisted()
 
 
+def warm_construction_jobs(spark, query, sf_dir: str) -> int:
+    """Jobs `query(spark, sf_dir)` runs before it returns its DataFrame,
+    after one warm call has built the artifacts it reads."""
+    sc = spark.sparkContext
+    query(spark, sf_dir).count()
+    group = f"construction_jobs_{query.__name__}"
+    sc.setJobGroup(group, query.__name__)
+    try:
+        query(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 # Construction jobs (eager count()/first() before a DataFrame is returned)
 # of the two LSH kept queries at sf0.001 on the test session (local[4], 4
-# shuffle partitions), after one warm call, measured before both shared
-# one two-wave core.
-CONSTRUCTION_JOBS = {"q_dedup_lsh_kept": 17, "q_dedup_incremental_lsh": 27}
+# shuffle partitions), after one warm call.  q_dedup_lsh_kept reads the
+# persisted whole-table signatures and their memoized row count.
+CONSTRUCTION_JOBS = {"q_dedup_lsh_kept": 12, "q_dedup_incremental_lsh": 27}
 
 
 def test_lsh_kept_construction_jobs_do_not_rise(spark, sf_dir):
     """A new eager action on either two-wave path fails here."""
     from pyspark_kmeans_spark.operators import dedup
 
-    sc = spark.sparkContext
-    got = {}
-    for name in CONSTRUCTION_JOBS:
-        query = getattr(dedup, name)
-        query(spark, sf_dir).count()
-        group = f"construction_jobs_{name}"
-        sc.setJobGroup(group, name)
-        try:
-            query(spark, sf_dir)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        got[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    got = {
+        name: warm_construction_jobs(spark, getattr(dedup, name), sf_dir)
+        for name in CONSTRUCTION_JOBS
+    }
     dedup.release_persisted()
     assert all(got[n] <= CONSTRUCTION_JOBS[n] for n in got), got
+
+
+def test_ann_ivf_topk_construction_jobs_do_not_rise(spark, sf_dir):
+    """Once its k-means model is persisted, q_ann_ivf_topk runs at most one
+    construction job (load_table's footer read), so no fit_kmeans job."""
+    from pyspark_kmeans_spark.operators import similarity
+
+    got = warm_construction_jobs(spark, similarity.q_ann_ivf_topk, sf_dir)
+    similarity.release_persisted()
+    assert got <= 1, got
+
+
+@pytest.mark.parametrize(
+    "sf, sha",
+    [
+        ("sf0.001", None),
+        (
+            "sf0.01",
+            "011d74ea9930045b80a9fb230cb852a3bc07926e0551513b9df9a22ae83a8ec1",
+        ),
+    ],
+)
+def test_lsh_kept_query_equals_inline_kept(spark, sf_dir, sf, sha):
+    """q_dedup_lsh_kept reads the persisted whole-table signatures; its
+    kept set equals lsh_near_dedup_kept's, which signs the documents
+    inline, and at sf0.01 the sorted ids hash to the value they had when
+    the query signed inline (278 kept)."""
+    import hashlib
+    import os
+
+    from pyspark_kmeans_spark.operators import dedup
+    from pyspark_kmeans_spark.sources.tables import load_table
+
+    d = os.path.join(os.path.dirname(sf_dir), sf)
+    got = sorted(r.doc_id for r in dedup.q_dedup_lsh_kept(spark, d).collect())
+    want = sorted(
+        r.doc_id
+        for r in dedup.lsh_near_dedup_kept(load_table(spark, d, "documents")).collect()
+    )
+    dedup.release_persisted()
+    assert got == want and got
+    if sha is not None:
+        assert hashlib.sha256("\n".join(map(str, got)).encode()).hexdigest() == sha
 
 
 def test_keep_best_keeps_highest_quality_not_lowest_id(spark):

@@ -349,6 +349,59 @@ def test_registered_ingestion_queries_never_refit_codebook(
     assert q_daily_ingest_lsh(spark, sf_dir).count() > 0
 
 
+def test_ann_ivf_topk_never_refits_once_model_exists(spark, sf_dir, monkeypatch):
+    """Once the IVF model artifact exists, constructing AND executing
+    ann_ivf_topk must not call fit_kmeans: the query loads the persisted
+    model instead of refitting k-means over the corpus on every call."""
+    from pyspark_kmeans_spark.ml import kmeans as ml_kmeans
+    from pyspark_kmeans_spark.operators.similarity import (
+        ensure_ivf_model,
+        q_ann_ivf_topk,
+    )
+
+    ensure_ivf_model(spark, sf_dir)
+
+    def _boom(*a, **k):
+        raise AssertionError("fit_kmeans called from ann_ivf_topk")
+
+    monkeypatch.setattr(ml_kmeans, "fit_kmeans", _boom)
+    assert q_ann_ivf_topk(spark, sf_dir).count() > 0
+
+
+@pytest.mark.parametrize(
+    "sf, sha",
+    [
+        ("sf0.001", None),
+        (
+            "sf0.01",
+            "48e163ad974a2da19a90661c3824fd996bee46016b87d57e853b7008de73cbf8",
+        ),
+    ],
+)
+def test_ann_ivf_topk_query_equals_refit(spark, sf_dir, sf, sha):
+    """The persisted model gives the rows of a refit: q_ann_ivf_topk equals
+    ivf_topk with no model, and at sf0.01 its sorted rows hash to the value
+    they had when the query refit on every call (250 rows)."""
+    import hashlib
+    import os
+
+    from pyspark_kmeans_spark.operators.similarity import (
+        _probes,
+        ivf_topk,
+        q_ann_ivf_topk,
+        release_persisted,
+    )
+
+    d = os.path.join(os.path.dirname(sf_dir), sf)
+    got = sorted(map(str, map(tuple, q_ann_ivf_topk(spark, d).collect())))
+    emb = load_table(spark, d, "embeddings")
+    want = sorted(map(str, map(tuple, ivf_topk(emb, _probes(emb), k=5).collect())))
+    release_persisted()
+    assert got == want and got
+    if sha is not None:
+        assert hashlib.sha256("\n".join(got).encode()).hexdigest() == sha
+
+
 def test_codebook_check_green_on_honest_corpus_and_flags_planted_drift(
     spark, sf_dir
 ):

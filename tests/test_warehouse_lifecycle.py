@@ -166,6 +166,88 @@ def test_append_pairs_table_rename_fault_then_retry_equals_remine(
     assert got == want and got
 
 
+def test_ivf_model_torn_save_is_refit_with_same_cells(
+    spark, sf_dir, tmp_sf, monkeypatch
+):
+    """MLlib's save of the IVF model completes, then the write raises before
+    the commit marker: the next ensure_ivf_model refits instead of loading
+    the torn model, and the refit model assigns every vector the cell a
+    fresh fit does."""
+    from pyspark.ml.util import JavaMLWriter
+
+    from pyspark_kmeans_spark.ml import kmeans as ml_kmeans
+    from pyspark_kmeans_spark.operators import similarity
+    from pyspark_kmeans_spark.sources.tables import load_table
+
+    shutil.copy(f"{sf_dir}/embeddings.parquet", f"{tmp_sf}/embeddings.parquet")
+    real_save = JavaMLWriter.save
+
+    def save_then_crash(self, path):
+        real_save(self, path)
+        raise OSError("injected: crash after the model save")
+
+    with monkeypatch.context() as m:
+        m.setattr(JavaMLWriter, "save", save_then_crash)
+        with pytest.raises(OSError, match="injected"):
+            similarity.ensure_ivf_model(spark, tmp_sf)
+    (path,) = glob.glob(os.path.join(_WAREHOUSE, f"ivf_model_*_{path_tag(tmp_sf)}_b16"))
+    assert os.path.isdir(os.path.join(path, "data"))
+    assert not os.path.exists(os.path.join(path, "_SUCCESS"))
+
+    fits = []
+    real_fit = ml_kmeans.fit_kmeans
+    monkeypatch.setattr(
+        ml_kmeans, "fit_kmeans", lambda *a, **k: fits.append(1) or real_fit(*a, **k)
+    )
+    model = similarity.ensure_ivf_model(spark, tmp_sf)
+    assert fits == [1]
+    assert os.path.exists(os.path.join(path, "_SUCCESS"))
+
+    emb = load_table(spark, tmp_sf, "embeddings")
+    cells, _ = similarity._kmeans_cells(emb, 16, 1, "vec_id", model)
+    fresh, _ = similarity._kmeans_cells(emb, 16, 1, "vec_id")
+    got = {r.vec_id: r.cell for r in cells.collect()}
+    assert got == {r.vec_id: r.cell for r in fresh.collect()} and got
+    similarity.release_persisted()
+
+
+def test_source_rewrite_in_place_rebuilds_query_artifacts(spark, sf_dir, tmp_sf):
+    """documents.parquet and embeddings.parquet rewritten in place under
+    the same names: dedup_lsh_kept and ann_ivf_topk answer from the new
+    rows (their inline-signing and refit spellings), not from the
+    artifacts built over the old ones."""
+    import pyarrow.parquet as pq
+
+    from pyspark_kmeans_spark.operators import dedup, similarity
+    from pyspark_kmeans_spark.sources.tables import load_table
+
+    for t in ("documents", "embeddings"):
+        shutil.copy(f"{sf_dir}/{t}.parquet", f"{tmp_sf}/{t}.parquet")
+
+    def answers():
+        kept = sorted(r.doc_id for r in dedup.q_dedup_lsh_kept(spark, tmp_sf).collect())
+        topk = sorted(map(tuple, similarity.q_ann_ivf_topk(spark, tmp_sf).collect()))
+        return kept, topk
+
+    before = answers()
+    for t, key in (("documents", "doc_id"), ("embeddings", "vec_id")):
+        path = f"{tmp_sf}/{t}.parquet"
+        table = pq.read_table(path)
+        keep = [i for i, v in enumerate(table.column(key).to_pylist()) if v % 3 != 1]
+        pq.write_table(table.take(keep), path)
+    after = answers()
+
+    docs = load_table(spark, tmp_sf, "documents")
+    emb = load_table(spark, tmp_sf, "embeddings")
+    want_kept = sorted(r.doc_id for r in dedup.lsh_near_dedup_kept(docs).collect())
+    want_topk = sorted(
+        map(tuple, similarity.ivf_topk(emb, similarity._probes(emb), k=5).collect())
+    )
+    similarity.release_persisted()
+    assert after == (want_kept, want_topk)
+    assert after[0] != before[0] and after[1] != before[1]
+
+
 def test_drop_artifacts_forgets_then_deletes_one_corpus(spark, tmp_path):
     """drop_artifacts removes every artifact of one corpus, staging dirs
     included, and its memo entries; other corpora and foreign dirs stay."""
