@@ -6,13 +6,13 @@ k-means model, the IVF and PQ codebooks, the PQ index) is keyed by
 `sources.bucketed.bucketed_name`: one directory per (artifact,
 parameter-set, source sf_dir) under `spark-warehouse/`, named
 `<artifact>_<leaf>_<md5(abs sf_dir)[:8]>_b<n>`, plus the
-`<name>.staging-<hex>` dir a fold writes before it commits.  The
-signature tables and the IVF model put a fingerprint of their source's
-file listing in `<artifact>`, so a source rewritten in place leaves its
-old artifact under the same path tag, and it goes with its corpus.  Write-once keying is what
-makes the caches safe — but it also means the warehouse only ever GROWS:
-scratch sf_dirs (tests, the check queries' tmp corpora) leave orphaned
-artifacts behind forever.  This is the one unbounded-growth path the
+`<name>.staging-<hex>` dir a fold writes before it commits.  An artifact
+named with `artifact_path(..., sources=...)` carries a fingerprint of
+its sources' file listing in `<artifact>`, so a source rewritten in place
+leaves its old artifact under the same path tag, and it goes with its
+corpus.  Write-once keying is what makes the caches safe — but it also
+means the warehouse only ever GROWS: scratch sf_dirs (tests, the check
+queries' tmp corpora) leave orphaned artifacts behind forever.  This is the one unbounded-growth path the
 engine itself creates; `gc_warehouse` closes it.
 
 Liveness is decided by the path tag: an artifact is LIVE iff its embedded

@@ -89,28 +89,39 @@ def memo_invalidate_where(
             del _MEMO[key]
 
 
-def artifact_path(table: str, sf_dir: str, n_buckets: int = 1) -> str:
+def artifact_path(
+    table: str, sf_dir: str, n_buckets: int = 1, sources: tuple[str, ...] = ()
+) -> str:
     """The warehouse directory of one artifact of `sf_dir`; `table` carries
-    every parameter that changes the artifact's content."""
+    every parameter that changes the artifact's content.  An artifact
+    built from the `sf_dir` source tables named in `sources` also carries
+    their `_source_fingerprint`, so a source rewritten in place names a
+    new directory and the artifact is rebuilt there; the old one stays
+    until its corpus is dropped (`warehouse_gc`), since the path tag is
+    unchanged.  The fingerprint stats every file of those sources on
+    each call, memo hits included: O(source files) of driver-side
+    listing per call."""
+    if sources:
+        table = f"{table}_{_source_fingerprint(sf_dir, sources)}"
     return os.path.join(_WAREHOUSE, bucketed_name(table, sf_dir, n_buckets))
 
 
-def source_fingerprint(sf_dir: str, table: str) -> str:
-    """8-hex md5 of the file listing of `sf_dir`'s `table` source: the
-    relative name, size and mtime_ns of every file under it, no data read.
-    An artifact that carries it in its `table` name part is rebuilt when
-    its source is rewritten in place; the old one stays until its corpus
-    is dropped (`warehouse_gc`), since the path tag is unchanged."""
-    src = os.path.join(sf_dir, f"{table}.parquet")
-    files = (
-        [src]
-        if os.path.isfile(src)
-        else sorted(os.path.join(d, f) for d, _, fs in os.walk(src) for f in fs)
-    )
+def _source_fingerprint(sf_dir: str, tables: tuple[str, ...]) -> str:
+    """8-hex md5 of the file listing of `sf_dir`'s `tables` sources: the
+    relative name, size and mtime_ns of every file under each, no data
+    read."""
     listing = []
-    for f in files:
-        st = os.stat(f)
-        listing.append((os.path.relpath(f, src), st.st_size, st.st_mtime_ns))
+    for table in tables:
+        src = os.path.join(sf_dir, f"{table}.parquet")
+        files = (
+            [src]
+            if os.path.isfile(src)
+            else sorted(os.path.join(d, f) for d, _, fs in os.walk(src) for f in fs)
+        )
+        for f in files:
+            st = os.stat(f)
+            rel = os.path.relpath(f, src)
+            listing.append((table, rel, st.st_size, st.st_mtime_ns))
     return hashlib.md5(repr(listing).encode()).hexdigest()[:8]
 
 

@@ -31,6 +31,7 @@ import logging
 import random
 from collections.abc import Callable
 from functools import reduce
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -1065,13 +1066,19 @@ def _kept_from_signatures(
 
 def q_dedup_lsh_kept(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lsh_near_dedup_kept over the whole documents table, read from the
-    persisted whole-table signature artifact (ensure_signature_table with
+    persisted whole-table signature artifact (_ensure_signatures with
     batch_mod=None: signed once per documents listing, read thereafter),
-    so a call neither tokenizes nor signs a document; the memoized row
-    count is the batch size of the wave-2 skip.  The kept set equals
-    lsh_near_dedup_kept's (pinned in tests/test_dedup.py)."""
+    so a call neither tokenizes nor signs a document.  The artifact's row
+    count, memoized with its read, is the batch size of the wave-2 skip.
+    The kept set equals lsh_near_dedup_kept's (pinned in
+    tests/test_dedup.py)."""
     release_persisted()
-    sigs, n_docs = _ensure_signatures(spark, sf_dir, batch_mod=None)
+
+    def counted(path: str) -> tuple[DataFrame, int]:
+        sigs = spark.read.parquet(path)
+        return sigs, sigs.count()
+
+    sigs, n_docs = _ensure_signatures(spark, sf_dir, batch_mod=None, read=counted)
     return _kept_from_signatures(sigs, n_docs, threshold=0.9)
 
 
@@ -1602,29 +1609,26 @@ def ensure_signature_table(
     *,
     num_hashes: int = LSH_NUM_HASHES,
     seed: int = LSH_SEED,
-    batch_mod: int | None = INCREMENTAL_BATCH_MOD,
 ) -> DataFrame:
-    """Materialize ONCE the signature table of sf_dir's documents and
-    return the parquet read — the ingestion-job contract: a production
-    pipeline writes/appends this table at accept time, and every later
-    dedup only READS it (same write-once-read-thereafter convention as
-    sources/sorted_layout.py's range-clustered copy).  Two artifacts share
-    this body and differ only in the filter and the name:
+    """Materialize ONCE the signature table of sf_dir's 80% corpus split
+    (doc_id % INCREMENTAL_BATCH_MOD != 0) that incremental dedup joins
+    each batch against, and return the parquet read — the ingestion-job
+    contract: a production pipeline writes/appends this table at accept
+    time, and every later dedup only READS it (same
+    write-once-read-thereafter convention as sources/sorted_layout.py's
+    range-clustered copy).  Its ensure body, _ensure_signatures, also
+    builds the whole-table artifact q_dedup_lsh_kept reads.
 
-    - `batch_mod=INCREMENTAL_BATCH_MOD` (default): the 80% corpus split
-      (doc_id % batch_mod != 0) that incremental dedup joins each batch
-      against;
-    - `batch_mod=None`: the whole table, which q_dedup_lsh_kept reads.
-
-    num_hashes, seed, batch_mod AND the documents file listing
-    (source_fingerprint) are part of the name, so a parameter change or
-    an in-place rewrite of the source rebuilds instead of silently
-    reusing a mismatched table — a seed mismatch is the nastier case
-    because the width check downstream still passes while buckets never
-    collide and every duplicate batch doc is silently kept."""
+    num_hashes, seed AND the documents file listing (artifact_path's
+    `sources`) are part of the name, so a parameter change or an in-place
+    rewrite of the source rebuilds instead of silently reusing a
+    mismatched table — a seed mismatch is the nastier case because the
+    width check downstream still passes while buckets never collide and
+    every duplicate batch doc is silently kept."""
     return _ensure_signatures(
-        spark, sf_dir, num_hashes=num_hashes, seed=seed, batch_mod=batch_mod
-    )[0]
+        spark, sf_dir, num_hashes=num_hashes, seed=seed,
+        batch_mod=INCREMENTAL_BATCH_MOD,
+    )
 
 
 def _ensure_signatures(
@@ -1634,13 +1638,15 @@ def _ensure_signatures(
     num_hashes: int = LSH_NUM_HASHES,
     seed: int = LSH_SEED,
     batch_mod: int | None,
-) -> tuple[DataFrame, int]:
-    """Shared ensure body of ensure_signature_table: (table, row count),
-    both memoized, so the count runs once per session."""
+    read: Callable[[str], Any] | None = None,
+) -> Any:
+    """The one ensure body of both signature artifacts, which differ only
+    in the filter and the name: the split (doc_id % batch_mod != 0) or,
+    with batch_mod=None, the whole table.  Returns the memoized
+    `read(path)` (default: the parquet read)."""
     from pyspark_kmeans_spark.functions.warehouse_memo import (
         artifact_path,
         ensure_artifact,
-        source_fingerprint,
     )
 
     def write(path: str) -> None:
@@ -1651,10 +1657,6 @@ def _ensure_signatures(
             docs, num_hashes=num_hashes, seed=seed
         ).write.mode("overwrite").parquet(path)
 
-    def read(path: str) -> tuple[DataFrame, int]:
-        sigs = spark.read.parquet(path)
-        return sigs, sigs.count()
-
     # Deliberately NO content stamp on the memoized handle, unlike
     # ensure_codebook_table's memo: the signature table has no sanctioned
     # rewrite path (no refresh/update analogue — appends go to NEW batch
@@ -1663,10 +1665,11 @@ def _ensure_signatures(
     # session.  Anyone adding an in-place update path later must add the
     # stamp.
     split = "all" if batch_mod is None else f"m{batch_mod}"
-    fp = source_fingerprint(sf_dir, "documents")
     return ensure_artifact(
         spark,
-        artifact_path(f"doc_sigs_{split}_{fp}_s{seed}", sf_dir, num_hashes),
+        artifact_path(
+            f"doc_sigs_{split}_s{seed}", sf_dir, num_hashes, sources=("documents",)
+        ),
         write,
         read,
     )

@@ -39,7 +39,6 @@ from pyspark_kmeans_spark.functions.warehouse_memo import (
     fold_artifact,
     memo_get,
     memo_invalidate,
-    source_fingerprint,
 )
 from pyspark_kmeans_spark.sources.tables import load_table, spread_small_scan
 
@@ -480,9 +479,9 @@ def ensure_ivf_model(
     MLlib's save leaves no top-level commit marker; ensure_artifact writes
     it once the save returns, so a save torn by a crash is refit on the
     next call.  The name carries n_cells, seed and the embeddings file
-    listing (source_fingerprint), so a parameter change or an in-place
-    rewrite of the source fits a new model instead of serving the old
-    cells."""
+    listing (artifact_path's `sources`), so a parameter change or an
+    in-place rewrite of the source fits a new model instead of serving
+    the old cells."""
     from pyspark_kmeans_spark.ml.kmeans import load_kmeans_model
 
     def write(path: str) -> None:
@@ -490,10 +489,10 @@ def ensure_ivf_model(
         _, model = _kmeans_cells(emb, n_cells, seed, id_col)
         model.write().overwrite().save(path)
 
-    table = f"ivf_model_{source_fingerprint(sf_dir, 'embeddings')}_s{seed}"
-    return ensure_artifact(
-        spark, artifact_path(table, sf_dir, n_cells), write, load_kmeans_model
+    path = artifact_path(
+        f"ivf_model_s{seed}", sf_dir, n_cells, sources=("embeddings",)
     )
+    return ensure_artifact(spark, path, write, load_kmeans_model)
 
 
 IVF_BATCH_MOD = 5  # vec_id % 5 == 0 → 20% of vectors are the new batch

@@ -341,17 +341,16 @@ def test_registered_incremental_lsh_reads_persisted_table(spark):
         lsh_incremental_kept,
         q_dedup_incremental_lsh,
     )
-    from pyspark_kmeans_spark.sources.bucketed import _WAREHOUSE, bucketed_name
+    from pyspark_kmeans_spark.functions.warehouse_memo import artifact_path
     from pyspark_kmeans_spark.sources.tables import load_table
 
     sf = "/root/testdata/sf0.001"
     got = {r.doc_id for r in q_dedup_incremental_lsh(spark, sf).collect()}
-    table_dir = os.path.join(
-        _WAREHOUSE,
-        # seed is part of the cache name since round 6 (default seed=7);
-        # the old unseeded spelling only passed while a stale pre-r6
-        # directory lingered in the warehouse.
-        bucketed_name(f"doc_sigs_m{INCREMENTAL_BATCH_MOD}_s7", sf, n_buckets=64),
+    # Derived the way the writer names it (seed 7, the documents listing's
+    # fingerprint): a hand-spelled name once passed only while a stale
+    # directory of an older naming scheme lingered in the warehouse.
+    table_dir = artifact_path(
+        f"doc_sigs_m{INCREMENTAL_BATCH_MOD}_s7", sf, 64, sources=("documents",)
     )
     assert os.path.exists(os.path.join(table_dir, "_SUCCESS"))
     docs = load_table(spark, sf, "documents")
