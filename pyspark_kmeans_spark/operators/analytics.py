@@ -557,9 +557,6 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.filter(bucket < thr).select("doc_id", "lang")
 
 
-FUNNEL_STAGES = ["view", "click", "purchase"]
-
-
 def q_event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered conversion funnel per user: first view, first click AFTER
     that view, first purchase AFTER that click (strict event-time order —

@@ -230,9 +230,8 @@ def q_dedup_simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
       set — the pigeonhole completeness claim the banding makes (any pair
       with Hamming ≤ 3 over 64 bits agrees exactly on ≥1 of the 4 16-bit
       quarters, so the true recall is 1.0 modulo bucket-cap drops).  The
-      brute-force side is the within-lang O(block²) popcount — the same
-      bounded-block oracle-path convention as jaccard_pairs' exact side,
-      with the same loud block guard.
+      brute-force side is the within-lang O(block²) popcount, so a lang
+      block above 50,000 rows raises instead of running.
     - `jaccard_floor_ok`: recall vs the exact 0.9-Jaccard pair set stays
       above a measured breakage floor (SimHash's Hamming-3 ball is a much
       tighter — cosine-like — bar than Jaccard 0.9, so the measured recall
@@ -244,7 +243,6 @@ def q_dedup_simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark_kmeans_spark.functions.persist import registered_persist
     from pyspark_kmeans_spark.operators.dedup import (
-        _check_block_bound,
         jaccard_pairs,
         release_persisted,
         simhash,
@@ -256,7 +254,14 @@ def q_dedup_simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = registered_persist(
         simhash(docs).join(docs.select("doc_id", "lang"), on="doc_id")
     )
-    _check_block_bound(sh, "lang", 50_000, "dedup_simhash_recall")
+    # The brute-force side below is O(block²): refuse an oversized block
+    # loudly instead of launching a silent quadratic job.
+    biggest = sh.groupBy("lang").count().agg(F.max("count")).first()[0]
+    if biggest is not None and biggest > 50_000:
+        raise ValueError(
+            f"dedup_simhash_recall: largest lang block holds {biggest} rows "
+            "> 50000; the brute-force Hamming side is O(block²)"
+        )
     a = sh.select(
         F.col("doc_id").alias("doc_a"),
         F.col("simhash").alias("_sa"),

@@ -154,49 +154,29 @@ def duplicate_groups(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
 # --------------------------------------------------------------------------
 
 
-def _check_block_bound(
-    cached: DataFrame, block_col: str, max_block_rows: int | None, caller: str
-) -> None:
-    """Raise when any block exceeds `max_block_rows`.
-
-    Runs one cheap agg over an already-persisted frame.  Since the round-3
-    prefix-filter rework nothing in this family is O(block²) anymore, so the
-    bound is an OPTIONAL caller-declared contract (default None) rather than
-    a required safety guard; when set, an oversized block still fails loudly
-    (VERDICT r2 item 3)."""
-    if max_block_rows is None:
-        return
-    row = (
-        cached.groupBy(block_col)
-        .agg(F.count(F.lit(1)).alias("_cnt"))
-        .agg(F.max("_cnt").alias("_max"))
-        .first()
-    )
-    biggest = row["_max"] if row else None
-    if biggest is not None and biggest > max_block_rows:
-        raise ValueError(
-            f"{caller}: largest block holds {biggest} rows > max_block_rows="
-            f"{max_block_rows}, the caller-declared block-size contract — "
-            "raise max_block_rows (or leave it None: candidate generation "
-            "is prefix-filtered, not O(block²)), or use the MinHash-LSH "
-            "path (minhash_lsh_pairs / lsh_near_dedup_kept) for capped "
-            "candidate volume"
-        )
-
-
-def _prefix_docs(
-    base: DataFrame, threshold: float, id_col: str
+def _prefix_frame(
+    base: DataFrame,
+    threshold: float,
+    id_col: str,
+    freq: DataFrame | None = None,
 ) -> DataFrame:
-    """Persisted (id, _block, _ts, _n, _prefix [, passthrough cols]) frame
-    for prefix-filter set-similarity joins.
+    """(id, _block [, passthrough cols], _n, _ts, _prefix) frame for
+    prefix-filter set-similarity joins — the one token order of the exact
+    family (jaccard_pairs, incremental_kept and the graph fold).
 
     `base` must carry (id_col, _block, _toks) plus any extra columns to
-    thread through.  Tokens are re-ordered by GLOBAL document frequency
-    ascending (ties by token) — the shared total order the prefix lemma
-    requires; rare-first ordering makes prefix buckets small.  `_ts` is the
-    full reordered token array (set-equal to _toks, so array_intersect
-    verification is unaffected); `_prefix` is its first
-    n − ⌈t·n⌉ + 1 elements.
+    thread through.  Tokens are re-ordered by document frequency ascending
+    (ties by token) — the shared total order the prefix lemma requires;
+    rare-first ordering makes prefix buckets small.  The frequencies are
+    `base`'s own, or the (_tok, _df) table `freq` when one is passed (the
+    graph fold's persisted table).  A token that table has never seen gets
+    df 0 and sorts before every counted token, which keeps the order a
+    fixed FUNCTION of the table: the lemma needs both sides of a candidate
+    pair sorted by the same total order, not an up-to-date frequency
+    estimate (frequencies affect prefix SIZE — pruning power — never
+    exactness).  `_ts` is the full reordered token array (set-equal to
+    _toks, so array_intersect verification is unaffected); `_prefix` is
+    its first n − ⌈t·n⌉ + 1 elements.
 
     Prefix lemma (Chaudhuri et al. ICDE'06; Bayardo et al. WWW'07): under a
     common total order, J(A,B) ≥ t implies |A∩B| ≥ ⌈t·max(|A|,|B|)⌉, and two
@@ -206,9 +186,10 @@ def _prefix_docs(
     ceil(t·n − 1e-9): float jitter may only LENGTHEN the prefix (safe),
     never shorten it.
 
-    Cost: one groupBy(token) for frequencies, one token-keyed join, one
-    groupBy(id) to re-assemble — all linear in corpus token volume; nothing
-    quadratic in block or corpus size.
+    Cost: one groupBy(token) for frequencies (none when `freq` is passed),
+    one token-keyed join, one groupBy(id) to re-assemble — all linear in
+    token volume.  Not persisted: a caller that reads the frame more than
+    once persists it.
     """
     extra = [
         c for c in base.columns if c not in (id_col, "_block", "_toks")
@@ -216,34 +197,112 @@ def _prefix_docs(
     ex = base.select(
         F.col(id_col), "_block", *extra, F.explode("_toks").alias("_tok")
     )
-    freq = ex.groupBy("_tok").agg(F.count(F.lit(1)).alias("_df"))
+    if freq is None:
+        freq = ex.groupBy("_tok").agg(F.count(F.lit(1)).alias("_df"))
+    doc_freq = F.coalesce(F.col("_df"), F.lit(0).cast("long")).alias("_df")
     ordered = (
-        ex.join(freq, on="_tok")
+        ex.join(freq, on="_tok", how="left")
         .groupBy(id_col, "_block", *extra)
         .agg(
             F.array_sort(
-                F.collect_list(F.struct(F.col("_df"), F.col("_tok")))
+                F.collect_list(F.struct(doc_freq, F.col("_tok")))
             ).alias("_ord")
         )
     )
     n = F.size("_ord")
     prefix_len = n - F.ceil(F.lit(threshold) * n - F.lit(1e-9)) + 1
-    docs = _persist(
-        ordered.select(
-            F.col(id_col),
-            "_block",
-            *extra,
-            F.transform("_ord", lambda s: s["_tok"]).alias("_ts"),
-            n.alias("_n"),
-            F.slice(
-                F.transform("_ord", lambda s: s["_tok"]), F.lit(1), prefix_len
-            ).alias("_prefix"),
-        )
+    ts = F.transform("_ord", lambda s: s["_tok"])
+    return ordered.select(
+        F.col(id_col),
+        "_block",
+        *extra,
+        n.alias("_n"),
+        ts.alias("_ts"),
+        F.slice(ts, F.lit(1), prefix_len).alias("_prefix"),
     )
-    # Eager materialization: the frame feeds both sides of the candidate
-    # join; a lazy persist lets the two sides race and tokenize twice.
-    docs.count()
-    return docs
+
+
+def _prefix_candidates(
+    batch: DataFrame,
+    corpus: DataFrame | None,
+    threshold: float,
+    id_col: str,
+) -> DataFrame:
+    """(doc_a, doc_b) candidates of the prefix-filter join — the one
+    candidate join of the exact family.  Both inputs are `_prefix_frame`
+    frames under ONE token order.  doc_b is a batch doc; doc_a is a corpus
+    doc (any other id: the corpus is already ingested, so it wins) or a
+    lower-id batch doc.  `corpus=None` is the batch self-join.  A pair
+    sharing k prefix tokens appears up to k times — _verify_jaccard's
+    collect_set absorbs that, so no separate dedup exchange runs here.
+
+    The join is an equi-join on (prefix token, block) that carries ONLY
+    scalars (id, size, prefix position): a doc with a p-token prefix would
+    otherwise ship p copies of its FULL token array through the exchange.
+    The arrays are attached by the verifier after the pruning below.
+
+    Batch-adjacency prune: a corpus doc sharing NO (prefix token, block)
+    with the batch can never form a candidate, so the corpus-scale prefix
+    explode is semi-joined MAP-SIDE against the broadcast batch prefix
+    keys before any shuffle.  The key set is ≤ |batch| × prefix_len rows —
+    the bounded-batch contract justifies the broadcast.
+    """
+
+    def side(frame: DataFrame, s: str) -> DataFrame:
+        return frame.select(
+            F.col(id_col).alias(f"doc_{s}"),
+            "_block",
+            F.col("_n").alias(f"_n{s}"),
+            F.posexplode("_prefix").alias(f"_pi{s}", "_ptok"),
+        )
+
+    a, b = side(batch, "a"), side(batch, "b")
+    keep = F.col("doc_a") < F.col("doc_b")
+    if corpus is not None:
+        keys = batch.select(
+            F.explode("_prefix").alias("_ptok"), "_block"
+        ).distinct()
+        c = side(corpus, "a").join(
+            F.broadcast(keys), on=["_ptok", "_block"], how="left_semi"
+        )
+        a = a.withColumn("_is_corpus", F.lit(False)).unionByName(
+            c.withColumn("_is_corpus", F.lit(True))
+        )
+        keep = keep | (F.col("_is_corpus") & (F.col("doc_a") != F.col("doc_b")))
+    # Exact size prune: j >= t implies min(|A|,|B|) >= t*max(|A|,|B|) — a
+    # cheap int predicate evaluated before any token array ships.
+    size_ok = (F.col("_na") >= F.lit(threshold) * F.col("_nb")) & (
+        F.col("_nb") >= F.lit(threshold) * F.col("_na")
+    )
+    # PPJoin positional filter (Xiao et al., WWW'08): under the shared
+    # total order, J ≥ t requires overlap I ≥ α = ⌈t·(na+nb)/(1+t)⌉, and a
+    # shared prefix token at (0-based) positions (pa, pb) bounds
+    # I ≤ min(na − pa, nb − pb) — every shared element of the pair lies
+    # at-or-after the FIRST shared token in both docs, and the prefix lemma
+    # puts that first shared token inside both prefixes, so each qualifying
+    # pair has at least one generating join row that passes.  Rows failing
+    # the bound are provably non-qualifying: pruned before the verifier's
+    # exchanges, so false candidates never ship token arrays.  ⌈·⌉ as
+    # ceil(x − 1e-9): float jitter may only LOWER α (keep more candidates
+    # — safe).
+    alpha = F.ceil(
+        F.lit(threshold / (1.0 + threshold)) * (F.col("_na") + F.col("_nb"))
+        - F.lit(1e-9)
+    )
+    pos_ok = (
+        F.least(F.col("_na") - F.col("_pia"), F.col("_nb") - F.col("_pib"))
+        >= alpha
+    )
+    # shuffle_hash: both sides are explodes of a persisted or scanned
+    # prefix frame — Generate keeps its child's size estimate, so the
+    # prefix fan-out is invisible to the static planner and either side
+    # can be mis-chosen for broadcast at scale (the cache→explode→join
+    # shape that killed the LSH path at a 64x corpus before its hints).
+    return (
+        a.join(b.hint("shuffle_hash"), on=["_ptok", "_block"])
+        .filter(keep & size_ok & pos_ok)
+        .select("doc_a", "doc_b")
+    )
 
 
 def jaccard_pairs(
@@ -253,24 +312,19 @@ def jaccard_pairs(
     block_col: str = "lang",
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_block_rows: int | None = None,
 ) -> DataFrame:
     """All pairs within a block with token-set Jaccard >= threshold — EXACT,
     via a prefix-filter set-similarity join (AllPairs/SSJoin family).
 
     Jaccard = |A∩B| / |A∪B| — two ints, so the double is exact (no rounding
-    needed for oracle equality).  Candidate generation is an equi-join on
-    (prefix token, block): each doc contributes only its n − ⌈t·n⌉ + 1
-    globally-rarest tokens (~10% at t=0.9), and the prefix lemma guarantees
-    every qualifying pair shares one (see _prefix_docs) — the round-2
-    O(block²) self-join is gone, so the exact path now scales with candidate
-    volume (≈ output size on real corpora), not block².  Verification keeps
-    the exact size prune + single array_intersect per candidate.
-
-    `max_block_rows` remains as an optional caller-declared contract (raise
-    when any block exceeds it); the default is None because the algorithm no
-    longer degrades quadratically with block size.  Worst-case candidate
-    volume is inherently output-bound: N identical docs genuinely have N²/2
+    needed for oracle equality).  The exact family's three shared pieces:
+    `_prefix_frame` orders every doc's tokens (each doc contributes only
+    its n − ⌈t·n⌉ + 1 globally-rarest tokens, ~10% at t=0.9),
+    `_prefix_candidates` with no corpus is the equi-join on (prefix token,
+    block), and `_verify_jaccard` runs one array_intersect per surviving
+    candidate.  Nothing is O(block²): the cost scales with candidate
+    volume (≈ output size on real corpora).  Worst-case candidate volume
+    is inherently output-bound: N identical docs genuinely have N²/2
     qualifying pairs — use lsh_near_dedup_kept / max_bucket for capped
     behavior.
     """
@@ -279,99 +333,22 @@ def jaccard_pairs(
         F.col(block_col).alias("_block"),
         tokens_col(text_col).alias("_toks"),
     )
-    docs = _prefix_docs(base, threshold, id_col)
-    _check_block_bound(docs, "_block", max_block_rows, "jaccard_pairs")
-    # Candidate join carries ONLY scalars (id, size, prefix token): a doc
-    # with a p-token prefix would otherwise ship p copies of its FULL token
-    # array through the exchange — O(n²·t'/…) bytes per doc.  The arrays
-    # are attached AFTER the candidate dedup by id-joins against the
-    # persisted docs frame (the same ship-arrays-last pattern as
-    # minhash_lsh_pairs' verify stage).
-    a = docs.select(
-        F.col(id_col).alias("doc_a"),
-        "_block",
-        F.col("_n").alias("_na"),
-        F.posexplode("_prefix").alias("_pia", "_ptok"),
-    )
-    b = docs.select(
-        F.col(id_col).alias("doc_b"),
-        "_block",
-        F.col("_n").alias("_nb"),
-        F.posexplode("_prefix").alias("_pib", "_ptok"),
-    )
-    # Exact size prune: j >= t implies min(|A|,|B|) >= t*max(|A|,|B|) — a
-    # cheap int predicate evaluated before the candidate dedup.
-    size_ok = (F.col("_na") >= F.lit(threshold) * F.col("_nb")) & (
-        F.col("_nb") >= F.lit(threshold) * F.col("_na")
-    )
-    # PPJoin positional filter (Xiao et al., WWW'08 — round 12): under the
-    # shared total order, J ≥ t requires overlap I ≥ α =
-    # ⌈t·(na+nb)/(1+t)⌉, and a shared prefix token at (0-based) positions
-    # (pa, pb) bounds I ≤ min(na − pa, nb − pb) — every shared element of
-    # the pair lies at-or-after the FIRST shared token in both docs, and
-    # the prefix lemma puts that first shared token inside both prefixes,
-    # so each qualifying pair has at least one generating join row that
-    # passes.  Rows failing the bound are provably non-qualifying: pruned
-    # BEFORE the candidate dedup exchange and the array-attach joins, so
-    # false candidates never ship token arrays.  ⌈·⌉ as ceil(x − 1e-9):
-    # float jitter may only LOWER α (keep more candidates — safe).
-    alpha = F.ceil(
-        F.lit(threshold / (1.0 + threshold)) * (F.col("_na") + F.col("_nb"))
-        - F.lit(1e-9)
-    )
-    pos_ok = (
-        F.least(
-            F.col("_na") - F.col("_pia"), F.col("_nb") - F.col("_pib")
-        )
-        >= alpha
-    )
-    # shuffle_hash: both sides are explodes of the PERSISTED docs frame —
-    # Generate keeps its child's size estimate, so the prefix fan-out is
-    # invisible to the static planner and either side can be mis-chosen
-    # for broadcast at scale (the cache→explode→join shape that killed the
-    # LSH path at a 64x corpus before its hints).
-    # Grouped two-level attach (round 13 — same rewrite as _verify_jaccard,
-    # see there): ONE groupBy(doc_a) with map-side partial collect_set
-    # replaces the per-pair dropDuplicates exchange AND the a-side attach
-    # join's re-exchange; a pair sharing k prefix tokens still verifies
-    # exactly once (collect_set dedups), `_ta` attaches once per distinct
-    # doc_a, and only the exploded per-pair row crosses the doc_b exchange.
-    grp = (
-        a.join(b.hint("shuffle_hash"), on=["_ptok", "_block"])
-        .filter((F.col("doc_a") < F.col("doc_b")) & size_ok & pos_ok)
-        .groupBy("doc_a")
-        .agg(F.collect_set("doc_b").alias("_bs"))
-    )
-    # shuffle_hash: same static-estimate hazard as minhash_lsh_pairs'
-    # verify joins — the candidate frame is explode-derived (no usable
-    # size estimate) and the docs side is corpus-scale; neither may be
+    docs = _persist(_prefix_frame(base, threshold, id_col))
+    # Eager materialization: the frame feeds both sides of the candidate
+    # join; a lazy persist lets the two sides race and tokenize twice.
+    docs.count()
+    # shuffle_hash: the candidate frame is explode-derived (no usable size
+    # estimate) and the docs side is corpus-scale; neither may be
     # broadcast at scale.
-    with_a = grp.join(
-        docs.select(
-            F.col(id_col).alias("doc_a"), F.col("_ts").alias("_ta")
-        ).hint("shuffle_hash"),
-        on="doc_a",
-    )
-    pair_rows = with_a.select(
-        "doc_a", "_ta", F.explode("_bs").alias("doc_b")
-    )
-    with_b = pair_rows.join(
-        docs.select(
-            F.col(id_col).alias("doc_b"), F.col("_ts").alias("_tb")
-        ).hint("shuffle_hash"),
-        on="doc_b",
-    )
-    inter = F.size(F.array_intersect("_ta", "_tb"))
-    # |A∪B| = |A|+|B|-|A∩B| exactly (both arrays are distinct): one
-    # array_intersect per pair instead of intersect + distinct-of-concat —
-    # halves the per-pair cost with an identical double result.  |A| and
-    # |B| as size(_ts) — identical ints to the `_n` the candidate rows
-    # used to carry (_ts is the full reordered token array).
-    union = F.size("_ta") + F.size("_tb") - inter
-    jac = inter.cast("double") / union
-    return (
-        with_b.select("doc_a", "doc_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
+    side = docs.select(
+        F.col(id_col), F.col("_ts").alias("toks"), F.col("_n").alias("n")
+    ).hint("shuffle_hash")
+    return _verify_jaccard(
+        _prefix_candidates(docs, None, threshold, id_col),
+        side,
+        side,
+        threshold,
+        id_col,
     )
 
 
@@ -382,18 +359,12 @@ def near_dedup_kept(
     block_col: str = "lang",
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_block_rows: int | None = None,
 ) -> DataFrame:
     """Greedy lowest-id-wins near-dedup: drop any doc that has a near-dup
     with a smaller id (single-link, one hop — matches the usual
     drop-later-duplicates pipeline semantics)."""
     pairs = jaccard_pairs(
-        df,
-        threshold,
-        block_col=block_col,
-        id_col=id_col,
-        text_col=text_col,
-        max_block_rows=max_block_rows,
+        df, threshold, block_col=block_col, id_col=id_col, text_col=text_col
     )
     # shuffle_hash: the loser set is pair-derived (explode lineage — no
     # usable static estimate) and at corpus scale can be billions of ids;
@@ -675,8 +646,9 @@ def _verify_jaccard(
 ) -> DataFrame:
     """Exact-Jaccard verification of (doc_a, doc_b) candidates → (doc_a,
     doc_b, jaccard ≥ t); doc_a's tokens come from `a_side`, doc_b's from
-    `b_side`, both (id, toks, n) frames as build_signature_table spells
-    them.  The one grouped verifier of this module.
+    `b_side`, both (id, toks, n) frames — build_signature_table's
+    columns, or a `_prefix_frame`'s `_ts`/`_n` renamed.  The one grouped
+    verifier of this module, shared by the LSH and the exact families.
 
     Grouped two-level attach (round 13 — VERDICT r12 item 2, guide
     §2.3/§2.4).  Candidates need NOT be pre-deduplicated: ONE
@@ -1305,7 +1277,6 @@ def incremental_kept(
     block_col: str = "lang",
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_block_rows: int | None = None,
 ) -> DataFrame:
     """Incremental ingestion dedup (exact, blocked): which NEW docs survive
     against an existing corpus plus earlier docs in their own batch?
@@ -1313,10 +1284,11 @@ def incremental_kept(
     A new doc is dropped when it has a j≥threshold match to ANY corpus doc
     (corpus always wins — it is already ingested) or to a lower-id doc in
     the same batch (greedy min-id-wins, same rule as near_dedup_kept).
-    Candidates come from the same exact prefix-filter join as jaccard_pairs
-    (bipartite: any doc × batch doc sharing a rare prefix token within a
-    block), so nothing here is quadratic in block size; `max_block_rows`
-    remains as an optional caller-declared contract.  The LSH spelling
+    The same three pieces as jaccard_pairs: one `_prefix_frame` over
+    corpus ∪ batch (one token order for both sides), `_prefix_candidates`
+    of the batch against the corpus, and `_verify_jaccard`; the losers are
+    the verified doc_b ids.  With an empty corpus this is near_dedup_kept
+    (pinned in tests/test_dedup.py).  The LSH spelling
     (lsh_incremental_kept / incremental_kept_against) is the
     persisted-signature 100 TB path and is subset-tested against this one.
     """
@@ -1330,65 +1302,20 @@ def incremental_kept(
         )
 
     base = _toks(corpus_df, 1).unionByName(_toks(new_df, 0))
-    docs = _prefix_docs(base, threshold, id_col)
-    _check_block_bound(docs, "_block", max_block_rows, "incremental_kept")
-    # Scalars-only candidate join + attach-arrays-after-dedup — the same
-    # shuffle-volume fix as jaccard_pairs (see there), including the
-    # PPJoin positional filter (round 12; proof at jaccard_pairs).
-    a = docs.select(
-        F.col(id_col).alias("_doc_a"),
-        "_block",
-        "_is_corpus",
-        F.col("_n").alias("_na"),
-        F.posexplode("_prefix").alias("_pia", "_ptok"),
+    docs = _persist(_prefix_frame(base, threshold, id_col))
+    docs.count()  # eager: feeds both candidate sides and the verify arrays
+    candidates = _prefix_candidates(
+        docs.filter(F.col("_is_corpus") == 0),
+        docs.filter(F.col("_is_corpus") == 1),
+        threshold,
+        id_col,
     )
-    b = docs.filter(F.col("_is_corpus") == 0).select(
-        F.col(id_col).alias("_doc_b"),
-        "_block",
-        F.col("_n").alias("_nb"),
-        F.posexplode("_prefix").alias("_pib", "_ptok"),
+    side = docs.select(
+        F.col(id_col), F.col("_ts").alias("toks"), F.col("_n").alias("n")
     )
-    size_ok = (F.col("_na") >= F.lit(threshold) * F.col("_nb")) & (
-        F.col("_nb") >= F.lit(threshold) * F.col("_na")
-    )
-    alpha = F.ceil(
-        F.lit(threshold / (1.0 + threshold)) * (F.col("_na") + F.col("_nb"))
-        - F.lit(1e-9)
-    )
-    pos_ok = (
-        F.least(F.col("_na") - F.col("_pia"), F.col("_nb") - F.col("_pib"))
-        >= alpha
-    )
-    precedence = (F.col("_is_corpus") == 1) | (F.col("_doc_a") < F.col("_doc_b"))
-    # Grouped two-level attach (round 13 — same rewrite as _verify_jaccard,
-    # see there): collect_set absorbs the pair dedup into the groupBy
-    # exchange, `_ta` attaches once per distinct _doc_a, only the exploded
-    # per-pair row crosses the _doc_b exchange.
-    grp = (
-        a.join(b, on=["_ptok", "_block"])
-        .filter(
-            precedence
-            & (F.col("_doc_a") != F.col("_doc_b"))
-            & size_ok
-            & pos_ok
-        )
-        .groupBy("_doc_a")
-        .agg(F.collect_set("_doc_b").alias("_bs"))
-    )
-    pair_rows = grp.join(
-        docs.select(F.col(id_col).alias("_doc_a"), F.col("_ts").alias("_ta")),
-        on="_doc_a",
-    ).select("_doc_a", "_ta", F.explode("_bs").alias("_doc_b"))
-    inter = F.size(F.array_intersect("_ta", "_tb"))
-    union = F.size("_ta") + F.size("_tb") - inter
-    jac = inter.cast("double") / union
     losers = (
-        pair_rows.join(
-            docs.select(F.col(id_col).alias("_doc_b"), F.col("_ts").alias("_tb")),
-            on="_doc_b",
-        )
-        .filter(jac >= threshold)
-        .select(F.col("_doc_b").alias(id_col))
+        _verify_jaccard(candidates, side, side, threshold, id_col)
+        .select(F.col("doc_b").alias(id_col))
         .distinct()
     )
     return new_df.join(losers, on=id_col, how="left_anti").select(id_col)

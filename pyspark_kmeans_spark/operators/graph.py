@@ -53,7 +53,13 @@ from pyspark_kmeans_spark.functions.warehouse_memo import (
     ensure_artifact,
     fold_artifact,
 )
-from pyspark_kmeans_spark.operators.dedup import jaccard_pairs
+from pyspark_kmeans_spark.operators.dedup import (
+    _prefix_candidates,
+    _prefix_frame,
+    _verify_jaccard,
+    jaccard_pairs,
+    tokens_col,
+)
 from pyspark_kmeans_spark.sources.tables import load_table
 
 PAGERANK_DAMPING = 0.85
@@ -134,49 +140,6 @@ def _graph_state_paths(
     )
 
 
-def _ordered_prefix(
-    base: DataFrame, freq: DataFrame, threshold: float, id_col: str = "doc_id"
-) -> DataFrame:
-    """(id, _block, _n, _ts, _prefix) under the PERSISTED (df, token)
-    total order — the one helper both the corpus state build and every
-    batch fold go through (single-sourced: build and append cannot order
-    differently, the round-8 routing lesson).
-
-    `base` carries (id_col, _block, _toks).  Tokens the persisted freq
-    table has never seen join to df=0 — they sort before every corpus
-    token, which keeps the order a fixed FUNCTION of the persisted table:
-    the prefix lemma needs both sides of a candidate pair sorted by the
-    same total order, not an up-to-date frequency estimate (frequencies
-    affect prefix SIZE — pruning power — never exactness), so the freq
-    artifact is deliberately immutable across folds."""
-    ex = base.select(F.col(id_col), "_block", F.explode("_toks").alias("_tok"))
-    ordered = (
-        ex.join(freq, on="_tok", how="left")
-        .select(
-            id_col,
-            "_block",
-            F.coalesce(F.col("_df"), F.lit(0).cast("long")).alias("_df"),
-            "_tok",
-        )
-        .groupBy(id_col, "_block")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("_df"), F.col("_tok")))
-            ).alias("_ord")
-        )
-    )
-    n = F.size("_ord")
-    prefix_len = n - F.ceil(F.lit(threshold) * n - F.lit(1e-9)) + 1
-    ts = F.transform("_ord", lambda s: s["_tok"])
-    return ordered.select(
-        F.col(id_col),
-        "_block",
-        n.alias("_n"),
-        ts.alias("_ts"),
-        F.slice(ts, F.lit(1), prefix_len).alias("_prefix"),
-    )
-
-
 def ensure_graph_state(
     spark: SparkSession,
     sf_dir: str,
@@ -187,11 +150,11 @@ def ensure_graph_state(
     pair-table maintenance (VERDICT r8 missing #4): the corpus side of a
     batch fold, precomputed once — the `ensure_signature_table` contract
     applied to the EXACT mining path.  State rows are the prefix-filter
-    frame (`_ordered_prefix` over the corpus); freq is the (token, df)
-    table that fixes the shared total order for every later fold.  Built
-    lazily on first fold; the analytics queries never read them."""
-    from pyspark_kmeans_spark.operators.dedup import tokens_col
-
+    frame (`dedup._prefix_frame` over the corpus, ordered by the freq
+    table); freq is the (token, df) table that fixes the shared total
+    order for every later fold, deliberately immutable across folds (stale
+    frequencies cost pruning power, never edges — see `_prefix_frame`).
+    Built lazily on first fold; the analytics queries never read them."""
     _, state_path, freq_path = _graph_state_paths(sf_dir, threshold)
 
     # The state's commit marker covers both: freq is written first, so a
@@ -207,7 +170,7 @@ def ensure_graph_state(
             F.count(F.lit(1)).alias("_df")
         ).write.mode("overwrite").parquet(freq_path)
         freq = spark.read.parquet(freq_path)
-        _ordered_prefix(base, freq, threshold).write.mode(
+        _prefix_frame(base, threshold, "doc_id", freq=freq).write.mode(
             "overwrite"
         ).parquet(path)
 
@@ -228,54 +191,25 @@ def mine_incremental_edges(
     """New edges contributed by a prepared batch prefix frame against the
     persisted state: (batch×state ∪ batch×batch) exact-Jaccard pairs ≥
     threshold in sorted (doc_a < doc_b) orientation.  Both inputs are
-    `_ordered_prefix`-shaped frames under the SAME persisted total order;
+    `dedup._prefix_frame` frames under the SAME persisted total order;
     `bpref` should be persisted by the caller (it feeds both candidate
-    sides and the verify arrays).  Factored out of `append_pairs_table`
-    so the plan-shape golden can pin the batch-adjacent pruning
-    (tests/test_graph.py) without running the artifact writes.
+    sides and the verify arrays).  Candidates come from
+    `dedup._prefix_candidates(bpref, state)` and are verified by
+    `dedup._verify_jaccard` — the join jaccard_pairs and incremental_kept
+    run.  Factored out of `append_pairs_table` so the plan-shape golden
+    can pin the batch-adjacent pruning (tests/test_graph.py) without
+    running the artifact writes.
 
     Plan contract (the 100 TB shape): the state's prefix explode is
     semi-joined MAP-SIDE against the broadcast batch prefix-key set
     before any shuffle, and verify token arrays ship only for the
     candidate-adjacent id slice — the corpus contributes one map-side
     scan, never a corpus-scale exchange."""
-    allp = state.unionByName(bpref)
-
-    # Batch-adjacency prune: a state doc sharing NO (prefix token, block)
-    # with the batch can never form a candidate, so the corpus-scale
-    # prefix explode is filtered map-side before the shuffle.  The key
-    # set is ≤ |batch| × prefix_len rows — the bounded-daily-batch
-    # contract justifies the broadcast (incremental_kept_against's
-    # batch_buckets argument).
-    batch_keys = (
-        bpref.select(F.explode("_prefix").alias("_ptok"), "_block").distinct()
-    )
-    a = (
-        allp.select(
-            F.col("doc_id").alias("_ida"),
-            "_block",
-            F.col("_n").alias("_na"),
-            F.explode("_prefix").alias("_ptok"),
-        )
-        .join(F.broadcast(batch_keys), on=["_ptok", "_block"], how="left_semi")
-    )
-    b = bpref.select(
-        F.col("doc_id").alias("_idb"),
-        "_block",
-        F.col("_n").alias("_nb"),
-        F.explode("_prefix").alias("_ptok"),
-    )
-    # size prune is symmetric in (na, nb), so it runs before the sorted
-    # re-orientation below.
-    size_ok = (F.col("_na") >= F.lit(threshold) * F.col("_nb")) & (
-        F.col("_nb") >= F.lit(threshold) * F.col("_na")
-    )
     candidates = registered_persist(
-        a.join(b.hint("shuffle_hash"), on=["_ptok", "_block"])
-        .filter((F.col("_ida") != F.col("_idb")) & size_ok)
+        _prefix_candidates(bpref, state, threshold, "doc_id")
         .select(
-            F.least("_ida", "_idb").alias("doc_a"),
-            F.greatest("_ida", "_idb").alias("doc_b"),
+            F.least("doc_a", "doc_b").alias("doc_a"),
+            F.greatest("doc_a", "doc_b").alias("doc_b"),
         )
         .dropDuplicates(["doc_a", "doc_b"])
     )
@@ -286,29 +220,14 @@ def mine_incremental_edges(
     cand_ids = candidates.select(F.col("doc_a").alias("doc_id")).unionByName(
         candidates.select(F.col("doc_b").alias("doc_id"))
     ).distinct()
-    uni = allp.select("doc_id", "_ts", "_n").join(
-        F.broadcast(cand_ids), on="doc_id", how="left_semi"
+    side = (
+        state.unionByName(bpref)
+        .select("doc_id", F.col("_ts").alias("toks"), F.col("_n").alias("n"))
+        .join(F.broadcast(cand_ids), on="doc_id", how="left_semi")
+        .hint("shuffle_hash")
     )
-    inter = F.size(F.array_intersect("_ta", "_tb"))
-    union = F.col("_na2") + F.col("_nb2") - inter
     return (
-        candidates.join(
-            uni.select(
-                F.col("doc_id").alias("doc_a"),
-                F.col("_ts").alias("_ta"),
-                F.col("_n").alias("_na2"),
-            ).hint("shuffle_hash"),
-            on="doc_a",
-        )
-        .join(
-            uni.select(
-                F.col("doc_id").alias("doc_b"),
-                F.col("_ts").alias("_tb"),
-                F.col("_n").alias("_nb2"),
-            ).hint("shuffle_hash"),
-            on="doc_b",
-        )
-        .filter(inter.cast("double") / union >= threshold)
+        _verify_jaccard(candidates, side, side, threshold, "doc_id")
         .select("doc_a", "doc_b")
         # Collapse verify-join row duplication from a retry-duplicated
         # state copy (see append_pairs_table's commit-order paragraph).
@@ -332,11 +251,11 @@ def append_pairs_table(
     `incremental_kept_against` shape applied to edge MAINTENANCE).
 
     Exactness: candidates come from the prefix lemma under the SHARED
-    persisted (df, token) total order (`_ordered_prefix` — corpus state
-    rows and batch rows are ordered by the same function, which is all
-    the lemma requires; see its docstring on why stale frequencies cost
-    pruning power, never edges), then every candidate is verified with a
-    full array_intersect — so artifact-after-fold equals a full re-mine
+    persisted (df, token) total order (`dedup._prefix_frame` with the
+    persisted freq table — corpus state rows and batch rows are ordered
+    by the same function, which is all the lemma requires; see its
+    docstring on why stale frequencies cost pruning power, never edges),
+    then every candidate is verified with a full array_intersect — so artifact-after-fold equals a full re-mine
     on the union corpus row-for-row (`pairs_update_check` driver-hashes
     exactly that).  Batch ids must be disjoint from the corpus ids (the
     ingest contract all incremental families share).
@@ -344,11 +263,12 @@ def append_pairs_table(
     Plan: only the BATCH is tokenized (one freq join, batch-linear).  The
     corpus side never enters a shuffle at corpus scale: the state's
     prefix explode is pruned MAP-SIDE against the broadcast batch
-    prefix-key set before the candidate join (the batch-adjacency prune
-    `incremental_kept_against` applies to band entries — a bucket that
-    shares no batch prefix token can never produce a candidate), and the
-    verify joins read token arrays only for the candidate-adjacent slice
-    (broadcast semi-join on the bounded candidate id set).  The residual
+    prefix-key set inside `dedup._prefix_candidates` (the batch-adjacency
+    prune `incremental_kept_against` applies to band entries — a bucket
+    that shares no batch prefix token can never produce a candidate),
+    which also runs the size prune and the PPJoin positional filter, and
+    the verify joins read token arrays only for the candidate-adjacent
+    slice (broadcast semi-join on the bounded candidate id set).  The residual
     corpus-sized work is one map-side parquet SCAN of the state —
     measured exponent 0.17 vs 0.71 for the per-batch re-mine
     (BASELINE.md round 9).  shuffle_hash hints on every explode-derived
@@ -366,8 +286,6 @@ def append_pairs_table(
     STATE (inflating later folds' candidate work, never their output);
     an operator recovering from repeated failures should restore the
     state artifact from its last good copy."""
-    from pyspark_kmeans_spark.operators.dedup import tokens_col
-
     pairs_path, state_path, _ = _graph_state_paths(sf_dir, threshold)
     # First touch builds both the pair table and the state from the
     # current corpus (the ensure_* contract prices it as ingest cost).
@@ -379,12 +297,12 @@ def append_pairs_table(
         F.col("lang").alias("_block"),
         tokens_col("text").alias("_toks"),
     )
-    bpref = registered_persist(_ordered_prefix(base, freq, threshold))
+    bpref = registered_persist(
+        _prefix_frame(base, threshold, "doc_id", freq=freq)
+    )
     bpref.count()  # eager: feeds state append, both candidate sides, verify
     new_edges = mine_incremental_edges(state, bpref, threshold=threshold)
-    fold_artifact(
-        spark, state_path, bpref.select("doc_id", "_block", "_n", "_ts", "_prefix")
-    )
+    fold_artifact(spark, state_path, bpref)
     fold_artifact(spark, pairs_path, new_edges)
     return spark.read.parquet(pairs_path)
 

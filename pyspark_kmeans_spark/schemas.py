@@ -1,16 +1,15 @@
-"""Explicit schemas for every input the engine reads.
+"""Explicit schemas for the CSV inputs, and the parquet table registry.
 
 The reference hand-declares one schema and infers four
-(/root/reference/utils/kmeans_utils.py:19-26 vs :34,40,44,46).  Schema
-inference costs an extra full pass over the input — unacceptable at 100 TB —
-and is nondeterministic on dirty data, so this engine declares everything.
+(utils/kmeans_utils.py:19-26 vs :34,40,44,46).  Schema inference costs an
+extra full pass over the input — unacceptable at 100 TB — and is
+nondeterministic on dirty data, so this engine declares every CSV schema.
 
-Two schema families:
+Two families:
  A. The five reference-pipeline CSV inputs (reconstructed from the column
-    references in /root/reference/utils/kmeans_utils.py — see FIXTURES.md §A).
- B. The driver's synthetic TPC-H-ish parquet tables (TESTDATA.md) — parquet
-    carries its own schema; these StructTypes document the contract and let
-    tests assert the footer matches.
+    references in utils/kmeans_utils.py — see FIXTURES.md §A).
+ B. The names of the synthetic TPC-H-ish parquet tables (TESTDATA.md) —
+    parquet carries its own schema, so none is declared here.
 """
 
 from __future__ import annotations
@@ -96,97 +95,3 @@ TESTDATA_TABLES = (
 # Dimension tables small enough to broadcast at ANY scale factor (their row
 # counts are fixed or near-fixed: 5 regions, 25 nations).
 ALWAYS_BROADCAST_TABLES = frozenset({"region", "nation"})
-
-TESTDATA_SCHEMAS: dict[str, T.StructType] = {
-    "region": T.StructType(
-        [
-            T.StructField("r_regionkey", T.IntegerType(), True),
-            T.StructField("r_name", T.StringType(), True),
-        ]
-    ),
-    "nation": T.StructType(
-        [
-            T.StructField("n_nationkey", T.IntegerType(), True),
-            T.StructField("n_name", T.StringType(), True),
-            T.StructField("n_regionkey", T.IntegerType(), True),
-        ]
-    ),
-    "customer": T.StructType(
-        [
-            T.StructField("c_custkey", T.LongType(), True),
-            T.StructField("c_name", T.StringType(), True),
-            T.StructField("c_nationkey", T.IntegerType(), True),
-            T.StructField("c_acctbal", T.DoubleType(), True),
-            T.StructField("c_mktsegment", T.StringType(), True),
-        ]
-    ),
-    "supplier": T.StructType(
-        [
-            T.StructField("s_suppkey", T.LongType(), True),
-            T.StructField("s_name", T.StringType(), True),
-            T.StructField("s_nationkey", T.IntegerType(), True),
-            T.StructField("s_acctbal", T.DoubleType(), True),
-        ]
-    ),
-    "part": T.StructType(
-        [
-            T.StructField("p_partkey", T.LongType(), True),
-            T.StructField("p_name", T.StringType(), True),
-            T.StructField("p_brand", T.StringType(), True),
-            T.StructField("p_type", T.StringType(), True),
-            T.StructField("p_size", T.IntegerType(), True),
-            T.StructField("p_retailprice", T.DoubleType(), True),
-        ]
-    ),
-    "orders": T.StructType(
-        [
-            T.StructField("o_orderkey", T.LongType(), True),
-            T.StructField("o_custkey", T.LongType(), True),
-            T.StructField("o_orderstatus", T.StringType(), True),
-            T.StructField("o_totalprice", T.DoubleType(), True),
-            T.StructField("o_orderdate", T.TimestampType(), True),
-            T.StructField("o_orderpriority", T.StringType(), True),
-        ]
-    ),
-    "lineitem": T.StructType(
-        [
-            T.StructField("l_orderkey", T.LongType(), True),
-            T.StructField("l_partkey", T.LongType(), True),
-            T.StructField("l_suppkey", T.LongType(), True),
-            T.StructField("l_linenumber", T.IntegerType(), True),
-            T.StructField("l_quantity", T.DoubleType(), True),
-            T.StructField("l_extendedprice", T.DoubleType(), True),
-            T.StructField("l_discount", T.DoubleType(), True),
-            T.StructField("l_tax", T.DoubleType(), True),
-            T.StructField("l_returnflag", T.StringType(), True),
-            T.StructField("l_linestatus", T.StringType(), True),
-            T.StructField("l_shipdate", T.TimestampType(), True),
-        ]
-    ),
-    "events": T.StructType(
-        [
-            T.StructField("event_id", T.LongType(), True),
-            T.StructField("ts", T.TimestampType(), True),
-            T.StructField("user_id", T.LongType(), True),
-            T.StructField("event_type", T.StringType(), True),
-            T.StructField("value", T.DoubleType(), True),
-            T.StructField("props", T.StringType(), True),
-        ]
-    ),
-    "documents": T.StructType(
-        [
-            T.StructField("doc_id", T.LongType(), True),
-            T.StructField("text", T.StringType(), True),
-            T.StructField("lang", T.StringType(), True),
-            T.StructField("source", T.StringType(), True),
-            T.StructField("n_chars", T.LongType(), True),
-        ]
-    ),
-    "embeddings": T.StructType(
-        [
-            T.StructField("vec_id", T.LongType(), True),
-            T.StructField("embedding", T.ArrayType(T.FloatType()), True),
-            T.StructField("label", T.IntegerType(), True),
-        ]
-    ),
-}

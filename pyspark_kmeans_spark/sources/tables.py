@@ -3,10 +3,10 @@
 Covers SURVEY.md §2.1 S1/S2 Spark-first:
  - S1 (explicit-schema CSV scan, utils/kmeans_utils.py:28) → ``read_csv``
    with a required schema.
- - S2 (inferSchema CSV scans ×4, utils/kmeans_utils.py:34-46) → deliberately
-   NOT reproduced as default: inference triggers an eager extra pass over the
-   input (SURVEY.md §3) which is a non-starter at 100 TB.  ``read_csv``
-   accepts ``infer=True`` as a dev-only escape hatch.
+ - S2 (inferSchema CSV scans ×4, utils/kmeans_utils.py:34-46) → NOT
+   reproduced: inference triggers an eager extra pass over the input
+   (SURVEY.md §3), a non-starter at 100 TB.  All five CSV inputs read
+   through ``read_csv`` with the declared schemas in ``schemas.py``.
  - Parquet as the primary columnar source for the driver testdata, with
    column pruning and predicate pushdown handled by Catalyst.
 """
@@ -118,24 +118,13 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TESTDATA_TABLES}
 
 
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema=None,
-    *,
-    header: bool = True,
-    timestamp_format: str = "yyyy-MM-dd HH:mm:ss",
-    infer: bool = False,
-) -> DataFrame:
-    """Explicit-schema CSV source (S1).  ``infer=True`` is a dev-only mode
-    reproducing the reference's S2 behavior (utils/kmeans_utils.py:34)."""
-    if schema is None and not infer:
-        raise ValueError("pass an explicit schema, or infer=True (dev only)")
-    reader = spark.read.format("csv").option("header", header).option(
-        "timestampFormat", timestamp_format
+def read_csv(spark: SparkSession, path: str, schema) -> DataFrame:
+    """Explicit-schema CSV source (S1): header row, `yyyy-MM-dd HH:mm:ss`
+    timestamps, no inference pass."""
+    return (
+        spark.read.format("csv")
+        .option("header", True)
+        .option("timestampFormat", "yyyy-MM-dd HH:mm:ss")
+        .schema(schema)
+        .load(path)
     )
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", True)
-    return reader.load(path)

@@ -197,30 +197,22 @@ def dedup_ingest_batch(
     state_dir: str,
     kept_dir: str,
     threshold: float = 0.9,
-    num_hashes: int = 64,
-    bands: int = 8,
-    seed: int = 7,
 ) -> None:
     """One micro-batch of the ingestion loop: dedup `batch_df` against the
     committed signature state, write kept docs' ids and signatures to this
-    batch's own (overwrite-on-replay) directories."""
+    batch's own (overwrite-on-replay) directories.  Signing and banding use
+    the module defaults of dedup (`LSH_*`), so state written here matches
+    every other reader of a signature table."""
     spark = batch_df.sparkSession
     sigs = read_signature_state(spark, state_dir, before_batch=batch_id)
-    kept_ids = incremental_kept_against(
-        sigs,
-        batch_df,
-        threshold=threshold,
-        num_hashes=num_hashes,
-        bands=bands,
-        seed=seed,
-    )
+    kept_ids = incremental_kept_against(sigs, batch_df, threshold=threshold)
     kept_docs = batch_df.join(kept_ids, on="doc_id", how="left_semi")
     kept_docs.select("doc_id").write.mode("overwrite").parquet(
         f"{kept_dir}/batch_id={batch_id}"
     )
-    build_signature_table(
-        kept_docs, num_hashes=num_hashes, seed=seed
-    ).write.mode("overwrite").parquet(f"{state_dir}/batch_id={batch_id}")
+    build_signature_table(kept_docs).write.mode("overwrite").parquet(
+        f"{state_dir}/batch_id={batch_id}"
+    )
     # incremental_kept_against persists the batch signature frame in the
     # session registry; a long-running stream must not accumulate one
     # cached frame per micro-batch.

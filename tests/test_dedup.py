@@ -275,28 +275,6 @@ def test_lsh_bucket_cap_bounds_degenerate_buckets(spark, caplog):
     dedup.release_persisted()
 
 
-def test_jaccard_block_bound_raises_loudly(spark):
-    """VERDICT r2 item 3: the O(block²) exact family must refuse oversized
-    blocks at call time, not launch a silent quadratic job."""
-    from pyspark_kmeans_spark.operators import dedup
-    from pyspark_kmeans_spark.operators.dedup import incremental_kept
-
-    rows = [(i, f"doc number {i} words {i % 7}", "en") for i in range(30)]
-    df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    with pytest.raises(ValueError, match="max_block_rows"):
-        jaccard_pairs(df, 0.9, max_block_rows=10)
-    new = df.filter("doc_id % 5 = 0")
-    corpus = df.filter("doc_id % 5 != 0")
-    with pytest.raises(ValueError, match="max_block_rows"):
-        incremental_kept(new, corpus, max_block_rows=10)
-    # The sf0.001 lang blocks are far below the default bound → no raise.
-    from pyspark_kmeans_spark.sources.tables import load_table
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    assert jaccard_pairs(docs, 0.9).count() >= 0
-    dedup.release_persisted()
-
-
 def test_incremental_kept_against_matches_self_contained(spark, tmp_path):
     """VERDICT r2 item 4: the persisted-signature production form (sign only
     the batch against a stored corpus signature table — parquet round-trip
@@ -588,6 +566,40 @@ def test_batch_kept_is_incremental_kept_with_no_corpus(spark, sf_dir):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     assert both(df, max_bucket=10) == [{0, 100, 102}] * 2
+    dedup.release_persisted()
+
+
+def test_exact_batch_kept_is_incremental_kept_with_no_corpus(spark, sf_dir):
+    """The exact twin of the LSH equality above: near_dedup_kept and
+    incremental_kept over an empty corpus run the same prefix frame,
+    candidate join and verifier, so they keep the same docs, on the sf0.01
+    corpus and on a planted chain a–b–c where only adjacent pairs match."""
+    import os
+
+    from pyspark_kmeans_spark.operators import dedup
+    from pyspark_kmeans_spark.sources.tables import load_table
+
+    def both(docs):
+        return [
+            {r.doc_id for r in kept.collect()}
+            for kept in (
+                dedup.near_dedup_kept(docs),
+                dedup.incremental_kept(docs, docs.limit(0)),
+            )
+        ]
+
+    sf001 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    batch, incremental = both(load_table(spark, sf001, "documents"))
+    assert batch == incremental and batch
+    words = "alpha beta gamma delta epsilon zeta eta theta iota kappa".split()
+    chain = [
+        (1, " ".join(words), "en"),
+        (2, " ".join(words + ["lambda"]), "en"),  # j(1,2) = 10/11
+        (3, " ".join(words + ["lambda", "mu"]), "en"),  # j(2,3) = 11/12
+        (4, "totally unrelated content words appear exactly once here", "en"),
+    ]  # j(1,3) = 10/12 < 0.9: a chain, not a clique
+    df = spark.createDataFrame(chain, "doc_id long, text string, lang string")
+    assert both(df) == [{1, 4}] * 2
     dedup.release_persisted()
 
 

@@ -184,11 +184,8 @@ def test_mine_incremental_edges_plan_is_batch_adjacent(spark):
     map-side scan, never a corpus-scale exchange.  No cartesian anywhere."""
     from pyspark.sql import functions as F2
 
-    from pyspark_kmeans_spark.operators.dedup import tokens_col
-    from pyspark_kmeans_spark.operators.graph import (
-        _ordered_prefix,
-        mine_incremental_edges,
-    )
+    from pyspark_kmeans_spark.operators.dedup import _prefix_frame, tokens_col
+    from pyspark_kmeans_spark.operators.graph import mine_incremental_edges
 
     docs = spark.createDataFrame(
         [(1, "a b c", "en"), (2, "a b d", "en"), (10, "a b c", "en")],
@@ -200,8 +197,8 @@ def test_mine_incremental_edges_plan_is_batch_adjacent(spark):
     freq = base.select(F2.explode("_toks").alias("_tok")).groupBy("_tok").agg(
         F2.count(F2.lit(1)).alias("_df")
     )
-    state = _ordered_prefix(base.filter("doc_id < 10"), freq, 0.9)
-    bpref = _ordered_prefix(base.filter("doc_id >= 10"), freq, 0.9)
+    state = _prefix_frame(base.filter("doc_id < 10"), 0.9, "doc_id", freq=freq)
+    bpref = _prefix_frame(base.filter("doc_id >= 10"), 0.9, "doc_id", freq=freq)
     edges = mine_incremental_edges(state, bpref, threshold=0.9)
     plan = edges._jdf.queryExecution().executedPlan().toString()
     assert plan.count("LeftSemi") >= 2, plan

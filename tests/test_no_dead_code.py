@@ -1,6 +1,6 @@
-"""Source-scan guard: every top-level function and class in the package
-has a caller.  A definition nothing references is a second copy or a
-leftover, and stays pickable by mistake."""
+"""Source-scan guard: every top-level function, class and assigned name
+in the package has a reader.  A definition nothing references is a
+second copy or a leftover, and stays pickable by mistake."""
 
 from __future__ import annotations
 
@@ -44,13 +44,14 @@ def _docstring_nodes(tree: ast.AST) -> set[int]:
 
 
 def _references(tree: ast.AST) -> tuple[set[str], list[str]]:
-    """(identifiers used as names, attributes or imports; non-docstring
-    string constants — registry and span names like "mod.fn")."""
+    """(identifiers read as names, attributes or imports; non-docstring
+    string constants — registry and span names like "mod.fn").  An
+    assignment target is a definition, not a reference."""
     names: set[str] = set()
     strings: list[str] = []
     docs = _docstring_nodes(tree)
     for n in ast.walk(tree):
-        if isinstance(n, ast.Name):
+        if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store):
             names.add(n.id)
         elif isinstance(n, ast.Attribute):
             names.add(n.attr)
@@ -65,6 +66,24 @@ def _references(tree: ast.AST) -> tuple[set[str], list[str]]:
     return names, strings
 
 
+def _top_level_names(tree: ast.Module) -> list[str]:
+    """Names a module defines at top level: functions, classes and the
+    targets of plain or annotated assignments (`__all__` excepted — the
+    import machinery reads it)."""
+    names = []
+    for n in tree.body:
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            names.append(n.name)
+        elif isinstance(n, (ast.Assign, ast.AnnAssign)):
+            targets = n.targets if isinstance(n, ast.Assign) else [n.target]
+            names += [
+                t.id
+                for t in targets
+                if isinstance(t, ast.Name) and t.id != "__all__"
+            ]
+    return names
+
+
 def test_every_package_definition_has_a_reference():
     defs: list[tuple[str, str]] = []
     names: set[str] = set()
@@ -74,13 +93,7 @@ def test_every_package_definition_has_a_reference():
             tree = ast.parse(f.read(), filename=path)
         rel = os.path.relpath(path, ROOT).replace(os.sep, "/")
         if rel.startswith(PKG + "/"):
-            defs += [
-                (rel, n.name)
-                for n in tree.body
-                if isinstance(
-                    n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
-                )
-            ]
+            defs += [(rel, name) for name in _top_level_names(tree)]
         file_names, file_strings = _references(tree)
         names |= file_names
         strings += file_strings
